@@ -272,10 +272,10 @@ class Pipeline:
             # chunks, embeddings and tsvectors are three INDEPENDENT
             # consumers of the cached chunk DAG: ONE batched write job
             # lands all three (storage.overwrite_multi — VERDICT r9
-            # next #3; replaces r9's 3 thread-pooled jobs and their
-            # ADVICE r9 #2 partial-failure version skew). Stats
-            # sidecars are written after so the chunks footer census
-            # reads a complete version.
+            # next #3; replaces r9's 3 thread-pooled jobs). A failed
+            # job leaves all three on their old version (the store's
+            # staged commit). Stats sidecars are written after so the
+            # chunks footer census reads a complete version.
             overwrite_multi(self._derived_entries(field, cfg, new_chunks))
             # changed-count from the written version's parquet footers —
             # the count() here was a whole extra local job (guide §1.2)
@@ -372,8 +372,9 @@ class Pipeline:
             # sibling writes): a doc-key tombstone kills every old row
             # of a touched doc; each delta re-emits the doc's CURRENT
             # rows — O(changed docs) bytes, untouched buckets hardlink
-            # through. The three tables share one tombstone history,
-            # written once driver-side and hardlinked to the siblings.
+            # through. Each table keeps its own tombstone history;
+            # equal ones (the usual case) are written once
+            # driver-side and hardlinked to the siblings.
             from postgresml_spark.collections.storage import (
                 delta_overwrite_multi,
             )

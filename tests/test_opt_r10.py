@@ -61,9 +61,10 @@ def test_delta_overwrite_null_batch_key(spark, tmp_path):
 
 
 def test_delta_overwrite_dataframe_keys_over_existing_delta(spark, tmp_path):
-    """ADVICE r9 #1: replaced_keys as a DataFrame (the annotated type)
-    over a version that already carries a _delta must not raise
-    UnboundLocalError and must compact the old delta correctly."""
+    """ADVICE r9 #1: a second delta write over a version that already
+    carries a _delta must compact the old delta correctly
+    (replaced_keys is a driver-side key list; a DataFrame raises
+    TypeError)."""
     from postgresml_spark.collections.storage import BucketedVersionedTable
 
     tbl = BucketedVersionedTable(
@@ -76,11 +77,10 @@ def test_delta_overwrite_dataframe_keys_over_existing_delta(spark, tmp_path):
     tbl.delta_overwrite(
         spark.createDataFrame([(10, "k1")], "id long, k string"), ["k1"]
     )
-    # second delta via the DataFrame path (replaces k1 again + k2)
-    keys_df = spark.createDataFrame([("k1",), ("k2",)], "k string")
+    # second delta (replaces k1 again + k2)
     tbl.delta_overwrite(
         spark.createDataFrame([(11, "k1"), (12, "k2")], "id long, k string"),
-        keys_df,
+        ["k1", "k2"],
     )
     rows = {r["id"]: r["k"] for r in tbl.read().collect()}
     assert rows == {0: "k0", 3: "k3", 4: "k4", 5: "k5", 11: "k1", 12: "k2"}
@@ -275,7 +275,9 @@ def test_filter_keys_not_in_matches_isin_and_escapes(spark):
     """storage._filter_keys_not_in builds the key set as ONE parsed
     SQL IN (py4j round-trip per key removed — OPTIMIZATION_r10.md);
     it must match the isin form exactly, keep NULL keys (left_anti
-    parity), and survive keys containing quotes."""
+    parity), and survive keys containing quotes, backslashes (escaped
+    before the quote: `a\\b` was silently not filtered and a trailing
+    backslash raised ParseException) and newlines."""
     from postgresml_spark.collections.storage import _filter_keys_not_in
 
     rows = [("a",), ("b",), (None,), ("o'brien",), ("z",)]
@@ -292,6 +294,19 @@ def test_filter_keys_not_in_matches_isin_and_escapes(spark):
         ).collect()
     )
     assert got == want == ["<null>", "a", "z"]
+    # backslash, trailing backslash, newline and quote keys, each next
+    # to the key a broken escape would turn it into
+    odd = ["a\\b", "tail\\", "line\nbreak", "it's", "\\'mix\\''"]
+    df_odd = spark.createDataFrame(
+        [(k,) for k in odd + ["ab", "tail", "line", "keep"]], "k string"
+    )
+    got_odd = sorted(
+        r["k"] for r in _filter_keys_not_in(df_odd, F.col("k"), odd).collect()
+    )
+    want_odd = sorted(
+        r["k"] for r in df_odd.filter(~F.col("k").isin(odd)).collect()
+    )
+    assert got_odd == want_odd == ["ab", "keep", "line", "tail"]
     # derived-key expression (the embeddings/tsvectors tables key on
     # an expression, not a named column)
     got2 = sorted(

@@ -322,14 +322,6 @@ class Pipeline:
         # inference is only safe because every selected column exists
         # in every file. A mixed linked+plain read is regression-tested
         # in tests/test_collections.py (mixed change-log schema test).
-        # explicit schema (the log's column contract): skips the
-        # per-sync schema-inference Spark job; the hardlinked initial
-        # partitions' extra `version` column is simply not selected
-        pend = spark.read.schema(
-            "id long, source_uuid string, document string, seq int"
-        ).parquet(self.collection._changes_path).filter(
-            F.col("seq") > F.lit(int(wm))
-        )
         # ZERO-job detection (guide §1.2): the pending log partitions
         # are known directories (seq > wm) of O(changed) rows the
         # driver just wrote — footer row counts decide the >100k
@@ -341,7 +333,8 @@ class Pipeline:
         # buckets here would be dead work (ADVICE r7). Column
         # contract (ADVICE r8 #4): only (id, document) are selected,
         # present in every log file, linked or plain.
-        pend_ids, pend_live = self._pend_census(wm, cap=100_000)
+        pend_dirs = self._pend_dirs(wm)
+        pend_ids, pend_live = self._pend_census(pend_dirs, cap=100_000)
         if pend_ids is None:  # over the cap: rebuild, payloads unread
             self._sync_full(field, cfg, self.collection.documents.read(), out)
             self._set_watermark(field, docs_version)
@@ -353,6 +346,15 @@ class Pipeline:
             self._set_watermark(field, docs_version)
             return
         touched_keys = [str(int(i)) for i in pend_ids]
+        # only the pending seq=<v> dirs are named (the `_changes` root
+        # itself is a hidden path to Spark's file index, which WARNs
+        # "All paths were ignored"); basePath keeps `seq` a partition
+        # column. Explicit schema (the log's column contract): no
+        # schema-inference job; the hardlinked initial partitions'
+        # extra `version` column is simply not selected.
+        pend = spark.read.schema(
+            "id long, source_uuid string, document string, seq int"
+        ).option("basePath", self.collection._changes_path).parquet(*pend_dirs)
         # ids are never reused, so an id with any NULL-payload row is
         # dead; live ids carry their payload in exactly one log row
         dead = [int(i) for i, lv in zip(pend_ids, pend_live) if not lv]
@@ -399,30 +401,33 @@ class Pipeline:
         finally:
             new_chunks.unpersist()
 
-    def _pend_census(self, wm: int, cap: int = 100_000):
-        """Driver-side read of the pending change-log partitions
-        (seq > wm): returns (ids, live_flags) or (None, None) when the
-        footer row count exceeds `cap` (the full-rebuild bail — decided
-        from metadata alone, no payload bytes read). Zero Spark jobs."""
-        import pyarrow.compute as pc
-        import pyarrow.parquet as pq
-
+    def _pend_dirs(self, wm: int) -> list[str]:
+        """The pending change-log partition dirs (seq > wm), in seq order."""
         root = self.collection._changes_path
-        files: list[str] = []
-        for name in sorted(os.listdir(root)):
+        pending = []
+        for name in os.listdir(root):
             if not name.startswith("seq="):
                 continue
             try:
                 seq = int(name.split("=", 1)[1])
             except ValueError:
                 continue
-            if seq <= wm:
-                continue
-            d = os.path.join(root, name)
-            files.extend(
-                os.path.join(d, f) for f in sorted(os.listdir(d))
-                if f.endswith(".parquet") and not f.startswith((".", "_"))
-            )
+            if seq > wm:
+                pending.append((seq, os.path.join(root, name)))
+        return [d for _, d in sorted(pending)]
+
+    def _pend_census(self, pend_dirs: list[str], cap: int = 100_000):
+        """Driver-side read of the pending change-log partitions:
+        returns (ids, live_flags) or (None, None) when the footer row
+        count exceeds `cap` (the full-rebuild bail — decided from
+        metadata alone, no payload bytes read). Zero Spark jobs."""
+        import pyarrow.compute as pc
+        import pyarrow.parquet as pq
+
+        files = [
+            os.path.join(d, f) for d in pend_dirs for f in sorted(os.listdir(d))
+            if f.endswith(".parquet") and not f.startswith((".", "_"))
+        ]
         total = sum(pq.read_metadata(f).num_rows for f in files)
         if total > cap:
             return None, None

@@ -10,7 +10,6 @@ from __future__ import annotations
 import json
 
 from pyspark.sql import SparkSession
-from pyspark.sql import functions as F
 
 from postgresml_spark.ml.algorithms import TASK_METRIC
 from postgresml_spark.ml.registry import Registry
@@ -28,35 +27,32 @@ def deploy(
     proj = registry.get_project(project)
     if proj is None:
         raise ValueError(f"unknown project {project!r}")
-    models = registry.read("models").filter(F.col("project_id") == proj["id"])
-    if algorithm:
-        models = models.filter(F.col("algorithm") == algorithm)
+    models = [
+        m for m in registry.rows("models")
+        if m["project_id"] == proj["id"] and (not algorithm or m["algorithm"] == algorithm)
+    ]
 
     if strategy == "specific":
         if model_id is None:
             raise ValueError("strategy='specific' requires model_id")
         chosen = model_id
     elif strategy == "most_recent":
-        row = models.orderBy(F.col("id").desc()).head()
-        if row is None:
+        if not models:
             raise ValueError("no models to deploy")
-        chosen = row["id"]
+        chosen = max(m["id"] for m in models)
     elif strategy == "rollback":
-        deps = (
-            registry.read("deployments")
-            .filter(F.col("project_id") == proj["id"])
-            .orderBy(F.col("id").desc())
-            .head(2)
+        deps = sorted(
+            (d for d in registry.rows("deployments") if d["project_id"] == proj["id"]),
+            key=lambda d: d["id"], reverse=True,
         )
         if len(deps) < 2:
             raise ValueError("no previous deployment to roll back to")
         chosen = deps[1]["model_id"]
     elif strategy == "best_score":
         metric, higher = TASK_METRIC[proj["task"]]
-        rows = models.collect()
-        if not rows:
+        if not models:
             raise ValueError("no models to deploy")
-        scored = [(json.loads(r["metrics"]).get(metric), r["id"]) for r in rows]
+        scored = [(json.loads(m["metrics"]).get(metric), m["id"]) for m in models]
         scored = [(s, i) for s, i in scored if s is not None]
         chosen = (max if higher else min)(scored)[1]
     else:

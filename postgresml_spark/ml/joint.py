@@ -75,7 +75,7 @@ def train_joint(
     )
 
     metrics: dict[str, dict] = {}
-    model_id = registry._next_id("models")
+    model_id = registry.reserve_id("models")
     artifact = registry.artifact_dir(model_id)
     os.makedirs(artifact, exist_ok=True)
     t0 = time.time()

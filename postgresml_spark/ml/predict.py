@@ -1,10 +1,11 @@
 """pgml.predict / predict_proba / decompose over the deployed model.
 
 Reference hot path (§3.2, api.rs:439-540): shared-memory deployment map
-+ per-process model cache → here a module-level cache keyed by artifact
-path (the executor-local lazy-singleton pattern); batch inference is
-`model.transform(df)` — Spark's native batching replaces
-pgml.predict_batch (api.rs:479-485).
++ per-process model cache → here the registry's stat-validated catalog
+(one `os.stat` per call while no deploy happened) + a module-level
+model cache keyed by artifact path (the executor-local lazy-singleton
+pattern); batch inference is `model.transform(df)` — Spark's native
+batching replaces pgml.predict_batch (api.rs:479-485).
 
 Output policy (matching the reference's bindings, model.rs:337-420):
 regression → raw prediction; classification → predicted class id;
@@ -24,18 +25,6 @@ from postgresml_spark.ml.registry import Registry
 from postgresml_spark.preprocess.snapshot import PreprocessModel
 
 _MODEL_CACHE: dict[str, tuple] = {}
-# project → artifact path of the live deployment — the analog of the
-# reference's shared-memory PROJECT_ID_TO_DEPLOYED_MODEL_ID map
-# (project.rs:78-94); invalidated by Registry.add_deployment.
-_DEPLOY_CACHE: dict[tuple[str, str], str] = {}
-
-
-def invalidate_deployment_cache(warehouse: str | None = None, project: str | None = None):
-    if warehouse is None:
-        _DEPLOY_CACHE.clear()
-        return
-    for key in [k for k in _DEPLOY_CACHE if k[0] == warehouse and (project is None or k[1] == project)]:
-        del _DEPLOY_CACHE[key]
 
 
 def _load_artifact(artifact: str):
@@ -55,18 +44,18 @@ def _load_artifact(artifact: str):
 
 def _deployed_artifact(spark: SparkSession, project: str, registry: Registry | None,
                        model_id: int | None = None) -> str:
+    """Artifact dir of the explicit model, else of the project's live
+    deployment — read through the registry's stat-validated catalog, so
+    a deploy from any process is seen on the next call."""
     registry = registry or Registry(spark)
     if model_id is None:
-        key = (registry.warehouse, project)
-        cached = _DEPLOY_CACHE.get(key)
-        if cached is not None:
-            return cached
-    mid = model_id if model_id is not None else registry.deployed_model_id(project)
-    if mid is None:
-        raise ValueError(f"no deployed model for project {project!r}")
-    row = registry.model_row(mid)
-    if model_id is None:
-        _DEPLOY_CACHE[(registry.warehouse, project)] = row["artifact_path"]
+        row = registry.deployed_model(project)
+        if row is None:
+            raise ValueError(f"no deployed model for project {project!r}")
+    else:
+        row = registry.model_row(model_id)
+        if row is None:
+            raise ValueError(f"unknown model id {model_id}")
     return row["artifact_path"]
 
 

@@ -254,7 +254,7 @@ def train(
     _, fitted, metrics, combo, runtime = best
     metrics["fit_time"] = fit_time
 
-    model_id = registry._next_id("models")
+    model_id = registry.reserve_id("models")
     artifact = registry.artifact_dir(model_id)
     os.makedirs(artifact, exist_ok=True)
     fitted.write().overwrite().save(os.path.join(artifact, "model"))

@@ -335,7 +335,7 @@ def tune(
     hp["model_name"] = model_name
     hp["project_name"] = project
 
-    model_id = registry._next_id("models")
+    model_id = registry.reserve_id("models")
     artifact = registry.artifact_dir(model_id)
     trainer = trainer or hf_finetune
     t0 = time.time()

@@ -135,14 +135,17 @@ def train_test_split(
     label_col: str | None = None,
     order_col: str | None = None,
     seed: int = 42,
+    n: int | None = None,
 ) -> tuple[DataFrame, DataFrame]:
     """Split df into (train, test) per the reference's sampling modes.
 
     `last` requires a deterministic order; pass order_col (at scale an
     explicit sort key — parquet row order is not stable in a
-    distributed read).
+    distributed read). `n` is df's row count when the caller already
+    has it.
     """
-    n = df.count()
+    if n is None:
+        n = df.count()
     n_test = int(test_size) if test_size >= 1 else int(round(n * float(test_size)))
     n_train = n - n_test
 
@@ -729,8 +732,12 @@ class Snapshot:
     ):
         self.df = df
         self.y_column = y_column
+        n = None
         if y_column is not None:
-            label_nulls = df.filter(F.col(y_column).isNull()).count()
+            # the row count for the split rides in the label-NULL check
+            n, label_nulls = df.agg(
+                F.count(F.lit(1)), F.count(F.when(F.col(y_column).isNull(), 1))
+            ).head()
             if label_nulls:
                 # snapshot.rs:269-271 — label NULLs always error
                 raise ValueError(f"{label_nulls} NULL values in label column {y_column!r}")
@@ -738,7 +745,8 @@ class Snapshot:
             sampling = "random"  # unsupervised tasks have no strata
         strat_label = y_column if sampling == "stratified" else None
         self.train_df, self.test_df = train_test_split(
-            df, test_size, sampling, label_col=strat_label, order_col=order_col, seed=seed
+            df, test_size, sampling, label_col=strat_label, order_col=order_col,
+            seed=seed, n=n,
         )
         self.feature_cols = [c for c in df.columns if c != y_column]
         self.model = fit_preprocessor(

@@ -573,14 +573,14 @@ def stream_predict(
     Each micro-batch runs the deployed model of `project` via
     ml.predict (snapshot preprocessing replayed, model.transform
     native batch) and appends results to a parquet sink. Deployment
-    resolution happens PER BATCH through the process-local deploy map
-    (predict._DEPLOY_CACHE, invalidated by Registry.add_deployment) —
-    so `pgml.deploy` takes effect on the next micro-batch without
-    restarting the query, the Structured-Streaming analog of the
-    reference's shared-memory PROJECT_ID_TO_DEPLOYED_MODEL_ID
-    (project.rs:78-165). Model bytes load once per artifact per
-    process (predict._MODEL_CACHE), so re-resolution is a map lookup,
-    not a deserialize.
+    resolution happens PER BATCH through the registry's catalog file,
+    whose parse is cached per process and re-validated by one `stat`
+    — so a `pgml.deploy` from this or any other process takes effect
+    on the next micro-batch without restarting the query, the
+    Structured-Streaming analog of the reference's shared-memory
+    PROJECT_ID_TO_DEPLOYED_MODEL_ID (project.rs:78-165). Model bytes
+    load once per artifact per process (predict._MODEL_CACHE), so
+    re-resolution is a lookup, not a deserialize.
 
     Scale shape: the model is a fitted MLlib transformer — pure
     column expressions appended to the micro-batch plan, executed

@@ -628,3 +628,241 @@ def test_boosted_runtimes_gated_with_faked_modules(spark, registry, monkeypatch)
     est, runtime = make_estimator("regression", "catboost", {})
     assert runtime == "fallback"
     assert type(est).__name__ == "GBTRegressor"
+
+
+# -- the registry catalog: metrics, ids, migration, jobs, cross-process --------
+
+import os as _os
+import subprocess as _subprocess
+import sys as _sys
+import time as _time
+
+_REPO = _os.path.dirname(_os.path.dirname(_os.path.abspath(__file__)))
+
+
+def _run_py(code: str, *args: str, **popen_kw) -> _subprocess.Popen:
+    """A child interpreter with this repo importable."""
+    env = dict(_os.environ, PYTHONPATH=_REPO, SPARK_DRIVER_MEMORY="1g")
+    return _subprocess.Popen([_sys.executable, "-c", code, *args], cwd=_REPO,
+                             env=env, **popen_kw)
+
+
+def _linear_df(spark, slope: float, n: int = 60):
+    return spark.createDataFrame([(float(i), slope * i + 1.0) for i in range(n)],
+                                 "x double, y double")
+
+
+def test_regression_metrics_one_aggregate_matches_evaluator(spark):
+    from pyspark.ml.evaluation import RegressionEvaluator
+
+    from postgresml_spark.ml.metrics import regression_metrics
+
+    df, _ = load_dataset(spark, "diabetes")
+    # any prediction column will do: a rough linear guess off two features
+    pred = df.select(
+        F.col("target").alias("label"),
+        (150 + 520 * F.col("bmi") + 320 * F.col("bp")).alias("prediction"),
+    )
+    got = regression_metrics(pred)
+    for name, metric in [("r2", "r2"), ("mean_absolute_error", "mae"),
+                         ("mean_squared_error", "mse")]:
+        want = RegressionEvaluator(metricName=metric).evaluate(pred)
+        assert got[name] == pytest.approx(want, rel=1e-12, abs=0), name
+
+
+def test_registry_calls_and_deploy_strategies_run_no_spark_job(spark, registry):
+    from conftest import assert_no_spark_jobs
+
+    with assert_no_spark_jobs(spark, "registry calls"):
+        pid = registry.find_or_create_project("J", "regression")
+        assert registry.find_or_create_project("J", "regression") == pid
+        sid = registry.add_snapshot("<dataframe>", "y", 0.25, "random", {"x": {}})
+        m1 = registry.add_model(pid, sid, "linear", "mllib", {}, {"r2": 0.9}, "/a1")
+        m2 = registry.add_model(pid, sid, "ridge", "mllib", {}, {"r2": 0.5}, "/a2")
+        registry.add_deployment(pid, m1, "new_score")
+        assert registry.deployed_model_id("J") == m1
+        assert registry.model_row(m2)["algorithm"] == "ridge"
+        assert deploy(spark, "J", "most_recent", registry=registry)["model_id"] == m2
+        assert deploy(spark, "J", "best_score", registry=registry)["model_id"] == m1
+        assert deploy(spark, "J", "rollback", registry=registry)["model_id"] == m2
+        assert deploy(spark, "J", "specific", model_id=m1,
+                      registry=registry)["model_id"] == m1
+        assert registry.deployed_model_id("J") == m1
+
+
+def test_reserved_and_loaded_ids_are_never_reissued(spark, registry, tmp_path):
+    df = _linear_df(spark, 2.0)
+    first = train(spark, "L", "regression", df, "y", algorithm="linear",
+                  test_sampling="random", registry=registry)
+    reserved = registry.reserve_id("models")
+    assert reserved == first["model_id"] + 1
+    pid = registry.get_project("L")["id"]
+    assert registry.add_model(pid, 1, "linear", "mllib", {}, {}, "/x") == reserved + 1
+
+    dump = str(tmp_path / "dump")
+    registry.dump_all(dump)
+    fresh = Registry(spark, warehouse=str(tmp_path / "wh2"))
+    counts = fresh.load_all(dump)
+    assert counts["models"] == 2
+    loaded = {r["id"] for r in fresh.rows("models")}
+    res = train(spark, "L", "regression", df, "y", algorithm="linear",
+                test_sampling="random", registry=fresh)
+    assert res["model_id"] > max(loaded)
+    assert fresh.model_row(res["model_id"]) is not None
+
+
+def test_parquet_registry_is_migrated_and_read_back_equal(spark, tmp_path):
+    from postgresml_spark.ml.registry import _SCHEMAS
+
+    wh = str(tmp_path / "old")
+    rows = {
+        "projects": [(1, "A", "regression", 1.0), (2, "B", "classification", 2.0)],
+        "snapshots": [(1, "<dataframe>", "y", 0.25, "random", "{}", 1.5)],
+        "models": [
+            (1, 1, 1, "linear", "mllib", "{}", '{"r2": 0.7}', "successful", "/m1", 3.0),
+            (2, 1, 1, "ridge", "mllib", "{}", '{"r2": 0.8}', "successful", "/m2", 4.0),
+            (5, 2, 1, "logistic", "mllib", "{}", '{"f1": 0.9}', "successful", "/m5", 5.0),
+        ],
+        "deployments": [(1, 1, 1, "new_score", 3.5), (2, 1, 2, "most_recent", 4.5),
+                        (3, 2, 5, "new_score", 5.5)],
+    }
+    for t, data in rows.items():  # the layout: one parquet dir per table
+        spark.createDataFrame(data, _SCHEMAS[t]).write.parquet(_os.path.join(wh, t))
+
+    reg = Registry(spark, warehouse=wh)
+    for t, data in rows.items():
+        assert sorted(tuple(r) for r in reg.read(t).collect()) == sorted(data), t
+    assert _os.path.exists(_os.path.join(wh, "catalog.json"))
+    assert reg.get_project("B")["task"] == "classification"
+    assert reg.deployed_model_id("A") == 2 and reg.deployed_model_id("B") == 5
+    assert reg.model_metric(5, "f1") == 0.9
+    assert reg.add_model(1, 1, "lasso", "mllib", {}, {}, "/m6") == 6
+    assert reg.add_deployment(1, 6, "specific") == 4
+    # a fresh Registry reads the migrated catalog, not the parquet dirs
+    assert Registry(spark, warehouse=wh).deployed_model_id("A") == 6
+
+
+_STRESS = """
+import sys, threading
+from postgresml_spark.ml.registry import Registry
+sys.setswitchinterval(1e-5)
+wh, n = sys.argv[1], int(sys.argv[2])
+
+def work():
+    reg = Registry(None, warehouse=wh)
+    pid = reg.find_or_create_project("S", "regression")
+    for _ in range(n):
+        mid = reg.reserve_id("models")
+        reg.add_model(pid, 0, "linear", "mllib", {}, {"r2": 0.0}, f"/m{mid}", model_id=mid)
+        reg.add_deployment(pid, mid, "specific")
+
+threads = [threading.Thread(target=work) for _ in range(2)]
+for t in threads:
+    t.start()
+for t in threads:
+    t.join(timeout=120)
+    assert not t.is_alive()
+"""
+
+
+def test_concurrent_writers_allocate_unique_dense_ids(tmp_path):
+    # more writers than cores: 6 processes x 2 threads, one warehouse
+    wh, n, writers = str(tmp_path / "wh"), 10, 12
+    procs = [_run_py(_STRESS, wh, str(n)) for _ in range(writers // 2)]
+    assert [p.wait(timeout=180) for p in procs] == [0] * (writers // 2)
+    reg = Registry(None, warehouse=wh)
+    assert len(reg.rows("projects")) == 1
+    assert sorted(r["id"] for r in reg.rows("models")) == list(range(1, writers * n + 1))
+    deps = reg.rows("deployments")
+    assert sorted(d["id"] for d in deps) == list(range(1, writers * n + 1))
+    assert all(reg.model_row(d["model_id"]) is not None for d in deps)
+
+
+_TRAINER = """
+import os, sys, time
+from postgresml_spark.ml.registry import Registry
+from postgresml_spark.ml.train import train
+from postgresml_spark.session import get_spark
+wh, go, n = sys.argv[1], sys.argv[2], int(sys.argv[3])
+spark = get_spark("registry-writer", master="local[1]", shuffle_partitions=1)
+df = spark.createDataFrame([(float(i), 2.0 * i + 1.0) for i in range(60)], "x double, y double")
+open(go + ".ready", "w").close()
+while not os.path.exists(go):
+    time.sleep(0.05)
+reg = Registry(spark, warehouse=wh)
+for _ in range(n):
+    train(spark, "Race", "regression", df, "y", algorithm="linear",
+          test_sampling="random", registry=reg)
+"""
+
+
+def test_two_processes_train_into_one_warehouse(spark, tmp_path):
+    wh, go, n = str(tmp_path / "wh"), str(tmp_path / "go"), 3
+    with open(tmp_path / "child.err", "w") as err:
+        child = _run_py(_TRAINER, wh, go, str(n), stdout=err, stderr=err)
+        try:
+            deadline = _time.time() + 180
+            while not _os.path.exists(go + ".ready"):
+                assert child.poll() is None, (tmp_path / "child.err").read_text()[-2000:]
+                assert _time.time() < deadline, "child Spark session did not start"
+                _time.sleep(0.1)
+            open(go, "w").close()
+            reg = Registry(spark, warehouse=wh)
+            mine = [train(spark, "Race", "regression", _linear_df(spark, 2.0), "y",
+                          algorithm="linear", test_sampling="random",
+                          registry=reg)["model_id"] for _ in range(n)]
+            assert child.wait(timeout=300) == 0, (tmp_path / "child.err").read_text()[-2000:]
+        finally:
+            if child.poll() is None:
+                child.kill()
+    ids = sorted(r["id"] for r in reg.rows("models"))
+    assert ids == list(range(1, 2 * n + 1))
+    assert set(mine) < set(ids)
+    assert [p["name"] for p in reg.rows("projects")] == ["Race"]
+    assert sorted(s["id"] for s in reg.rows("snapshots")) == list(range(1, 2 * n + 1))
+    deps = reg.rows("deployments")
+    assert deps and all(reg.model_row(d["model_id"]) is not None for d in deps)
+
+
+_DEPLOYER = """
+import sys
+from postgresml_spark.ml.deploy import deploy
+from postgresml_spark.ml.registry import Registry
+deploy(None, sys.argv[2], "specific", model_id=int(sys.argv[3]),
+       registry=Registry(None, warehouse=sys.argv[1]))
+"""
+
+
+def test_predict_one_sees_a_deploy_from_another_process(spark, registry, monkeypatch):
+    import importlib
+
+    ml_predict = importlib.import_module("postgresml_spark.ml.predict")
+    ml_registry = importlib.import_module("postgresml_spark.ml.registry")
+
+    a = train(spark, "X", "regression", _linear_df(spark, 2.0), "y",
+              algorithm="linear", test_sampling="random", registry=registry)
+    b = train(spark, "X", "regression", _linear_df(spark, -3.0), "y",
+              algorithm="linear", test_sampling="random", registry=registry,
+              automatic_deploy=False)
+    assert ml_predict.predict_one(spark, "X", [10.0], registry=registry) == \
+        pytest.approx(21.0, abs=1e-6)
+
+    # an unchanged catalog costs one stat of it per call and no read
+    catalog = _os.path.join(registry.warehouse, "catalog.json")
+    stats, opens = [], []
+    real_stat, real_open = _os.stat, open
+    monkeypatch.setattr(ml_registry.os, "stat",
+                        lambda p, *a, **k: stats.append(p) or real_stat(p, *a, **k))
+    monkeypatch.setattr(ml_registry, "open",
+                        lambda p, *a, **k: opens.append(p) or real_open(p, *a, **k),
+                        raising=False)
+    for _ in range(3):
+        ml_predict.predict_one(spark, "X", [10.0], registry=registry)
+    assert [p for p in stats if p == catalog] == [catalog] * 3
+    assert catalog not in opens
+    monkeypatch.undo()
+
+    assert _run_py(_DEPLOYER, registry.warehouse, "X", str(b["model_id"])).wait(60) == 0
+    assert registry.deployed_model_id("X") == b["model_id"] != a["model_id"]
+    assert ml_predict.predict_one(spark, "X", [10.0], registry=registry) == \
+        pytest.approx(-29.0, abs=1e-6)

@@ -22,12 +22,21 @@ reuse across queries; at 100 TB train on a sample.
 
 from __future__ import annotations
 
+import json
+import os
+import re
+import uuid
+from typing import TYPE_CHECKING
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from postgresml_spark.functions.vectors import cosine_similarity_lit, distance_l2
+
+if TYPE_CHECKING:
+    from typing import Self
 
 __all__ = [
     "fit_pq",
@@ -42,6 +51,10 @@ __all__ = [
     "ResidentANN",
     "ResidentBQ",
     "ResidentHNSW",
+    "ResidentPQ",
+    "ResidentSQ8",
+    "range_search",
+    "hard_negative_join",
     "binary_signature",
     "jaccard_distance_lit",
     "jaccard_topk",
@@ -54,6 +67,20 @@ __all__ = [
     "PinnedHNSWRecallWarning",
     "warn_if_pinned_hnsw_clustered",
 ]
+
+
+def _unit_rows(mat: np.ndarray) -> np.ndarray:
+    """Rows scaled to unit L2 norm (zero rows stay zero), dtype kept:
+    cosine becomes a dot product."""
+    norms = np.linalg.norm(mat, axis=1, keepdims=True)
+    norms[norms == 0.0] = 1.0
+    return mat / norms
+
+
+def _unit_query(query_vec, dtype=np.float32) -> np.ndarray:
+    q = np.asarray(query_vec, dtype=dtype)
+    qn = np.linalg.norm(q)
+    return q / qn if qn else q
 
 
 class PinnedHNSWRecallWarning(UserWarning):
@@ -140,10 +167,7 @@ def clustered_fraction(
     rng = _np.random.default_rng(seed)
     k = min(int(sample), n)
     idx = rng.choice(n, size=k, replace=False) if k < n else _np.arange(n)
-    sub = mat[idx].astype(_np.float64)
-    norms = _np.linalg.norm(sub, axis=1)
-    norms[norms == 0.0] = 1.0
-    sub = sub / norms[:, None]
+    sub = _unit_rows(mat[idx].astype(_np.float64))
     g = sub @ sub.T
     _np.fill_diagonal(g, -1.0)
     return float(_np.mean(g.max(axis=1) > cos_threshold))
@@ -267,6 +291,11 @@ def fit_ivf_centroids(
     return [[float(v) for v in c] for c in _lloyd(x, nlist, seed, max_iter)]
 
 
+def _sample(x: np.ndarray, cap: int, rng) -> np.ndarray:
+    """At most ``cap`` rows of ``x``, drawn without replacement."""
+    return x[rng.choice(len(x), cap, replace=False)] if len(x) > cap else x
+
+
 def _lloyd(x: np.ndarray, k: int, seed: int, max_iter: int) -> np.ndarray:
     """Seeded k-means++ init + Lloyd iterations (numpy). Deterministic
     for a fixed sample; standard textbook algorithm."""
@@ -356,6 +385,20 @@ def _ivf_assign_batch(centroids: list[list[float]]):
     return _assign
 
 
+def _centroid_order(centroids, query_vec) -> list[int]:
+    """Centroid indices by L2 distance to the query, nearest first, ties
+    in index order (``sorted`` is stable): the probe order of the
+    Spark-side IVF plans (ServedIndex, knn_ivf, knn_ivf_pq)."""
+    import math
+
+    return sorted(
+        range(len(centroids)),
+        key=lambda i: math.sqrt(
+            sum((x - y) ** 2 for x, y in zip(centroids[i], query_vec))
+        ),
+    )
+
+
 class ServedIndex:
     """Warm ANN serving state — the analog of a resident ivfflat/HNSW
     index. The reference's 18-31 ms/query number is measured against an
@@ -405,15 +448,7 @@ class ServedIndex:
     def search(self, query_vec: list[float], k: int = 10, nprobe: int = 4) -> DataFrame:
         df = self.df
         if self.centroids:
-            import math
-
-            def l2(a, b):
-                return math.sqrt(sum((x - y) ** 2 for x, y in zip(a, b)))
-
-            order = sorted(
-                range(len(self.centroids)),
-                key=lambda i: l2(self.centroids[i], query_vec),
-            )
+            order = _centroid_order(self.centroids, query_vec)
             df = df.filter(F.col("centroid_id").isin(order[:nprobe]))
         if self.codebooks is not None:
             return pq_topk(
@@ -442,13 +477,7 @@ def knn_ivf(
     (tiny), scan only the nprobe nearest inverted lists, exact re-rank
     inside them. With `centroid_id`-partitioned storage the non-probed
     partitions are pruned at the source."""
-    import math
-
-    def l2(a, b):
-        return math.sqrt(sum((x - y) ** 2 for x, y in zip(a, b)))
-
-    order = sorted(range(len(centroids)), key=lambda i: l2(centroids[i], query_vec))
-    probe = order[:nprobe]
+    probe = _centroid_order(centroids, query_vec)[:nprobe]
     return knn_exact(
         df_assigned.filter(F.col(centroid_col).isin(probe)),
         query_vec,
@@ -616,10 +645,7 @@ def knn_join(
     window per query_id then reduces local winners to the global top-k.
     One scan, one tiny shuffle, for any number of queries."""
     q_ids = [int(i) for i, _ in queries]
-    q_mat = np.asarray([v for _, v in queries], dtype="float64")
-    qn = np.linalg.norm(q_mat, axis=1)
-    qn[qn == 0] = 1.0
-    qu = q_mat / qn[:, None]
+    qu = _unit_rows(np.asarray([v for _, v in queries], dtype="float64"))
     kk = int(k)
 
     def _local_topk(batches):
@@ -683,10 +709,7 @@ def hard_negative_join(
     """
     a_ids = [int(i) for i, _, _ in anchors]
     a_labels = [lab for _, _, lab in anchors]
-    a_mat = np.asarray([v for _, v, _ in anchors], dtype="float64")
-    an = np.linalg.norm(a_mat, axis=1)
-    an[an == 0] = 1.0
-    au = a_mat / an[:, None]
+    au = _unit_rows(np.asarray([v for _, v, _ in anchors], dtype="float64"))
     kk = int(k)
 
     def _local_topk(batches):
@@ -760,9 +783,7 @@ def fit_pq(
     than max_sample is subsampled with the same seeded rng."""
     if isinstance(df, np.ndarray):
         x = np.asarray(df, dtype="float64")
-        if len(x) > max_sample:
-            rng = np.random.default_rng(seed)
-            x = x[rng.choice(len(x), int(max_sample), replace=False)]
+        x = _sample(x, int(max_sample), np.random.default_rng(seed))
     else:
         pdf = (
             df.select(F.col(vec_col).cast("array<double>").alias("v"))
@@ -867,24 +888,266 @@ def knn_ivf_pq(
     ``df`` may already carry ``code_col`` (pre-encoded store — the
     production path); otherwise codes are computed in-flight.
     """
-    import math
-
     if code_col not in df.columns:
         df = pq_encode(df, codebooks, vec_col=vec_col, code_col=code_col)
     assigned = (
         df if "centroid_id" in df.columns else ivf_assign(df, centroids, vec_col=vec_col)
     )
-    order = sorted(
-        range(len(centroids)),
-        key=lambda i: math.sqrt(
-            sum((c - q) ** 2 for c, q in zip(centroids[i], query_vec))
-        ),
-    )
+    order = _centroid_order(centroids, query_vec)
     probed = assigned.filter(F.col("centroid_id").isin(order[:nprobe]))
     return pq_topk(probed, codebooks, query_vec, k=k, id_col=id_col, code_col=code_col)
 
 
-class ResidentANN:
+# ---------------------------------------------------------------------------
+# Resident serving tiers: Spark builds, serving is process-local numpy.
+# `_ResidentTier` is the skeleton they share; ResidentANN and ResidentPQ
+# also share the IVF coarse stage (`_ivf_fit`, `_probe_rounds`).
+# ---------------------------------------------------------------------------
+
+
+def _fetch_ids_mat(df, id_col: str, vec_col: str, dtype=np.float32,
+                   stream_fetch: bool = False):
+    """A tier's (ids, matrix): a prebuilt (ids, mat) tuple (e.g. an
+    already-resident shard) as is, or a DataFrame moved through Arrow
+    ONCE, streaming partitions if the collect trips maxResultSize.
+    ``stream_fetch`` streams from the start: at 5M x 1024 the one-shot
+    Arrow collect materializes ~40 GB of float64 batches inside the JVM
+    before maxResultSize can even trip (task-side heap OOM, measured)."""
+    if isinstance(df, tuple):
+        ids, mat = df
+        return np.asarray(ids), np.asarray(mat, dtype=dtype)
+    sel = df.select(id_col, vec_col)
+    if not stream_fetch:
+        try:
+            pdf = sel.toPandas()
+            ids, vecs = pdf[id_col].to_numpy(), pdf[vec_col]
+        except Exception as e:  # maxResultSize: stream partitions
+            if "maxResultSize" not in str(e):
+                raise
+            stream_fetch = True
+    if stream_fetch:
+        rows = sel.toLocalIterator(prefetchPartitions=True)
+        pairs = [(r[0], np.asarray(r[1], dtype=dtype)) for r in rows]
+        ids, vecs = np.asarray([i for i, _ in pairs]), [v for _, v in pairs]
+    if not len(vecs):
+        return ids, np.zeros((0, 0), dtype=dtype)
+    return ids, np.asarray([np.asarray(v, dtype=dtype) for v in vecs])
+
+
+def _ivf_fit(unit: np.ndarray, nlist: int, seed: int):
+    """IVF coarse stage over unit rows: Lloyd on a bounded sample (the
+    FAISS/ivfflat design — a full-corpus Lloyd dominates the build far
+    past where the sample stops improving centroids), then a chunked
+    assignment of every row (the n×nlist block never materializes).
+    Returns (centroids, order, assign, best, offsets): ``order`` sorts
+    rows by centroid (stable) so cell c is rows offsets[c]:offsets[c+1];
+    ``assign`` and ``best`` (each row's centroid score) are in that
+    order."""
+    fit = _sample(unit, max(nlist * 64, 16384), np.random.default_rng(seed))
+    cent = _lloyd(fit.astype(np.float64), nlist, seed, 20)
+    centroids = _unit_rows(cent).astype(np.float32)
+    assign = np.empty(len(unit), dtype=np.int64)
+    best = np.empty(len(unit), dtype=np.float32)
+    step = max(1, 2**24 // nlist)
+    for lo in range(0, len(unit), step):
+        blk = unit[lo : lo + step] @ centroids.T
+        assign[lo : lo + step] = np.argmax(blk, axis=1)
+        best[lo : lo + step] = np.max(blk, axis=1)
+    order = np.argsort(assign, kind="stable")
+    assign = assign[order]
+    offsets = np.searchsorted(assign, np.arange(nlist + 1))
+    return centroids, order, assign, best[order], offsets
+
+
+def _probe_rounds(cent_scores, offsets, nprobe: int, allowed):
+    """IVF probe loop: cells in centroid-score order, in rounds whose
+    batch doubles (iterative-scan growth); the caller scores each round
+    and decides when to stop. Yields (probe cells, runs) per round; a
+    run is (sel, rows) — ``sel`` indexes the row arrays, ``rows`` are
+    the row positions (runs ``allowed`` empties are dropped). Cells are
+    contiguous, so a round merges them into maximal runs and an
+    unfiltered run is a VIEW: a fancy-index gather copied nprobe/nlist
+    of the corpus per query (~640 MB at 5M x 1024, nprobe=64/2048 —
+    measured 503 ms, slower than the exact full matvec)."""
+    order = np.argsort(-cent_scores)
+    pos, batch = 0, int(nprobe)
+    while pos < len(order):
+        probe = np.sort(order[pos : pos + batch])
+        pos += batch
+        batch *= 2
+        spans: list[list[int]] = []
+        for c in probe:
+            lo, hi = int(offsets[c]), int(offsets[c + 1])
+            if lo == hi:
+                continue
+            if spans and spans[-1][1] == lo:
+                spans[-1][1] = hi
+            else:
+                spans.append([lo, hi])
+        if allowed is None:
+            yield probe, [(slice(lo, hi), np.arange(lo, hi)) for lo, hi in spans]
+        else:
+            subs = [lo + np.flatnonzero(allowed[lo:hi]) for lo, hi in spans]
+            yield probe, [(rows, rows) for rows in subs if rows.size]
+
+
+def _save_resident(path, kind, ids, mat, meta, extra):
+    """Columnar store for a resident index: one parquet file per array
+    (flattened; dtype, shape and file name in meta.json) + the scalar
+    config. Arrow only — serving hosts load without a SparkSession.
+
+    Crash-safe over an existing index: the arrays go to file names
+    unique to this save, meta.json — which names them — is published
+    last by temp file + ``os.replace`` (the versioned store's
+    ``_set_current`` idiom), and only then are the old arrays removed.
+    A reader sees wholly the old or wholly the new index; a failed save
+    removes what it wrote."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    os.makedirs(path, exist_ok=True)
+    has_old = os.path.exists(os.path.join(path, "meta.json"))
+    old = set(_array_files(_read_head(path)).values()) if has_old else set()
+    tag = uuid.uuid4().hex[:12]
+    tmp = f"meta.json.{tag}.tmp"
+    shapes, written = {}, {tmp}
+    try:
+        for name, arr in {"ids": ids, "mat": mat, **extra}.items():
+            a = np.ascontiguousarray(arr)
+            if a.dtype.kind in ("O", "U", "S"):  # e.g. string ids
+                col, dtype = pa.array([str(x) for x in a.reshape(-1)]), "str"
+            else:
+                col, dtype = pa.array(a.reshape(-1)), str(a.dtype)
+            fname = f"{name}.{tag}.parquet"
+            written.add(fname)
+            pq.write_table(pa.table({name: col}), os.path.join(path, fname))
+            shapes[name] = {"dtype": dtype, "shape": list(a.shape), "file": fname}
+        with open(os.path.join(path, tmp), "w") as f:
+            json.dump({"kind": kind, "meta": meta, "arrays": shapes}, f)
+        os.replace(os.path.join(path, tmp), os.path.join(path, "meta.json"))
+    except BaseException:
+        for fname in written & set(os.listdir(path)):
+            os.remove(os.path.join(path, fname))
+        raise
+    # the old meta's arrays, and orphans of saves killed mid-write
+    for fname in set(os.listdir(path)) - written:
+        if fname in old or re.fullmatch(r"\w+\.[0-9a-f]{12}\.parquet", fname):
+            os.remove(os.path.join(path, fname))
+
+
+def _read_head(path) -> dict:
+    with open(os.path.join(path, "meta.json")) as f:
+        return json.load(f)
+
+
+def _array_files(head) -> dict:
+    """Array name -> file name: meta.json's ``file``, or the fixed
+    ``<name>.parquet`` of indexes saved before saves were crash-safe."""
+    return {
+        name: spec.get("file", f"{name}.parquet")
+        for name, spec in head["arrays"].items()
+    }
+
+
+def _load_resident(path, expect):
+    import pyarrow.parquet as pq
+
+    head = _read_head(path)
+    if head["kind"] not in expect:
+        raise ValueError(
+            f"index at {path} is kind={head['kind']!r}, expected {expect}"
+        )
+    arrays = {}
+    for name, fname in _array_files(head).items():
+        spec = head["arrays"][name]
+        col = pq.read_table(os.path.join(path, fname))[name]
+        if spec["dtype"] == "str":
+            a = np.asarray(col.to_pylist(), dtype=object)
+        else:
+            a = col.to_numpy(zero_copy_only=False).astype(spec["dtype"])
+        arrays[name] = a.reshape(spec["shape"])
+    return head["meta"], arrays
+
+
+class _ResidentTier:
+    """Skeleton of the driver-resident serving tiers, where the served-
+    index contract lives: ids and row order (``ids[i]`` names row i of
+    every row array, in whatever order the build left them), the id→row
+    mask, the selection orders and durability. save/load are driven by
+    the class declarations: ``ids``, ``mat`` (unit float rows), the
+    ``_META`` scalars and every non-None ``_ARRAYS`` array, saved under
+    the tier's kind; ``_META_DEFAULTS`` fill keys older indexes lack and
+    ``_loaded`` rebuilds derived state."""
+
+    _KINDS: tuple = ()  # meta.json kinds load() accepts; save writes [0]
+    _META: tuple = ()
+    _META_DEFAULTS: dict = {}
+    _ARRAYS: tuple = ()
+
+    def row_mask(self, allowed_ids) -> np.ndarray:
+        """Boolean ``allowed=`` mask in THIS index's row order for an id
+        collection (IVF builds cluster rows by centroid, so caller-order
+        masks don't align) — the served filter path's bridge."""
+        if not isinstance(allowed_ids, np.ndarray):
+            allowed_ids = np.asarray(list(allowed_ids))
+        return np.isin(self.ids, allowed_ids)
+
+    @staticmethod
+    def _top_k(scores: np.ndarray, ids: np.ndarray, k: int) -> list[tuple]:
+        """(id, score) of the k best scores, descending: argpartition,
+        then a stable sort of the k winners (the exact-scan order of
+        ResidentANN and ResidentHNSW)."""
+        if not len(scores):
+            return []
+        kk = min(k, len(scores))
+        top = np.argpartition(-scores, kk - 1)[:kk]
+        top = top[np.argsort(-scores[top], kind="stable")]
+        return list(zip(ids[top].tolist(), scores[top].tolist()))
+
+    def _kind(self) -> str:
+        return self._KINDS[0]
+
+    def _state(self) -> tuple[dict, dict]:
+        """(meta scalars, arrays) saved beside ids and mat."""
+        meta = {key: getattr(self, key) for key in self._META}
+        arrays = {a: getattr(self, a) for a in self._ARRAYS}
+        return meta, {a: v for a, v in arrays.items() if v is not None}
+
+    def _loaded(self, meta: dict, arrays: dict) -> None:
+        """Rebuild derived state after ``load`` (hook)."""
+
+    def save(self, path: str) -> None:
+        """Persist to a parquet directory (Arrow, no Spark needed): a
+        pgvector index lives in Postgres pages and survives restarts, so
+        the serving tier has the same build-once / reload-forever
+        contract. Saving over an existing index is crash-safe."""
+        meta, arrays = self._state()
+        mat = self.mat if self.mat is not None else np.zeros((0, 0), np.float32)
+        _save_resident(path, self._kind(), self.ids, mat, meta, arrays)
+
+    @classmethod
+    def load(cls, path: str) -> Self:
+        """Reload a ``save()``d index: O(bytes) columnar read, no refit,
+        reassign or graph rebuild; rows come back in saved order. A path
+        holding another kind of index raises ValueError."""
+        return cls._load(path)
+
+    @classmethod
+    def _load(cls, path: str, floats: bool = True) -> Self:
+        meta, arrays = _load_resident(path, expect=cls._KINDS)
+        meta = {**cls._META_DEFAULTS, **meta}
+        idx = cls.__new__(cls)
+        idx.ids = arrays["ids"]
+        idx.mat = arrays["mat"] if floats and meta.get("has_floats", True) else None
+        for key in cls._META:
+            setattr(idx, key, meta[key])
+        for name in cls._ARRAYS:
+            setattr(idx, name, arrays.get(name))
+        idx._loaded(meta, arrays)
+        return idx
+
+
+class ResidentANN(_ResidentTier):
     """Driver-resident ANN serving tier — the actual architectural
     analog of the reference's number: pgvector's 18-31 ms/query is
     measured against an ivfflat index resident in Postgres shared
@@ -906,6 +1169,12 @@ class ResidentANN:
     per-query driver collect.
     """
 
+    _KINDS = ("exact", "ivf")
+    _META = ("nprobe",)
+    # pre-r8 saved indexes lack cell_radius: probe_scan returns None
+    # and callers fall back to the shortlist-min bound
+    _ARRAYS = ("centroids", "assign", "offsets", "cell_radius")
+
     def __init__(
         self,
         df: DataFrame,
@@ -916,71 +1185,15 @@ class ResidentANN:
         seed: int = 42,
         stream_fetch: bool = False,
     ):
-        if isinstance(df, tuple):  # prebuilt (ids, matrix) — e.g. the
-            self.ids, mat = df     # serving tier's already-resident shard
-            mat = np.asarray(mat, dtype=np.float32)
-        else:
-            sel = df.select(id_col, vec_col)
-            # stream_fetch: go STRAIGHT to partition streaming. At
-            # 5M x 1024 the one-shot Arrow collect materializes ~40 GB
-            # of float64 batches inside the JVM before maxResultSize
-            # can even trip (task-side heap OOM, measured); callers
-            # that know the corpus is driver-RAM-order pass this hint.
-            if not stream_fetch:
-                try:
-                    pdf = sel.toPandas()
-                    self.ids = pdf[id_col].to_numpy()
-                    mat = np.asarray(
-                        [np.asarray(v, dtype=np.float32) for v in pdf[vec_col]]
-                    )
-                except Exception as e:  # maxResultSize: stream partitions
-                    if "maxResultSize" not in str(e):
-                        raise
-                    stream_fetch = True
-            if stream_fetch:
-                ids_parts, mat_parts = [], []
-                for row in sel.toLocalIterator(prefetchPartitions=True):
-                    ids_parts.append(row[0])
-                    mat_parts.append(np.asarray(row[1], dtype=np.float32))
-                self.ids = np.asarray(ids_parts)
-                mat = np.asarray(mat_parts)
-        norms = np.linalg.norm(mat, axis=1, keepdims=True)
-        norms[norms == 0.0] = 1.0
-        self.mat = mat / norms  # cosine = dot on unit vectors
+        self.ids, mat = _fetch_ids_mat(df, id_col, vec_col, stream_fetch=stream_fetch)
+        self.mat = _unit_rows(mat)  # cosine = dot on unit vectors
         self.nprobe = nprobe
-        self.assign = None
-        self.centroids = None
+        self.centroids = self.assign = self.offsets = self.cell_radius = None
         if nlist:
-            # Fit on a bounded sample (the FAISS/ivfflat design): Lloyd
-            # over the full corpus is O(n·nlist·d·iters) and dominates
-            # the build far past where the sample stops improving
-            # centroids. Assignment still covers every row, chunked so
-            # the n×nlist score block never materializes whole.
-            rng = np.random.default_rng(seed)
-            max_fit = max(nlist * 64, 16384)
-            fit = (
-                self.mat
-                if len(self.mat) <= max_fit
-                else self.mat[rng.choice(len(self.mat), max_fit, replace=False)]
+            self.centroids, order, self.assign, best, self.offsets = _ivf_fit(
+                self.mat, nlist, seed
             )
-            cent = _lloyd(fit.astype(np.float64), nlist, seed, 20)
-            cn = np.linalg.norm(cent, axis=1, keepdims=True)
-            cn[cn == 0.0] = 1.0
-            self.centroids = (cent / cn).astype(np.float32)
-            self.assign = np.empty(len(self.mat), dtype=np.int64)
-            best = np.empty(len(self.mat), dtype=np.float32)
-            step = max(1, 2**24 // max(nlist, 1))
-            for lo in range(0, len(self.mat), step):
-                blk = self.mat[lo : lo + step] @ self.centroids.T
-                self.assign[lo : lo + step] = np.argmax(blk, axis=1)
-                best[lo : lo + step] = np.max(blk, axis=1)
-            order = np.argsort(self.assign, kind="stable")
-            # cluster rows by centroid for contiguous probe slices
             self.ids, self.mat = self.ids[order], self.mat[order]
-            self.assign = self.assign[order]
-            self.offsets = np.searchsorted(
-                self.assign, np.arange(nlist + 1)
-            )
             # Per-cell covering radius R_c = max ||x - c|| over members
             # (unit rows and unit centroid: ||x-c||^2 = 2 - 2 x·c, and
             # x·c is the assignment score already computed). Gives the
@@ -988,68 +1201,39 @@ class ResidentANN:
             # proof uses: any chunk in an unprobed cell scores
             # q·x <= q·c + R_c (Cauchy-Schwarz on the residual) — a
             # geometric certificate, not a router heuristic. Empty
-            # cells get -2 so their bound (q·c - 2 <= -1) never binds.
-            best = best[order]
+            # cells get -2 so their bound (q·c - 2 <= -1) never binds;
+            # 1e-4 slack absorbs fp32 rounding in x·c and q·c.
+            cells = np.flatnonzero(np.diff(self.offsets))  # non-empty
+            worst = np.minimum.reduceat(best, self.offsets[cells])
             self.cell_radius = np.full(nlist, -2.0, dtype=np.float32)
-            for c in range(nlist):
-                lo, hi = int(self.offsets[c]), int(self.offsets[c + 1])
-                if lo < hi:
-                    worst = float(best[lo:hi].min())
-                    # 1e-4 slack absorbs fp32 rounding in x·c and q·c
-                    self.cell_radius[c] = (
-                        2.0 * max(0.0, 1.0 - worst)
-                    ) ** 0.5 + 1e-4
+            self.cell_radius[cells] = np.sqrt(
+                2.0 * np.maximum(0.0, 1.0 - worst.astype(np.float64))
+            ) + 1e-4
+
+    def _kind(self) -> str:
+        return "exact" if self.centroids is None else "ivf"
 
     def _ivf_probe(self, q, k, allowed, nprobe):
         """Shared IVF probing loop: probe cells in centroid-score
         order, score every (allowed) chunk in the probed cells.
-        Returns (score_parts, id_parts, row_parts, probed_mask,
-        cent_scores) — search() consumes the first two; probe_scan()
-        additionally uses the row indices and the probe geometry for
-        the unconditional unscanned-cell bound."""
+        Returns (score_parts, row_parts, probed_mask, cent_scores) —
+        search() consumes the first two; probe_scan() additionally
+        uses the probe geometry for the unconditional unscanned-cell
+        bound."""
         cent_scores = self.centroids @ q
-        order = np.argsort(-cent_scores)
-        nlist = len(self.centroids)
-        probed = np.zeros(nlist, dtype=bool)
+        probed = np.zeros(len(self.centroids), dtype=bool)
         score_parts: list[np.ndarray] = []
-        id_parts: list[np.ndarray] = []
         row_parts: list[np.ndarray] = []
-        pos, batch, found = 0, int(nprobe or self.nprobe), 0
-        while pos < nlist:
-            probe = np.sort(order[pos : pos + batch])
+        found = 0
+        for probe, runs in _probe_rounds(
+            cent_scores, self.offsets, nprobe or self.nprobe, allowed
+        ):
             probed[probe] = True
-            pos += batch
-            batch *= 2  # iterative-scan growth (filtered rounds only)
-            # Rows are clustered by centroid, so each probed cell is
-            # a CONTIGUOUS slice: merge adjacent cells into maximal
-            # runs and matmul each run as a VIEW. A fancy-index
-            # gather copied nprobe/nlist of the corpus per query
-            # (~640 MB at 5M x 1024, nprobe=64/2048 — measured
-            # 503 ms median, slower than the exact full matvec);
-            # view-sliced BLAS only touches score/id arrays, never
-            # re-materializes vectors.
-            runs: list[list[int]] = []
-            for c in probe:
-                lo, hi = int(self.offsets[c]), int(self.offsets[c + 1])
-                if lo == hi:
-                    continue
-                if runs and runs[-1][1] == lo:
-                    runs[-1][1] = hi
-                else:
-                    runs.append([lo, hi])
-            for lo, hi in runs:
-                if allowed is None:
-                    score_parts.append(self.mat[lo:hi] @ q)
-                    id_parts.append(self.ids[lo:hi])
-                    row_parts.append(np.arange(lo, hi))
-                else:
-                    sub = np.flatnonzero(allowed[lo:hi])
-                    if not sub.size:
-                        continue
-                    score_parts.append(self.mat[lo:hi][sub] @ q)
-                    id_parts.append(self.ids[lo:hi][sub])
-                    row_parts.append(lo + sub)
-                    found += sub.size
+            for sel, rows in runs:
+                score_parts.append(self.mat[sel] @ q)
+                row_parts.append(rows)
+                if allowed is not None:
+                    found += rows.size
             # Unfiltered searches take one probe round — but ONLY
             # if it scored anything: Lloyd leaves empty cells, and
             # a query whose top-nprobe centroids are all empty
@@ -1059,7 +1243,7 @@ class ResidentANN:
             # candidates exist, like the filtered iterative scan.
             if (allowed is None and score_parts) or found >= k:
                 break
-        return score_parts, id_parts, row_parts, probed, cent_scores
+        return score_parts, row_parts, probed, cent_scores
 
     def probe_scan(self, query_vec, k: int = 10, allowed=None,
                    nprobe: int | None = None):
@@ -1080,39 +1264,19 @@ class ResidentANN:
 
         None when the index has no IVF geometry (exact/HNSW, or a
         pre-r8 saved index without cell_radius)."""
-        if self.centroids is None or getattr(self, "cell_radius", None) \
-                is None:
+        if self.centroids is None or self.cell_radius is None:
             return None
-        q = np.asarray(query_vec, dtype=np.float32)
-        qn = np.linalg.norm(q)
-        if qn:
-            q = q / qn
-        score_parts, _, row_parts, probed, cs = self._ivf_probe(
-            q, k, allowed, nprobe
+        score_parts, row_parts, probed, cs = self._ivf_probe(
+            _unit_query(query_vec), k, allowed, nprobe
         )
-        if score_parts:
-            scores = np.concatenate(score_parts)
-            rows = np.concatenate(row_parts)
-        else:
-            scores = np.empty(0, dtype=np.float32)
-            rows = np.empty(0, dtype=np.int64)
+        scores = np.concatenate([np.empty(0, np.float32), *score_parts])
+        rows = np.concatenate([np.empty(0, np.int64), *row_parts])
         un = ~probed
         bound = (
             float(np.max(cs[un] + self.cell_radius[un]))
             if un.any() else float("-inf")
         )
         return rows, scores, bound
-
-    def row_mask(self, allowed_ids) -> np.ndarray:
-        """Boolean mask in THIS index's row order (rows are clustered
-        by centroid after the build, so caller-order masks don't align)
-        for an id collection — the bridge the served filter path uses."""
-        arr = (
-            allowed_ids
-            if isinstance(allowed_ids, np.ndarray)
-            else np.asarray(list(allowed_ids))
-        )
-        return np.isin(self.ids, arr)
 
     def search(
         self, query_vec, k: int = 10, allowed=None,
@@ -1132,39 +1296,21 @@ class ResidentANN:
         ``nprobe`` overrides the build-time probe count for THIS call —
         the adaptive-overfetch hook (candidate-bounded hybrid escalates
         probes when its shortlist boundary can't prove top-k safety)."""
-        q = np.asarray(query_vec, dtype=np.float32)
-        qn = np.linalg.norm(q)
-        if qn:
-            q = q / qn
-        if self.centroids is None:
-            if allowed is not None:
-                idxs = np.flatnonzero(allowed)
-                if not idxs.size:
-                    return []
-                # mostly-permissive filter: full view matvec beats the
-                # gather copy; selective filter: score only its rows
-                if idxs.size * 2 > len(self.mat):
-                    scores = (self.mat @ q)[idxs]
-                else:
-                    scores = self.mat[idxs] @ q
-                ids = self.ids[idxs]
-            else:
-                ids = self.ids
-                scores = self.mat @ q
-        else:
-            score_parts, id_parts, _, _, _ = self._ivf_probe(
-                q, k, allowed, nprobe
-            )
+        q = _unit_query(query_vec)
+        if self.centroids is not None:
+            score_parts, row_parts, _, _ = self._ivf_probe(q, k, allowed, nprobe)
             if not score_parts:
                 return []
-            scores = np.concatenate(score_parts)
-            ids = np.concatenate(id_parts)
-        if len(ids) == 0:
-            return []
-        kk = min(k, len(scores))
-        top = np.argpartition(-scores, kk - 1)[:kk]
-        top = top[np.argsort(-scores[top], kind="stable")]
-        return [(ids[i].item(), float(scores[i])) for i in top]
+            rows = np.concatenate(row_parts)
+            return self._top_k(np.concatenate(score_parts), self.ids[rows], k)
+        if allowed is None:
+            return self._top_k(self.mat @ q, self.ids, k)
+        idxs = np.flatnonzero(allowed)
+        # mostly-permissive filter: full view matvec beats the gather
+        # copy; selective filter: score only its rows
+        if idxs.size * 2 > len(self.mat):
+            return self._top_k((self.mat @ q)[idxs], self.ids[idxs], k)
+        return self._top_k(self.mat[idxs] @ q, self.ids[idxs], k)
 
     def search_df(self, spark: SparkSession, query_vec, k: int = 10) -> DataFrame:
         """DataFrame wrapper for API parity with knn_exact."""
@@ -1179,51 +1325,8 @@ class ResidentANN:
         )
         return spark.createDataFrame(rows, schema)
 
-    def save(self, path: str) -> None:
-        """Persist the resident index to a parquet directory (Arrow,
-        no Spark needed) — the durability half of the reference's
-        index story: a pgvector ivfflat index lives in Postgres pages
-        and survives restarts, so the serving tier needs the same
-        build-once/reload-forever contract. Spark builds the index
-        distributed; any serving host `ResidentANN.load()`s it without
-        re-fitting centroids or re-assigning rows."""
-        _save_resident(
-            path,
-            kind="ivf" if self.centroids is not None else "exact",
-            ids=self.ids,
-            mat=self.mat,
-            meta={"nprobe": self.nprobe},
-            extra=(
-                {}
-                if self.centroids is None
-                else {
-                    "centroids": self.centroids,
-                    "assign": self.assign,
-                    "offsets": self.offsets,
-                    "cell_radius": self.cell_radius,
-                }
-            ),
-        )
 
-    @classmethod
-    def load(cls, path: str) -> "ResidentANN":
-        """Reload a `save()`d index: O(bytes) columnar read, zero
-        refit/reassign — rows come back already centroid-clustered."""
-        meta, arrays = _load_resident(path, expect=("exact", "ivf"))
-        idx = cls.__new__(cls)
-        idx.ids, idx.mat = arrays["ids"], arrays["mat"]
-        idx.nprobe = int(meta["nprobe"])
-        idx.centroids = arrays.get("centroids")
-        idx.assign = arrays.get("assign")
-        # pre-r8 saved indexes lack cell geometry: probe_scan returns
-        # None and callers fall back to the shortlist-min bound
-        idx.cell_radius = arrays.get("cell_radius")
-        if "offsets" in arrays:
-            idx.offsets = arrays["offsets"]
-        return idx
-
-
-class ResidentHNSW:
+class ResidentHNSW(_ResidentTier):
     """Driver-resident HNSW graph index — the analog of the reference's
     DEFAULT ANN index (pgvector HNSW `vector_cosine_ops` with per-field
     m / ef_construction, SURVEY §4 / pipeline.rs:61-94). Same role
@@ -1260,6 +1363,11 @@ class ResidentHNSW:
     across serving processes).
     """
 
+    _KINDS = ("hnsw",)
+    _META = ("m", "keep_pruned", "shrink", "entry", "max_level")
+    _META_DEFAULTS = {"shrink": "distance"}  # pre-r5 graphs
+    _ARRAYS = ("levels", "nbr0", "cnt0")
+
     def __init__(
         self,
         df_or_mat,
@@ -1277,18 +1385,8 @@ class ResidentHNSW:
         if shrink not in ("heuristic", "distance"):
             raise ValueError(f"unknown shrink policy {shrink!r}")
         self.shrink = shrink
-        if isinstance(df_or_mat, tuple):
-            self.ids, mat = df_or_mat
-            mat = np.asarray(mat, dtype=np.float32)
-        else:
-            pdf = df_or_mat.select(id_col, vec_col).toPandas()
-            self.ids = pdf[id_col].to_numpy()
-            mat = np.asarray(
-                [np.asarray(v, dtype=np.float32) for v in pdf[vec_col]]
-            )
-        norms = np.linalg.norm(mat, axis=1, keepdims=True)
-        norms[norms == 0.0] = 1.0
-        self.mat = np.ascontiguousarray(mat / norms)
+        self.ids, mat = _fetch_ids_mat(df_or_mat, id_col, vec_col)
+        self.mat = np.ascontiguousarray(_unit_rows(mat))
         self.m = m
         self.ef_c = max(ef_construction, m + 1)
         self._r = 2 * m  # reverse-list cap
@@ -1327,7 +1425,6 @@ class ResidentHNSW:
     @staticmethod
     def _resolve_workers(workers: int | None, n: int) -> int:
         import multiprocessing as mp
-        import os
 
         if "fork" not in mp.get_all_start_methods():
             return 1
@@ -1684,16 +1781,6 @@ class ResidentHNSW:
 
     # -- api ---------------------------------------------------------------
 
-    def row_mask(self, allowed_ids) -> np.ndarray:
-        """Boolean mask in graph row (insertion) order for an id
-        collection — the served filter path's bridge."""
-        arr = (
-            allowed_ids
-            if isinstance(allowed_ids, np.ndarray)
-            else np.asarray(list(allowed_ids))
-        )
-        return np.isin(self.ids, arr)
-
     def search(self, query_vec, k: int = 10, ef: int | None = None,
                allowed=None, upper_ef: int | None = None):
         """Top-k (id, cosine) via MULTI-SEED descent + level-0 beam.
@@ -1794,11 +1881,7 @@ class ResidentHNSW:
     def _masked_exact(self, q: np.ndarray, idxs: np.ndarray, k: int):
         """Exact top-k over a row subset — the selective-filter fast
         path and the connectivity backstop of filtered search."""
-        scores = self.mat[idxs] @ q
-        kk = min(k, len(scores))
-        top = np.argpartition(-scores, kk - 1)[:kk]
-        top = top[np.argsort(-scores[top], kind="stable")]
-        return [(self.ids[idxs[i]].item(), float(scores[i])) for i in top]
+        return self._top_k(self.mat[idxs] @ q, self.ids[idxs], k)
 
     def add(self, new_ids, new_vecs, seed: int = 43) -> None:
         """Incremental inserts into the live graph — the serving-tier
@@ -1840,16 +1923,12 @@ class ResidentHNSW:
             self._apply(node, self._plan(self.mat[node], lvl))
         self._repair_connectivity()
 
+    # -- durability: save() writes ~(d·4 + 2M·4) B/node; a load()ed graph
+    # is search- and add()-identical to the builder
 
-    def save(self, path: str) -> None:
-        """Persist the graph to a parquet directory (Arrow, no Spark
-        needed on the serving host). pgvector's HNSW is durable — it
-        lives in Postgres pages, so a restart never pays the O(n·ef_c)
-        construction again (the reference's 68-minute-build ivfflat
-        lesson applies doubly to HNSW). Same contract here: Spark
-        builds the graph once (fork-parallel), `save()` writes ~
-        (d·4 + 2M·4) B/node columnar, any serving process `load()`s it
-        back in O(bytes) and serves/`add()`s as if it had built it."""
+    def _state(self) -> tuple[dict, dict]:
+        meta, arrays = super()._state()
+        meta["ef_construction"] = self.ef_c
         up_level, up_node, up_off, up_flat = [], [], [0], []
         for lvl in range(1, self.max_level + 1):
             for node, lst in self.upper[lvl].items():
@@ -1857,108 +1936,24 @@ class ResidentHNSW:
                 up_node.append(int(node))
                 up_flat.extend(int(x) for x in lst)
                 up_off.append(len(up_flat))
-        _save_resident(
-            path,
-            kind="hnsw",
-            ids=self.ids,
-            mat=self.mat,
-            meta={
-                "m": self.m,
-                "ef_construction": self.ef_c,
-                "keep_pruned": bool(self.keep_pruned),
-                "shrink": self.shrink,
-                "entry": int(self.entry),
-                "max_level": int(self.max_level),
-            },
-            extra={
-                "levels": self.levels,
-                "nbr0": self.nbr0,
-                "cnt0": self.cnt0,
-                "up_level": np.asarray(up_level, dtype=np.int32),
-                "up_node": np.asarray(up_node, dtype=np.int64),
-                "up_off": np.asarray(up_off, dtype=np.int64),
-                "up_flat": np.asarray(up_flat, dtype=np.int32),
-            },
+        arrays.update(
+            up_level=np.asarray(up_level, dtype=np.int32),
+            up_node=np.asarray(up_node, dtype=np.int64),
+            up_off=np.asarray(up_off, dtype=np.int64),
+            up_flat=np.asarray(up_flat, dtype=np.int32),
         )
+        return meta, arrays
 
-    @classmethod
-    def load(cls, path: str) -> "ResidentHNSW":
-        """Rebuild-free reload of a `save()`d graph: the loaded object
-        is search/`add()`-identical to the builder (adjacency, entry
-        point, level assignment, and pruning caps all round-trip)."""
-        meta, arrays = _load_resident(path, expect=("hnsw",))
-        idx = cls.__new__(cls)
-        idx.ids, idx.mat = arrays["ids"], arrays["mat"]
-        idx.m = int(meta["m"])
-        idx.ef_c = int(meta["ef_construction"])
-        idx.keep_pruned = bool(meta["keep_pruned"])
-        idx.shrink = str(meta.get("shrink", "distance"))  # pre-r5 graphs
-        idx._r = 2 * idx.m
-        idx.entry = int(meta["entry"])
-        idx.max_level = int(meta["max_level"])
-        idx.levels = arrays["levels"]
-        idx.nbr0 = arrays["nbr0"]
-        idx.cnt0 = arrays["cnt0"]
-        idx.upper = [None] + [dict() for _ in range(idx.max_level)]
-        up_level, up_node = arrays["up_level"], arrays["up_node"]
-        up_off, up_flat = arrays["up_off"], arrays["up_flat"]
-        for i in range(len(up_level)):
-            idx.upper[int(up_level[i])][int(up_node[i])] = [
-                int(x) for x in up_flat[up_off[i] : up_off[i + 1]]
-            ]
-        idx._seen = np.zeros(len(idx.mat), dtype=np.int64)
-        idx._stamp = 0
-        return idx
-
-
-def _save_resident(path, kind, ids, mat, meta, extra):
-    """Columnar store for a resident index: one parquet file per array
-    (flattened; dtype+shape in meta.json) + the scalar config. Arrow
-    only — serving hosts load without a SparkSession."""
-    import json
-    import os
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    os.makedirs(path, exist_ok=True)
-    shapes = {}
-    for name, arr in {"ids": ids, "mat": mat, **extra}.items():
-        a = np.ascontiguousarray(arr)
-        if a.dtype.kind in ("O", "U", "S"):  # e.g. string ids
-            col = pa.array([str(x) for x in a.reshape(-1)])
-            shapes[name] = {"dtype": "str", "shape": list(a.shape)}
-        else:
-            col = pa.array(a.reshape(-1))
-            shapes[name] = {"dtype": str(a.dtype), "shape": list(a.shape)}
-        pq.write_table(
-            pa.table({name: col}), os.path.join(path, f"{name}.parquet")
-        )
-    with open(os.path.join(path, "meta.json"), "w") as f:
-        json.dump({"kind": kind, "meta": meta, "arrays": shapes}, f)
-
-
-def _load_resident(path, expect):
-    import json
-    import os
-
-    import pyarrow.parquet as pq
-
-    with open(os.path.join(path, "meta.json")) as f:
-        head = json.load(f)
-    if head["kind"] not in expect:
-        raise ValueError(
-            f"index at {path} is kind={head['kind']!r}, expected {expect}"
-        )
-    arrays = {}
-    for name, spec in head["arrays"].items():
-        col = pq.read_table(os.path.join(path, f"{name}.parquet"))[name]
-        if spec["dtype"] == "str":
-            a = np.asarray(col.to_pylist(), dtype=object)
-        else:
-            a = col.to_numpy(zero_copy_only=False).astype(spec["dtype"])
-        arrays[name] = a.reshape(spec["shape"])
-    return head["meta"], arrays
+    def _loaded(self, meta: dict, arrays: dict) -> None:
+        self.ef_c = int(meta["ef_construction"])
+        self._r = 2 * self.m
+        self.upper = [None] + [dict() for _ in range(self.max_level)]
+        off, flat = arrays["up_off"], arrays["up_flat"]
+        levels, nodes = arrays["up_level"].tolist(), arrays["up_node"].tolist()
+        for i, (lvl, node) in enumerate(zip(levels, nodes)):
+            self.upper[lvl][node] = flat[off[i] : off[i + 1]].tolist()
+        self._seen = np.zeros(len(self.mat), dtype=np.int64)
+        self._stamp = 0
 
 
 _EMPTY_I32 = np.zeros(0, dtype=np.int32)
@@ -1977,12 +1972,6 @@ def _hnsw_plan_chunk(nodes: np.ndarray):
     return out
 
 
-# byte→popcount lookup (numpy < 2.0 lacks np.bitwise_count)
-_POPCNT8 = np.unpackbits(
-    np.arange(256, dtype=np.uint8)[:, None], axis=1
-).sum(axis=1).astype(np.uint8)
-
-
 def _default_rescore_window(k: int, n: int) -> int:
     """Recall-first default shortlist width for the quantized tiers
     (BQ/PQ/SQ8), from the measured rescore-window frontiers at
@@ -1995,7 +1984,97 @@ def _default_rescore_window(k: int, n: int) -> int:
     return max(8 * k, 64, min(20_000, n // 500))
 
 
-class ResidentBQ:
+class _QuantizedTier(_ResidentTier):
+    """Two-stage tiers (BQ, PQ, SQ8): a compact per-row code scored by a
+    candidate kernel (``_dist``: smaller is nearer) picks a shortlist,
+    and ``search`` re-ranks it exactly from the float rows. Without the
+    float rows (``keep_floats=False``, or ``load(floats=False)``) the
+    compact state alone still serves ``shortlist``."""
+
+    _COMPACT = "codes"  # what a floats-less host keeps, for the error
+
+    def _rescore_query(self, query_vec) -> np.ndarray:
+        """The float64 query ``search`` rescores against."""
+        return _unit_query(query_vec, np.float64)
+
+    def _exact_scores(self, rows: np.ndarray, q: np.ndarray) -> np.ndarray:
+        """Full-precision scores (bigger is better) of float rows."""
+        return rows @ q
+
+    def _shortlist_rows(self, q, r: int, allowed=None, **kernel):
+        """(row positions, distances) of the top-r by (dist, id) —
+        array-internal: Python tuples only materialize at the public
+        API (at r=2000 the tuple form measured ~3 ms of pure conversion
+        per query)."""
+        d = self._dist(q, **kernel)
+        rows = None if allowed is None else np.flatnonzero(allowed)
+        return self._top_r(d if rows is None else d[rows], r, rows)
+
+    def _top_r(self, d: np.ndarray, r: int, rows=None):
+        """Rows and distances of the r smallest ``d`` by (dist asc, id
+        asc); ``rows`` maps positions of ``d`` to index rows (None: ``d``
+        covers every row). A partition finds the r-th distance, then
+        every candidate at or under it is sorted exactly, so rows tied
+        at the boundary qualify in id order and ``shortlist(q, r)`` is
+        always the first r of a longer shortlist. O(n) + a sort of the
+        survivors: a full-corpus lexsort per query measured ~40× slower
+        at 1M rows for identical output."""
+        r = min(r, len(d))
+        if r < len(d):
+            sel = np.flatnonzero(d <= np.partition(d, r - 1)[r - 1])
+        else:
+            sel = np.arange(len(d))
+        rows, d = (sel if rows is None else rows[sel]), d[sel]
+        order = np.lexsort((self.ids[rows], d))[:r]
+        return rows[order], d[order]
+
+    def shortlist(self, query_vec, r: int = 64, allowed=None) -> list[tuple]:
+        """Top-r (id, distance) by (distance asc, id asc) — the exact,
+        deterministic candidate stage. ``allowed`` is a boolean row mask
+        (see ``row_mask``) for filtered serving."""
+        rows, d = self._shortlist_rows(self._kernel_query(query_vec), r, allowed)
+        return list(zip(self.ids[rows].tolist(), d.tolist()))
+
+    def search(self, query_vec, k: int = 10, rescore_k: int | None = None,
+               allowed=None) -> list[tuple]:
+        """Two-stage top-k (id, score): a shortlist of ``rescore_k``
+        candidates (default ``_default_rescore_window``: n/500, clamped
+        to [max(8k, 64), 20000]), then an exact float64 rescore of the
+        float32-stored rows, score desc, ties by id. Candidate
+        generation is approximate by contract, but the RANKING of the
+        returned rows is full-precision (the ServedPipelineIndex
+        discipline). Requires the float rows."""
+        if self.mat is None:
+            raise ValueError(
+                f"{self._COMPACT}-only {type(self).__name__} cannot rescore; "
+                "use shortlist() or build/load with the float matrix"
+            )
+        q = self._rescore_query(query_vec)
+        rows, _ = self._shortlist_rows(
+            self._kernel_query(query_vec, q),
+            rescore_k or _default_rescore_window(k, len(self.ids)),
+            allowed,
+        )
+        scores = self._exact_scores(self.mat[rows].astype(np.float64), q)
+        ids = self.ids[rows]
+        order = np.lexsort((ids, -scores))[:k]
+        return list(zip(ids[order].tolist(), scores[order].tolist()))
+
+    def _state(self) -> tuple[dict, dict]:
+        meta, arrays = super()._state()
+        meta["has_floats"] = self.mat is not None
+        return meta, arrays
+
+    @classmethod
+    def load(cls, path: str, floats: bool = True) -> Self:
+        """Reload a ``save()``d index; ``floats=False`` loads only the
+        compact state (bits/codes): ``shortlist`` serves from it and
+        ``search`` raises — the one-host-per-100TB-corpus
+        configuration. A path holding another kind raises ValueError."""
+        return cls._load(path, floats)
+
+
+class ResidentBQ(_QuantizedTier):
     """Driver-resident BINARY-QUANTIZED serving tier — the pgvector 0.7
     `binary_quantize(embedding)::bit(n)` + rerank recipe
     (`ORDER BY bq <~> binary_quantize($1) LIMIT R` re-ranked by
@@ -2020,6 +2099,11 @@ class ResidentBQ:
     recall/latency dial, exactly as pgvector documents.
     """
 
+    _KINDS = ("bq",)
+    _META = ("dim",)
+    _ARRAYS = ("bits",)
+    _COMPACT = "bits"
+
     def __init__(
         self,
         df,
@@ -2027,38 +2111,22 @@ class ResidentBQ:
         id_col: str = "vec_id",
         keep_floats: bool = True,
     ):
-        if isinstance(df, tuple):
-            self.ids, mat = df
-            mat = np.asarray(mat, dtype=np.float32)
-        else:
-            pdf = df.select(id_col, vec_col).toPandas()
-            self.ids = pdf[id_col].to_numpy()
-            mat = np.asarray(
-                [np.asarray(v, dtype=np.float32) for v in pdf[vec_col]]
-            )
-        self.dim = int(mat.shape[1]) if mat.ndim == 2 and len(mat) else 0
+        self.ids, mat = _fetch_ids_mat(df, id_col, vec_col)
+        self.dim = int(mat.shape[1]) if len(mat) else 0
         # pack sign bits BEFORE normalization (sign is invariant under
         # positive scaling, but packing the raw values keeps the
         # convention textually identical to binary_signature's `> 0`).
         # Rows are padded to 8-byte multiples so the Hamming kernel can
         # view them as uint64 words (zero padding never flips a bit).
-        if len(mat):
-            packed = np.packbits(mat > 0, axis=1, bitorder="little")
-            pad = (-packed.shape[1]) % 8
-            if pad:
-                packed = np.concatenate(
-                    [packed, np.zeros((len(packed), pad), dtype=np.uint8)],
-                    axis=1,
-                )
-            self.bits = np.ascontiguousarray(packed)
-        else:
-            self.bits = np.zeros((0, 0), dtype=np.uint8)
-        if keep_floats:
-            norms = np.linalg.norm(mat, axis=1, keepdims=True)
-            norms[norms == 0.0] = 1.0
-            self.mat = mat / norms
-        else:
-            self.mat = None  # bits-only host: shortlist() still serves
+        packed = np.packbits(mat > 0, axis=1, bitorder="little")
+        self.bits = np.pad(packed, ((0, 0), (0, (-packed.shape[1]) % 8)))
+        # bits-only host (keep_floats=False): shortlist() still serves
+        self.mat = _unit_rows(mat) if keep_floats else None
+
+    def _kernel_query(self, query_vec, q=None) -> np.ndarray:
+        return np.packbits(
+            np.asarray(query_vec, dtype=np.float32) > 0, bitorder="little"
+        )
 
     # -- scoring -----------------------------------------------------------
 
@@ -2121,132 +2189,10 @@ class ResidentBQ:
             out[lo:hi] = v.sum(axis=1, dtype=np.int32)
         return out
 
-    def shortlist(
-        self, query_vec, r: int = 64, allowed=None
-    ) -> list[tuple]:
-        """Top-r (id, hamming) by (hamming asc, id asc) — the exact,
-        integer-deterministic candidate stage. ``allowed`` is a boolean
-        row mask (see ResidentANN.row_mask) for filtered serving.
-
-        Selection is O(n) argpartition + an exact sort of only the
-        boundary-tied rows (Hamming has ≤ dim+1 distinct values, so
-        ties are structural): a full-corpus lexsort per query measured
-        ~40× slower at 1M rows for identical output."""
-        q = np.asarray(query_vec, dtype=np.float32)
-        qbits = np.packbits(q > 0, bitorder="little")
-        h = self._hamming(qbits)
-        if allowed is not None:
-            rows = np.flatnonzero(allowed)
-            if not rows.size:
-                return []
-            h = h[rows]
-            ids = self.ids[rows]
-        else:
-            ids = self.ids
-        r = min(r, len(h))
-        if r == len(h):
-            order = np.lexsort((ids, h))
-        else:
-            # threshold via partition, then deterministically resolve
-            # the tied boundary: rows strictly below the r-th distance
-            # all qualify; tied rows qualify in id order
-            part = np.argpartition(h, r - 1)
-            thresh = int(h[part[r - 1]])
-            sel = np.flatnonzero(h <= thresh)
-            order = sel[np.lexsort((ids[sel], h[sel]))][:r]
-        return [(ids[i].item(), int(h[i])) for i in order]
-
-    def row_mask(self, allowed_ids) -> np.ndarray:
-        arr = (
-            allowed_ids
-            if isinstance(allowed_ids, np.ndarray)
-            else np.asarray(list(allowed_ids))
-        )
-        return np.isin(self.ids, arr)
-
-    def search(
-        self, query_vec, k: int = 10, rescore_k: int | None = None,
-        allowed=None,
-    ) -> list[tuple]:
-        """Two-stage top-k (id, cosine): Hamming shortlist of
-        ``rescore_k`` (default max(8k, 64)) candidates, exact float
-        rescore, ties by id. Requires keep_floats=True (or a loaded
-        index with its matrix)."""
-        if self.mat is None:
-            raise ValueError(
-                "bits-only ResidentBQ cannot rescore; use shortlist() "
-                "or build/load with the float matrix"
-            )
-        r = rescore_k or _default_rescore_window(k, len(self.ids))
-        short = self.shortlist(query_vec, r=r, allowed=allowed)
-        if not short:
-            return []
-        pos = getattr(self, "_pos", None)
-        if pos is None:  # built once, reused every query
-            pos = self._pos = {int(i): p for p, i in enumerate(self.ids)}
-        rows = np.asarray([pos[int(i)] for i, _ in short])
-        q = np.asarray(query_vec, dtype=np.float64)
-        qn = np.linalg.norm(q)
-        if qn:
-            q = q / qn
-        # float64 rescore of the float32-stored values — candidate
-        # generation is approximate by contract, but the RANKING of the
-        # returned rows is full-precision (the ServedPipelineIndex
-        # discipline)
-        scores = self.mat[rows].astype(np.float64) @ q
-        sub_ids = np.asarray([i for i, _ in short])
-        order = np.lexsort((sub_ids, -scores))[: min(k, len(rows))]
-        return [(sub_ids[i].item(), float(scores[i])) for i in order]
-
-    # -- durability --------------------------------------------------------
-
-    def save(self, path: str) -> None:
-        """Persist packed bits (+ float matrix when resident) — the
-        restart story of the other resident tiers. A bits-only load
-        serves shortlists from d/8 B/vector of state."""
-        extra = {"bits": self.bits}
-        mat = self.mat if self.mat is not None else np.zeros((0, 0), np.float32)
-        _save_resident(
-            path,
-            kind="bq",
-            ids=self.ids,
-            mat=mat,
-            meta={"dim": self.dim, "has_floats": self.mat is not None},
-            extra=extra,
-        )
-
-    @classmethod
-    def load(cls, path: str, floats: bool = True) -> "ResidentBQ":
-        """Reload; ``floats=False`` loads the bits-only serving state
-        (the one-host-per-100TB-corpus configuration)."""
-        meta, arrays = _load_resident(path, expect=("bq",))
-        idx = cls.__new__(cls)
-        idx.ids = arrays["ids"]
-        idx.bits = arrays["bits"].astype(np.uint8)
-        idx.dim = int(meta["dim"])
-        idx.mat = (
-            arrays["mat"].astype(np.float32)
-            if floats and meta.get("has_floats")
-            else None
-        )
-        return idx
+    _dist = _hamming
 
 
-def _fetch_ids_mat(df, id_col: str, vec_col: str, dtype=np.float32):
-    """Shared (ids, matrix) fetch for the resident tiers: accepts a
-    prebuilt (ids, mat) tuple (an already-resident shard) or a
-    DataFrame, in which case the corpus moves through Arrow ONCE."""
-    if isinstance(df, tuple):
-        ids, mat = df
-        return np.asarray(ids), np.asarray(mat, dtype=dtype)
-    pdf = df.select(id_col, vec_col).toPandas()
-    return (
-        pdf[id_col].to_numpy(),
-        np.asarray([np.asarray(v, dtype=dtype) for v in pdf[vec_col]]),
-    )
-
-
-class ResidentPQ:
+class ResidentPQ(_QuantizedTier):
     """Driver-resident PRODUCT-QUANTIZED serving tier (Jégou et al.,
     "Product Quantization for Nearest Neighbor Search", TPAMI 2011),
     resident like ResidentANN/BQ. ``nlist>0`` composes the coarse IVF
@@ -2277,6 +2223,10 @@ class ResidentPQ:
     discipline), so the rescore window is the recall/latency dial.
     """
 
+    _KINDS = ("pq",)
+    _META = ("dim", "m", "k", "nprobe")
+    _META_DEFAULTS = {"nprobe": 8}
+    _ARRAYS = ("codes", "codebooks", "centroids", "offsets")
     _CHUNK = 1 << 16
 
     def __init__(
@@ -2295,52 +2245,24 @@ class ResidentPQ:
         if k_codebook > 256:
             raise ValueError("k_codebook > 256 would not fit uint8 codes")
         self.ids, mat = _fetch_ids_mat(df, id_col, vec_col)
-        norms = np.linalg.norm(mat, axis=1, keepdims=True)
-        norms[norms == 0.0] = 1.0
-        unit = (mat / norms).astype(np.float32)
-        self.dim = int(unit.shape[1]) if unit.ndim == 2 and len(unit) else 0
+        unit = _unit_rows(mat)
+        self.dim = int(unit.shape[1]) if len(unit) else 0
         if self.dim % m:
             raise ValueError(f"dim {self.dim} not divisible by m={m}")
         self.m, self.k = int(m), int(k_codebook)
         self.sub = self.dim // self.m if self.m else 0
         self.nprobe = nprobe
-        self.centroids = None
-        if not len(unit):
-            self.mat = unit if keep_floats else None
-            self.codebooks = np.zeros(
-                (self.m, self.k, self.sub), dtype=np.float32
-            )
-            self.codes = np.zeros((0, self.m), dtype=np.uint8)
-            return
-        if nlist:
+        self.centroids = self.offsets = None
+        if nlist and len(unit):
             # IVF-PQ (the FAISS flagship composition): coarse centroids
             # prune the ADC scan to nprobe contiguous cells — codes are
             # clustered by centroid exactly like ResidentANN's rows, so
             # a probe gathers code SLICES, never the whole code matrix.
             # (Non-residual variant: codes quantize the vectors, not
-            # x − centroid — FAISS's by_residual=False.)
-            rng0 = np.random.default_rng(seed + 1)
-            fit_cap0 = max(nlist * 64, 16384)
-            fit0 = (
-                unit
-                if len(unit) <= fit_cap0
-                else unit[rng0.choice(len(unit), fit_cap0, replace=False)]
-            )
-            cent = _lloyd(fit0.astype(np.float64), nlist, seed + 1, 20)
-            cn = np.linalg.norm(cent, axis=1, keepdims=True)
-            cn[cn == 0.0] = 1.0
-            self.centroids = (cent / cn).astype(np.float32)
-            assign = np.empty(len(unit), dtype=np.int64)
-            step = max(1, 2**24 // max(nlist, 1))
-            for lo in range(0, len(unit), step):
-                assign[lo : lo + step] = np.argmax(
-                    unit[lo : lo + step] @ self.centroids.T, axis=1
-                )
-            order = np.argsort(assign, kind="stable")
+            # x − centroid — FAISS's by_residual=False.) The coarse fit
+            # is seeded seed + 1, the codebook sample seed.
+            self.centroids, order, _, _, self.offsets = _ivf_fit(unit, nlist, seed + 1)
             self.ids, unit = self.ids[order], unit[order]
-            self.offsets = np.searchsorted(
-                assign[order], np.arange(nlist + 1)
-            )
         self.mat = unit if keep_floats else None
         # bounded-sample fit (the fit_pq / fit_ivf_centroids contract:
         # codebook quality saturates long before the corpus does).
@@ -2348,13 +2270,8 @@ class ResidentPQ:
         # distance block over a THIN inner dim is memory-bound, so
         # float64 on a 64k sample measured ~6 s/subspace (~50 s/build
         # at m=8) for identical codebooks
-        rng = np.random.default_rng(seed)
-        fit_cap = min(max_fit, max(64 * self.k, 8192))
-        fit = (
-            unit
-            if len(unit) <= fit_cap
-            else unit[rng.choice(len(unit), fit_cap, replace=False)]
-        )
+        cap = min(max_fit, max(64 * self.k, 8192))
+        fit = _sample(unit, cap, np.random.default_rng(seed))
         k_eff = min(self.k, len(fit))
         cbs = np.zeros((self.m, self.k, self.sub), dtype=np.float32)
         for j in range(self.m):
@@ -2378,6 +2295,12 @@ class ResidentPQ:
                 scores *= 2.0
                 scores -= c2[j]
                 self.codes[lo:hi, j] = np.argmax(scores, axis=1)
+
+    def _loaded(self, meta: dict, arrays: dict) -> None:
+        self.sub = self.dim // self.m if self.m else 0
+
+    def _kernel_query(self, query_vec, q=None) -> np.ndarray:
+        return _unit_query(query_vec) if q is None else q.astype(np.float32)
 
     # -- scoring -----------------------------------------------------------
 
@@ -2411,173 +2334,35 @@ class ResidentPQ:
             out[lo:hi] = flat.take(off[lo:hi]).sum(axis=1, dtype=np.float32)
         return out
 
+    _dist = _adc
+
     def _shortlist_rows(self, q32: np.ndarray, r: int, allowed=None):
-        """(row positions, adc dist²) of the top-r by (dist, id) — the
-        array-internal candidate stage (Python tuples only materialize
-        at the public API; at r=2000 the tuple/dict form measured ~3 ms
-        of pure conversion per query). With coarse centroids (IVF-PQ),
-        ADC runs only over the probed cells' contiguous code slices,
-        expanding the probe batch (the iterative-scan discipline) until
-        r candidates surface or the lists run out."""
+        """With coarse centroids (IVF-PQ), ADC runs only over the probed
+        cells' contiguous code slices, expanding the probe batch (the
+        iterative-scan discipline) until r candidates surface or the
+        lists run out; the flat index scores every row."""
         if self.centroids is None:
-            d = self._adc(q32)
-            if allowed is not None:
-                cand = np.flatnonzero(allowed)
-                if not cand.size:
-                    return cand, d[:0]
-                dc = d[cand]
-            else:
-                cand, dc = None, d
-        else:
-            flat = self._lut(q32)
-            off = self._offsets_matrix()
-            order = np.argsort(-(self.centroids @ q32))
-            nlist = len(self.centroids)
-            row_parts: list[np.ndarray] = []
-            d_parts: list[np.ndarray] = []
-            pos, batch, found = 0, self.nprobe, 0
-            while pos < nlist:
-                probe = np.sort(order[pos : pos + batch])
-                pos += batch
-                batch *= 2
-                runs: list[list[int]] = []
-                for c in probe:
-                    lo, hi = int(self.offsets[c]), int(self.offsets[c + 1])
-                    if lo == hi:
-                        continue
-                    if runs and runs[-1][1] == lo:
-                        runs[-1][1] = hi
-                    else:
-                        runs.append([lo, hi])
-                for lo, hi in runs:
-                    if allowed is None:
-                        rows = np.arange(lo, hi)
-                        block = off[lo:hi]
-                    else:
-                        sub = np.flatnonzero(allowed[lo:hi])
-                        if not sub.size:
-                            continue
-                        rows = lo + sub
-                        block = off[lo:hi][sub]
-                    row_parts.append(rows)
-                    d_parts.append(
-                        flat.take(block).sum(axis=1, dtype=np.float32)
-                    )
-                    found += len(rows)
-                if found >= r:
-                    break
-            if not row_parts:
-                return np.zeros(0, dtype=np.int64), np.zeros(0, np.float32)
-            cand = np.concatenate(row_parts)
-            dc = np.concatenate(d_parts)
-        r = min(r, len(dc))
-        if r == len(dc):
-            sel = np.arange(len(dc))
-        else:
-            sel = np.argpartition(dc, r - 1)[:r]
-        ids_sel = self.ids[cand[sel]] if cand is not None else self.ids[sel]
-        order = np.lexsort((ids_sel, dc[sel]))
-        sel = sel[order]
-        rows = cand[sel] if cand is not None else sel
-        return rows, dc[sel]
-
-    def shortlist(self, query_vec, r: int = 64, allowed=None) -> list[tuple]:
-        """Top-r (id, adc_dist²) ascending, deterministic id tie-break
-        — the candidate stage. ``allowed`` is a boolean row mask."""
-        q = np.asarray(query_vec, dtype=np.float32)
-        qn = np.linalg.norm(q)
-        if qn:
-            q = q / qn
-        rows, d = self._shortlist_rows(q, r, allowed)
-        return [(self.ids[i].item(), float(x)) for i, x in zip(rows, d)]
-
-    def search(
-        self,
-        query_vec,
-        k: int = 10,
-        rescore_k: int | None = None,
-        allowed=None,
-    ) -> list[tuple]:
-        """Two-stage top-k (id, cosine): ADC shortlist of ``rescore_k``
-        (default max(8k, 64)) candidates, exact float64 rescore, ties
-        by id. Requires the float matrix (keep_floats / loaded)."""
-        if self.mat is None:
-            raise ValueError(
-                "codes-only ResidentPQ cannot rescore; use shortlist() "
-                "or build/load with the float matrix"
-            )
-        q = np.asarray(query_vec, dtype=np.float64)
-        qn = np.linalg.norm(q)
-        if qn:
-            q = q / qn
-        rows, _ = self._shortlist_rows(
-            q.astype(np.float32),
-            rescore_k or _default_rescore_window(k, len(self.ids)),
-            allowed,
-        )
-        if not len(rows):
-            return []
-        scores = self.mat[rows].astype(np.float64) @ q
-        sub_ids = self.ids[rows]
-        order = np.lexsort((sub_ids, -scores))[: min(k, len(rows))]
-        return [(sub_ids[i].item(), float(scores[i])) for i in order]
-
-    def row_mask(self, allowed_ids) -> np.ndarray:
-        arr = (
-            allowed_ids
-            if isinstance(allowed_ids, np.ndarray)
-            else np.asarray(list(allowed_ids))
-        )
-        return np.isin(self.ids, arr)
-
-    # -- durability --------------------------------------------------------
-
-    def save(self, path: str) -> None:
-        """Persist codes + codebooks (+ floats when resident): a
-        codes-only reload serves shortlists from m B/vector of state."""
-        mat = self.mat if self.mat is not None else np.zeros((0, 0), np.float32)
-        extra = {"codes": self.codes, "codebooks": self.codebooks}
-        if self.centroids is not None:
-            extra["centroids"] = self.centroids
-            extra["offsets"] = self.offsets
-        _save_resident(
-            path,
-            kind="pq",
-            ids=self.ids,
-            mat=mat,
-            meta={
-                "dim": self.dim,
-                "m": self.m,
-                "k": self.k,
-                "nprobe": self.nprobe,
-                "has_floats": self.mat is not None,
-            },
-            extra=extra,
+            return super()._shortlist_rows(q32, r, allowed)
+        flat = self._lut(q32)
+        off = self._offsets_matrix()
+        row_parts = [np.zeros(0, dtype=np.int64)]
+        d_parts = [np.zeros(0, dtype=np.float32)]
+        found = 0
+        for _, runs in _probe_rounds(
+            self.centroids @ q32, self.offsets, self.nprobe, allowed
+        ):
+            for sel, rows in runs:
+                row_parts.append(rows)
+                d_parts.append(flat.take(off[sel]).sum(axis=1, dtype=np.float32))
+                found += len(rows)
+            if found >= r:
+                break
+        return self._top_r(
+            np.concatenate(d_parts), r, np.concatenate(row_parts)
         )
 
-    @classmethod
-    def load(cls, path: str, floats: bool = True) -> "ResidentPQ":
-        meta, arrays = _load_resident(path, expect=("pq",))
-        idx = cls.__new__(cls)
-        idx.ids = arrays["ids"]
-        idx.codes = arrays["codes"].astype(np.uint8)
-        idx.codebooks = arrays["codebooks"].astype(np.float32)
-        idx.dim, idx.m, idx.k = int(meta["dim"]), int(meta["m"]), int(meta["k"])
-        idx.sub = idx.dim // idx.m if idx.m else 0
-        idx.nprobe = int(meta.get("nprobe", 8))
-        idx.centroids = arrays.get("centroids")
-        if idx.centroids is not None:
-            idx.centroids = idx.centroids.astype(np.float32)
-            idx.offsets = arrays["offsets"]
-        idx.mat = (
-            arrays["mat"].astype(np.float32)
-            if floats and meta.get("has_floats")
-            else None
-        )
-        return idx
 
-
-class ResidentSQ8:
+class ResidentSQ8(_QuantizedTier):
     """Driver-resident SCALAR-QUANTIZED serving tier (FAISS SQ8 /
     pgvector-halfvec point on the bytes-per-vector curve): each
     dimension quantizes independently to one byte against per-dim
@@ -2602,7 +2387,13 @@ class ResidentSQ8:
     normalizes first and serves cosine like the other tiers.
     """
 
+    _KINDS = ("sq8",)
+    _META = ("dim", "normalize")
+    _ARRAYS = ("codes", "mn", "mx", "sc")
     _CHUNK = 1 << 14
+    # query-independent half of the algebraic ADC (see _adc_fast):
+    # Σ_d sc_d²·code_d² per row, built on the first query
+    _c2w = None
 
     def __init__(
         self,
@@ -2614,30 +2405,34 @@ class ResidentSQ8:
     ):
         self.ids, mat = _fetch_ids_mat(df, id_col, vec_col, dtype=np.float64)
         self.normalize = bool(normalize)
-        if normalize and len(mat):
-            norms = np.linalg.norm(mat, axis=1, keepdims=True)
-            norms[norms == 0.0] = 1.0
-            mat = mat / norms
-        self.dim = int(mat.shape[1]) if mat.ndim == 2 and len(mat) else 0
-        if len(mat):
-            self.mn = mat.min(axis=0)
-            self.mx = mat.max(axis=0)
-        else:
-            self.mn = np.zeros(self.dim)
-            self.mx = np.zeros(self.dim)
+        if normalize:
+            mat = _unit_rows(mat)
+        mat = mat if len(mat) else np.zeros((0, 0))
+        self.dim = int(mat.shape[1])
+        self.mn = mat.min(axis=0, initial=np.inf)
+        self.mx = mat.max(axis=0, initial=-np.inf)
         span = self.mx - self.mn
         safe = np.where(span == 0.0, 1.0, span)
-        if len(mat):
-            t = np.clip((mat - self.mn) / safe, 0.0, 1.0)
-            self.codes = np.floor(t * 255.0 + 0.5).astype(np.uint8)
-        else:
-            self.codes = np.zeros((0, self.dim), dtype=np.uint8)
+        t = np.clip((mat - self.mn) / safe, 0.0, 1.0)
+        self.codes = np.floor(t * 255.0 + 0.5).astype(np.uint8)
         # scale for reconstruction; zero-span dims reconstruct to mn
         self.sc = np.where(span == 0.0, 0.0, span / 255.0)
         self.mat = mat.astype(np.float32) if keep_floats else None
-        # query-independent half of the algebraic ADC (see _adc_fast):
-        # Σ_d sc_d²·code_d² per row, chunked uint8→float32 promotion
-        self._c2w = None
+
+    def _rescore_query(self, query_vec) -> np.ndarray:
+        if self.normalize:
+            return _unit_query(query_vec, np.float64)
+        return np.asarray(query_vec, dtype=np.float64)
+
+    def _kernel_query(self, query_vec, q=None) -> np.ndarray:
+        return self._rescore_query(query_vec) if q is None else q
+
+    def _exact_scores(self, rows: np.ndarray, q: np.ndarray) -> np.ndarray:
+        """Cosine when normalized, −L2² otherwise (bigger is better)."""
+        if self.normalize:
+            return rows @ q
+        dd = rows - q
+        return -(dd * dd).sum(axis=1)
 
     # -- scoring -----------------------------------------------------------
 
@@ -2679,28 +2474,8 @@ class ResidentSQ8:
             out[lo:hi] = cf @ u
         return const - 2.0 * out + self._c2w
 
-    def _shortlist_rows(self, q: np.ndarray, r: int, allowed=None,
-                        exact_adc: bool = False):
-        """(row positions, dist²) of the top-r by (dist, id) — array-
-        internal (see ResidentPQ._shortlist_rows)."""
-        d = self._adc_exact(q) if exact_adc else self._adc_fast(q)
-        if allowed is not None:
-            cand = np.flatnonzero(allowed)
-            if not cand.size:
-                return cand, d[:0]
-            dc = d[cand]
-        else:
-            cand, dc = None, d
-        r = min(r, len(dc))
-        if r == len(dc):
-            sel = np.arange(len(dc))
-        else:
-            sel = np.argpartition(dc, r - 1)[:r]
-        ids_sel = self.ids[cand[sel]] if cand is not None else self.ids[sel]
-        order = np.lexsort((ids_sel, dc[sel]))
-        sel = sel[order]
-        rows = cand[sel] if cand is not None else sel
-        return rows, dc[sel]
+    def _dist(self, q: np.ndarray, exact_adc: bool = False) -> np.ndarray:
+        return self._adc_exact(q) if exact_adc else self._adc_fast(q)
 
     def shortlist(
         self, query_vec, r: int = 64, allowed=None, exact_adc: bool = False
@@ -2708,88 +2483,7 @@ class ResidentSQ8:
         """Top-r (id, dist²) ascending over quantized reconstructions,
         id tie-break. ``exact_adc`` selects the term-by-term float64
         form (oracle parity); default is the algebraic fast path."""
-        q = np.asarray(query_vec, dtype=np.float64)
-        if self.normalize:
-            qn = np.linalg.norm(q)
-            if qn:
-                q = q / qn
-        rows, d = self._shortlist_rows(q, r, allowed, exact_adc)
-        return [(self.ids[i].item(), float(x)) for i, x in zip(rows, d)]
-
-    def search(
-        self,
-        query_vec,
-        k: int = 10,
-        rescore_k: int | None = None,
-        allowed=None,
-    ) -> list[tuple]:
-        """Two-stage top-k: SQ shortlist → exact rescore (cosine when
-        normalized, −L2² otherwise so bigger is always better), ties
-        by id."""
-        if self.mat is None:
-            raise ValueError(
-                "codes-only ResidentSQ8 cannot rescore; use shortlist()"
-            )
-        q = np.asarray(query_vec, dtype=np.float64)
-        if self.normalize:
-            qn = np.linalg.norm(q)
-            if qn:
-                q = q / qn
-        rows, _ = self._shortlist_rows(
-            q, rescore_k or _default_rescore_window(k, len(self.ids)), allowed
+        rows, d = self._shortlist_rows(
+            self._kernel_query(query_vec), r, allowed, exact_adc=exact_adc
         )
-        if not len(rows):
-            return []
-        sub = self.mat[rows].astype(np.float64)
-        if self.normalize:
-            scores = sub @ q
-        else:
-            dd = sub - q
-            scores = -(dd * dd).sum(axis=1)
-        sub_ids = self.ids[rows]
-        order = np.lexsort((sub_ids, -scores))[: min(k, len(rows))]
-        return [(sub_ids[i].item(), float(scores[i])) for i in order]
-
-    def row_mask(self, allowed_ids) -> np.ndarray:
-        arr = (
-            allowed_ids
-            if isinstance(allowed_ids, np.ndarray)
-            else np.asarray(list(allowed_ids))
-        )
-        return np.isin(self.ids, arr)
-
-    # -- durability --------------------------------------------------------
-
-    def save(self, path: str) -> None:
-        mat = self.mat if self.mat is not None else np.zeros((0, 0), np.float32)
-        _save_resident(
-            path,
-            kind="sq8",
-            ids=self.ids,
-            mat=mat,
-            meta={
-                "dim": self.dim,
-                "normalize": self.normalize,
-                "has_floats": self.mat is not None,
-            },
-            extra={"codes": self.codes, "mn": self.mn, "mx": self.mx,
-                   "sc": self.sc},
-        )
-
-    @classmethod
-    def load(cls, path: str, floats: bool = True) -> "ResidentSQ8":
-        meta, arrays = _load_resident(path, expect=("sq8",))
-        idx = cls.__new__(cls)
-        idx.ids = arrays["ids"]
-        idx.codes = arrays["codes"].astype(np.uint8)
-        idx.mn, idx.mx = arrays["mn"], arrays["mx"]
-        idx.sc = arrays["sc"]
-        idx.dim = int(meta["dim"])
-        idx.normalize = bool(meta["normalize"])
-        idx._c2w = None
-        idx.mat = (
-            arrays["mat"].astype(np.float32)
-            if floats and meta.get("has_floats")
-            else None
-        )
-        return idx
+        return list(zip(self.ids[rows].tolist(), d.tolist()))

@@ -850,37 +850,6 @@ def test_hnsw_save_load_round_trip(tmp_path):
         assert built.search(q, k=10, ef=80) == loaded.search(q, k=10, ef=80)
 
 
-def test_resident_ann_save_load_round_trip(tmp_path):
-    import numpy as np
-
-    from postgresml_spark.operators.similarity import ResidentANN
-
-    rng = np.random.default_rng(12)
-    mat = rng.normal(0, 1, (3000, 32)).astype(np.float32)
-    ids = np.arange(3000)
-    qs = [mat[i] + rng.normal(0, 0.01, 32) for i in range(10)]
-
-    ivf = ResidentANN((ids, mat), nlist=16, nprobe=4)
-    ivf.save(str(tmp_path / "ivf"))
-    ivf2 = ResidentANN.load(str(tmp_path / "ivf"))
-    for q in qs:
-        assert ivf.search(q, k=10) == ivf2.search(q, k=10)
-
-    exact = ResidentANN((ids, mat))
-    exact.save(str(tmp_path / "exact"))
-    exact2 = ResidentANN.load(str(tmp_path / "exact"))
-    for q in qs:
-        assert exact.search(q, k=10) == exact2.search(q, k=10)
-
-    # kind mismatch is a hard error, not a silent misread
-    import pytest as _pytest
-
-    from postgresml_spark.operators.similarity import ResidentHNSW
-
-    with _pytest.raises(ValueError, match="kind"):
-        ResidentHNSW.load(str(tmp_path / "ivf"))
-
-
 def test_ivf_full_probe_equals_exact_after_load(tmp_path):
     """nprobe=nlist probing on a loaded index is exhaustive, so it must
     reproduce exact brute-force top-k: same ids in rank order, scores
@@ -1068,10 +1037,10 @@ def test_resident_pq_contracts(spark, sf_dir):
       embeddings table (the production path q187's exhaustive closure
       deliberately bypasses),
     - exhaustive rescore ≡ exact brute force (the closure itself),
-    - codes-only host serves shortlists from m B/vector and refuses
-      to rescore with a named error,
-    - save/load round-trips bit-identically,
     - filtered mask restricts results.
+
+    Save/load, codes-only loads included, is pinned for every tier in
+    tests/test_resident_tiers.py.
     """
     import numpy as np
 
@@ -1096,19 +1065,6 @@ def test_resident_pq_contracts(spark, sf_dir):
     full = [i for i, _ in pq.search(q, k=10, rescore_k=len(pq.ids))]
     assert full == exact
 
-    # codes-only host
-    tmp = tempfile.mkdtemp(prefix="pq_codes_")
-    try:
-        pq.save(tmp)
-        codes_only = ResidentPQ.load(tmp, floats=False)
-        assert codes_only.shortlist(q, r=5) == pq.shortlist(q, r=5)
-        with pytest.raises(ValueError, match="codes-only"):
-            codes_only.search(q, k=5)
-        reloaded = ResidentPQ.load(tmp)
-        assert reloaded.search(q, k=10) == pq.search(q, k=10)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-
     # filtered serving
     allowed = pq.row_mask(np.asarray(exact[:5]))
     filt = pq.search(q, k=5, allowed=allowed)
@@ -1123,8 +1079,10 @@ def test_resident_sq8_contracts(spark, sf_dir):
       tolerance) — the fast path is what serves, the exact form is
       what q188's oracle re-derives,
     - windowed search recovers exact top-k on the real table,
-    - codes are integer-exactly stable across save/load,
     - normalize=False serves L2 (ascending-distance semantics).
+
+    Codes are integer-exactly stable across save/load
+    (tests/test_resident_tiers.py).
     """
     import numpy as np
 
@@ -1152,15 +1110,6 @@ def test_resident_sq8_contracts(spark, sf_dir):
     got = [i for i, _ in sq.search(q, k=10)]
     assert len(set(got) & set(exact)) / 10 >= 0.9
 
-    tmp = tempfile.mkdtemp(prefix="sq8_")
-    try:
-        sq.save(tmp)
-        re = ResidentSQ8.load(tmp)
-        assert (re.codes == sq.codes).all()
-        assert re.search(q, k=10) == sq.search(q, k=10)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-
     raw = ResidentSQ8(corpus, normalize=False)
     short = raw.shortlist(q, r=5, exact_adc=True)
     assert all(
@@ -1171,9 +1120,9 @@ def test_resident_sq8_contracts(spark, sf_dir):
 def test_resident_ivfpq_contracts(spark, sf_dir):
     """IVF-PQ composition (nlist>0): probed ADC must honor the same
     contracts as flat PQ — exhaustive probes + full rescore ≡ exact
-    brute force, save/load round-trips the coarse stage, filtered
-    queries fill from expanded probes — while gathering only probed
-    code slices (pinned by recall at nprobe ≪ nlist)."""
+    brute force, filtered queries fill from expanded probes — while
+    gathering only probed code slices (pinned by recall at nprobe ≪
+    nlist). Save/load of the coarse stage: tests/test_resident_tiers.py."""
     import numpy as np
 
     from postgresml_spark.operators.similarity import ResidentPQ, knn_exact
@@ -1195,16 +1144,6 @@ def test_resident_ivfpq_contracts(spark, sf_dir):
     assert [
         i for i, _ in full.search(q, k=10, rescore_k=len(full.ids))
     ] == exact
-
-    # durability of the coarse stage
-    tmp = tempfile.mkdtemp(prefix="ivfpq_")
-    try:
-        ivfpq.save(tmp)
-        re = ResidentPQ.load(tmp)
-        assert re.centroids is not None
-        assert re.search(q, k=10) == ivfpq.search(q, k=10)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
 
     # filtered: results confined to the mask even when the first probe
     # batch misses it (iterative expansion)

@@ -561,62 +561,46 @@ class Pipeline:
     def served_index(self, field: str, shards: int | None = None):
         """Lazy, version-checked resident ANN index for one field
         (collections/serving.py). Built on first use after a sync,
-        cached for the process lifetime, auto-rebuilt when any
-        underlying VersionedTable version moves — the consistency
-        contract the reference gets from trigger-maintained pgvector
-        indexes.
+        cached for the process lifetime, caught up when any underlying
+        VersionedTable version moves — the consistency contract the
+        reference gets from trigger-maintained pgvector indexes.
 
         ``shards`` > 1 builds a doc-hash ShardedPipelineIndex (the
         multi-host scatter-gather layout — in one process it stands in
-        for N serving hosts, each holding 1/N of the corpus). The
-        shards knob only shapes a FRESH build; an already-resident
-        index (sharded or not) keeps serving as-is, exactly like a
-        live pgvector index doesn't re-shard per query."""
-        from postgresml_spark.collections.serving import (
-            ServedPipelineIndex,
-            ShardedPipelineIndex,
-        )
+        for N serving hosts, each holding 1/N of the corpus)."""
+        from postgresml_spark.collections import serving
 
-        idx = self._served.get(field)
-        if idx is None:
-            idx = (
-                ShardedPipelineIndex(self.collection, self, field, shards)
-                if shards and shards > 1
-                else ServedPipelineIndex(self.collection, self, field)
-            )
-        elif idx.is_stale():
-            # append-only deltas insert into the live graph (O(batch));
-            # changed/removed chunks rebuild (serving.py refresh())
-            idx = idx.refresh()
-        self._served[field] = idx
-        return idx
+        return self._resident(field, field, serving.ServedPipelineIndex,
+                              serving.ShardedPipelineIndex, shards)
 
     def served_text_index(self, field: str, shards: int | None = None):
         """Lazy, version-checked resident full-text postings for one
         field (collections/serving.ServedTextIndex) — the hybrid
         path's GIN-in-shared-memory analog. ``shards`` mirrors
-        served_index (fresh builds only)."""
-        from postgresml_spark.collections.serving import (
-            ServedTextIndex,
-            ShardedTextIndex,
-        )
+        served_index."""
+        from postgresml_spark.collections import serving
 
-        key = f"__ft__{field}"
+        return self._resident(f"__ft__{field}", field, serving.ServedTextIndex,
+                              serving.ShardedTextIndex, shards)
+
+    def _resident(self, key: str, field: str, single, sharded, shards):
+        """The one lookup-refresh-or-build path of the resident indexes:
+        the cached index under ``key`` caught up with any sync
+        (``refresh()`` returns it, grown in place, or a rebuild), or a
+        fresh build, sharded when ``shards`` > 1. The shards knob only
+        shapes a FRESH build; an already-resident index (sharded or
+        not) keeps serving as-is, exactly like a live pgvector index
+        doesn't re-shard per query."""
         idx = self._served.get(key)
         if idx is None:
             idx = (
-                ShardedTextIndex(self.collection, self, field, shards)
+                sharded(self.collection, self, field, shards)
                 if shards and shards > 1
-                else ServedTextIndex(self.collection, self, field)
+                else single(self.collection, self, field)
             )
-            self._served[key] = idx
         elif idx.is_stale():
-            idx = (
-                ShardedTextIndex(self.collection, self, field, idx.n_shards)
-                if hasattr(idx, "n_shards")
-                else ServedTextIndex(self.collection, self, field)
-            )
-            self._served[key] = idx
+            idx = idx.refresh()
+        self._served[key] = idx
         return idx
 
     def status(self) -> dict:

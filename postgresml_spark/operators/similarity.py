@@ -1189,7 +1189,7 @@ class ResidentANN(_ResidentTier):
         self.mat = _unit_rows(mat)  # cosine = dot on unit vectors
         self.nprobe = nprobe
         self.centroids = self.assign = self.offsets = self.cell_radius = None
-        if nlist:
+        if nlist and len(self.mat):  # no cells to fit on an empty corpus
             self.centroids, order, self.assign, best, self.offsets = _ivf_fit(
                 self.mat, nlist, seed
             )
@@ -2006,6 +2006,8 @@ class _QuantizedTier(_ResidentTier):
         array-internal: Python tuples only materialize at the public
         API (at r=2000 the tuple form measured ~3 ms of pure conversion
         per query)."""
+        if not len(self.ids):  # the kernels assume at least one row
+            return np.empty(0, dtype=np.int64), np.empty(0)
         d = self._dist(q, **kernel)
         rows = None if allowed is None else np.flatnonzero(allowed)
         return self._top_r(d if rows is None else d[rows], r, rows)
@@ -2055,6 +2057,8 @@ class _QuantizedTier(_ResidentTier):
             rescore_k or _default_rescore_window(k, len(self.ids)),
             allowed,
         )
+        if not rows.size:
+            return []
         scores = self._exact_scores(self.mat[rows].astype(np.float64), q)
         ids = self.ids[rows]
         order = np.lexsort((ids, -scores))[:k]

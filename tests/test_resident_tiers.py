@@ -124,6 +124,20 @@ def test_floats_free_load_serves_shortlists_only(tier, tmp_path):
     assert cls.load(str(tmp_path / "lean")).mat is None
 
 
+@pytest.mark.parametrize("tier", list(TIERS))
+def test_empty_corpus_returns_no_results(tier):
+    """An index built on zero rows answers every query with [] —
+    unfiltered, filtered and (quantized tiers) shortlist — instead of
+    raising inside its kernel."""
+    cls, kw = TIERS[tier]
+    idx = cls((np.empty(0, dtype=np.int64), np.empty((0, 16), np.float32)), **kw)
+    q = np.ones(16, dtype=np.float32)
+    assert idx.search(q, k=5) == []
+    assert idx.search(q, k=5, allowed=idx.row_mask([1, 2])) == []
+    if hasattr(idx, "shortlist"):
+        assert idx.shortlist(q, r=5) == []
+
+
 @pytest.mark.parametrize("tier", ["bq", "pq", "ivfpq", "sq8"])
 def test_quantized_shortlist_is_tie_exact(tier):
     """Shortlists are ordered by (distance, id), so the top-r is the

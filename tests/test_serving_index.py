@@ -1787,50 +1787,128 @@ def test_rerank_over_candidate_equals_rerank_over_exact(shard_setup):
     assert rows and all(r["rerank_score"] == r["rerank_score"] for r in rows)
 
 
+def _tagged_docs(ids, text):
+    return [{"id": i, "text": text(i), "tag": "even" if i % 2 == 0 else "odd"}
+            for i in ids]
+
+
 def test_refresh_invalidates_ann_row_order_caches(spark, tmp_path):
     """ADVICE r8 #1: caches derived from the ANN's internal row order
-    (_ann_doc_cache, ann_mask) key on a monotonic build counter, not
-    id(idx) — CPython reuses freed addresses, so an id() key can
-    validate a stale (shorter, differently-ordered) doc-id array after
-    refresh() lazily rebuilds the ivfflat index, corrupting the
-    geometric certificate or raising IndexError on the hot path."""
-    wh = str(tmp_path / "wh")
-    coll = Collection("annbuild", spark, warehouse=wh)
-    coll.upsert_documents(
-        [{"id": i, "text": f"seed document number {i} about topic {i % 7}"}
-         for i in range(40)]
-    )
-    pipe = Pipeline(
-        "p",
-        {"text": {"semantic_search": {"model": "hash:32",
-                                      "ivfflat": {"lists": 4, "probes": 2}}}},
-    )
-    coll.add_pipeline(pipe)
-    idx = pipe.served_index("text")
-    n0 = len(idx.chunk_ids)
-    docs0 = idx._ann_doc_ids(idx.hnsw)
-    b0 = idx._ann_build
-    assert b0 >= 1 and len(docs0) == n0
-    assert idx._ann_doc_cache[1] == b0
-    # append-only upsert: refresh() drops the ivfflat (_hnsw = None →
-    # lazy rebuild) and MUST bump the build counter so the doc-id
-    # cache re-derives at the new length
-    coll.upsert_documents(
-        [{"id": 41, "text": "fresh zebra payload after refresh"}]
-    )
-    idx2 = pipe.served_index("text")
-    assert idx2 is idx, "append must refresh in place"
-    docs1 = idx._ann_doc_ids(idx.hnsw)
-    assert idx._ann_build > b0, "refresh must invalidate ANN-derived caches"
-    assert len(docs1) == n0 + 1, "stale doc-id cache survived the rebuild"
-    assert idx._ann_doc_cache[1] == idx._ann_build
-    # the rebuilt mapping is consistent: every ANN row's doc id matches
-    # the payload arrays through chunk_id lookup
+    (the doc id per ANN row and each filter's ann_mask) must not
+    survive an append refresh. ivfflat drops its index on refresh and
+    rebuilds it (clustered row order) on the next search; a live HNSW
+    graph grows by add(). Either way the doc-id map re-derives at the
+    new length and a filtered search sees the appended document — an
+    id()-keyed cache could validate a stale, shorter array here because
+    CPython reuses freed addresses."""
+    for ann in ({"ivfflat": {"lists": 4, "probes": 2}},
+                {"hnsw": {"m": 8, "ef_construction": 32}}):
+        _check_append_refresh(spark, str(tmp_path / next(iter(ann))), ann)
+
+
+def _check_append_refresh(spark, wh, ann):
     import numpy as np
 
-    ann = idx.hnsw
-    rows = np.asarray([idx.row_of[int(c)] for c in ann.ids])
-    assert (idx.doc_ids[rows] == docs1).all()
+    coll = Collection("annbuild", spark, warehouse=wh)
+    coll.upsert_documents(_tagged_docs(
+        range(40), lambda i: f"seed document number {i} about topic {i % 7}"))
+    pipe = Pipeline("p", {"text": {"semantic_search": {"model": "hash:32",
+                                                       **ann}}})
+    coll.add_pipeline(pipe)
+    even = {"tag": {"$eq": "even"}}
+
+    def check_doc_map(idx, n):
+        docs = idx._ann_doc_ids()
+        assert len(docs) == n, "stale doc-id cache survived the rebuild"
+        assert idx._ann_doc_ids() is docs  # cached until the ANN changes
+        # every ANN row's doc id matches the payload arrays through
+        # chunk_id lookup
+        rows = np.asarray([idx.row_of[int(c)] for c in idx.hnsw.ids])
+        assert (idx.doc_ids[rows] == docs).all()
+
+    idx = pipe.served_index("text")
+    n0 = len(idx.chunk_ids)
+    check_doc_map(idx, n0)
+    before = idx.search("fresh zebra payload", limit=50, filter=even)
+    assert before and all(r["document"]["tag"] == "even" for r in before)
+    graph = idx.hnsw
+    coll.upsert_documents(_tagged_docs(
+        [42], lambda i: "fresh zebra payload after refresh"))
+    assert pipe.served_index("text") is idx, "append must refresh in place"
+    if "hnsw" in ann:
+        assert idx.hnsw is graph, "hnsw appends go into the live graph"
+    check_doc_map(idx, n0 + 1)
+    got = idx.search("fresh zebra payload", limit=50, filter=even)
+    assert 42 in {r["document"]["id"] for r in got}
+    assert all(r["document"]["tag"] == "even" for r in got)
+
+
+@pytest.mark.parametrize("kind", ["hnsw", "ivfflat"])
+def test_search_with_empty_shortlist_returns_nothing(kind):
+    """candidates=0 asks the ANN for an empty shortlist; the float64
+    rescore of an empty shortlist is an empty result, not an IndexError
+    from indexing with a float array."""
+    import numpy as np
+
+    from postgresml_spark.collections.serving import ServedPipelineIndex
+
+    rng = np.random.default_rng(5)
+    mat = rng.normal(size=(60, 8))
+    idx = ServedPipelineIndex.from_arrays(
+        np.arange(60), np.arange(60) // 3, mat, lambda q: mat[0], kind=kind)
+    assert idx.search("q", candidates=0) == []
+    assert idx.search("q", candidates=0, filter={"a": {"$eq": 1}}) == []
+    assert idx.search("q", limit=3)[0]["document_id"] == 0
+
+
+@pytest.mark.parametrize("setup", ["hybrid_setup", "shard_setup"])
+def test_spark_and_array_builds_share_one_state_path(setup, request):
+    """A Spark-built index and a from_arrays/from_tokens index fed the
+    same rows (read independently from the synced tables, in the Spark
+    index's row order) serve identically: search unfiltered and
+    filtered, best_chunk_scores and candidate_chunk_scores; the text
+    twins give the same postings and ts_rank scores."""
+    import numpy as np
+
+    from postgresml_spark.collections.serving import (
+        ServedPipelineIndex,
+        ServedTextIndex,
+    )
+
+    coll, pipe = request.getfixturevalue(setup)[:2]
+    built = ServedPipelineIndex(coll, pipe, "text")
+    chunks = pipe.table("text_chunks").select("chunk_id", "document_id", "chunk")
+    pdf = (pipe.table("text_embeddings").join(chunks, "chunk_id").toPandas()
+           .set_index("chunk_id").loc[built.chunk_ids])
+    ddf = coll.documents.read().select("id", "document").toPandas()
+    arrays = ServedPipelineIndex.from_arrays(
+        pdf.index.to_numpy(), pdf["document_id"].to_numpy(),
+        np.asarray(pdf["embedding"].tolist()), built._embed,
+        doc_json=dict(zip(ddf["id"].tolist(), ddf["document"].tolist())),
+        chunks=pdf["chunk"].tolist(), kind=built.kind, params=built._params,
+    )
+    for qt in QUERIES:
+        for filt in (None, {"lang": {"$eq": "en"}}):
+            assert arrays.search(qt, limit=10, filter=filt) \
+                == built.search(qt, limit=10, filter=filt)
+            for a, b in ((arrays.best_chunk_scores(qt, filter=filt),
+                          built.best_chunk_scores(qt, filter=filt)),
+                         (arrays.candidate_chunk_scores(qt, 20, filter=filt),
+                          built.candidate_chunk_scores(qt, 20, filter=filt))):
+                assert all(np.array_equal(x, y) for x, y in zip(a, b))
+
+    ft = ServedTextIndex(coll, pipe, "text")
+    tdf = (pipe.table("text_tsvectors").toPandas().set_index("chunk_id")
+           .loc[ft.chunk_ids])
+    ft_arrays = ServedTextIndex.from_tokens(
+        tdf.index.to_numpy(), ft.doc_ids, tdf["tokens"].tolist())
+    assert ft_arrays.postings == ft.postings
+    allowed = built._allowed_doc_ids({"lang": {"$eq": "en"}})
+    for terms in (["spark", "stream"], ["vector", "merge", "table"]):
+        for docs in (None, allowed):
+            a = ft_arrays.best_chunk_scores(terms, allowed_docs=docs)
+            b = ft.best_chunk_scores(terms, allowed_docs=docs)
+            assert all(np.array_equal(x, y) for x, y in zip(a, b))
 
 
 def test_sharded_scatter_recall_floor_with_widen():
@@ -1886,9 +1964,7 @@ def test_sharded_scatter_recall_floor_with_widen():
         )
         for i in range(4)
     ]
-    sharded4 = ShardedPipelineIndex.__new__(ShardedPipelineIndex)
-    sharded4.n_shards, sharded4.field = 4, "_arrays_"
-    sharded4.shards = shards
+    sharded4 = ShardedPipelineIndex.from_shards(shards)
 
     # (a) mechanical: the scatter path hands widen=2.0 to each shard
     seen = []

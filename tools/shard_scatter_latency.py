@@ -66,11 +66,7 @@ def build_sharded(chunk_ids, doc_ids, mat, embed, n_shards,
         )
         s.hnsw
         shards.append(s)
-    sharded = ShardedPipelineIndex.__new__(ShardedPipelineIndex)
-    sharded.n_shards = n_shards
-    sharded.field = "_arrays_"
-    sharded.shards = shards
-    return sharded
+    return ShardedPipelineIndex.from_shards(shards)
 
 
 def build(n_chunks=1_000_000, dim=256, n_shards=4, seed=11):

@@ -552,9 +552,7 @@ class Collection:
         self._prune_changes(self.documents._current_version())
         self.documents.vacuum(keep_versions=1)
         for p in self._pipelines.values():
-            for t in list(p._tables.values()) + list(
-                getattr(p, "_state", {}).values()
-            ):
+            for t in p._tables.values():
                 t.vacuum(keep_versions=1)
         return n
 
@@ -596,17 +594,13 @@ class Collection:
             return
         import shutil
 
-        for tbl in list(p._tables.values()) + list(
-            getattr(p, "_state", {}).values()
-        ):
+        for tbl in p._tables.values():
             shutil.rmtree(tbl.path, ignore_errors=True)
         # the pipeline root also holds sync watermarks — a stale
         # watermark from a removed pipeline must not pin change-log
         # retention (_prune_consumed_changes scans these on disk)
-        if getattr(p, "_root", None):
-            shutil.rmtree(p._root, ignore_errors=True)
+        shutil.rmtree(p._root, ignore_errors=True)
         p._tables.clear()
-        getattr(p, "_state", {}).clear()
         p._served.clear()
         p.collection = None
 
@@ -631,7 +625,7 @@ class Collection:
 
     def _mark_pipelines_stale(self) -> None:
         for p in self._pipelines.values():
-            if getattr(p, "enabled", True):
+            if p.enabled:
                 p.sync()
 
     def vector_search(self, query: dict, pipeline: "Pipeline", **kw):

@@ -26,6 +26,36 @@ dedup window partitions by document_id — same shuffle as the join,
 reused. Embeddings tables would be IVF-partitioned at 100 TB
 (operators/similarity.py) with the same code path after partition
 pruning.
+
+Served path (collections/serving.py holds the resident indexes):
+
+- One router. `_served` decides for vector_search and hybrid_search
+  whether a query goes to the resident tier: "exact" never, "index"
+  and "candidate" always (raising when the query needs the table-side
+  plan), "auto" when every queried field declares an index or has a
+  live one.
+- One certificate contract. method="candidate" scores each semantic
+  field over an ANN shortlist, and `candidate_chunk_scores` returns a
+  `CandidateCertificate` beside the scores. It bounds the best-chunk
+  cosine of documents the shortlist did not return, in two forms:
+  `doc_bound(docs)`, per document, prunes the deferred augmentation
+  of docs other components scored; `unseen_bound(universe)` bounds
+  any doc no component scored and is the stop rule's input. Each bound
+  carries its trust separately: the geometric IVF bound (unprobed-cell
+  q·c + R_c, scanned chunks) is always trusted, the shortlist minimum
+  only when every list was probed or the IVF router is confident, and
+  an exhausted shortlist hides nothing. The top-k is proven when the
+  k-th total beats Σ max(0, boost·bound) over the open fields and every
+  bound is trusted; otherwise the overfetch escalates, up to 64x, then
+  reports candidates_exhausted. Doc-hash shards are doc-disjoint, so
+  `CandidateCertificate.merge` takes maxima over the open shards and
+  needs every shard's trust.
+- One telemetry writer. `_log_searches` writes searches/search_results
+  for the exact hybrid plan (synchronously) and for the served path's
+  buffer (flush_search_telemetry).
+- One result channel. Every hybrid method returns SearchResults, whose
+  `search_info` carries search_id, semantic_mode, candidate_mult and
+  candidates_exhausted.
 """
 
 from __future__ import annotations
@@ -96,20 +126,56 @@ def _tsrank_col(tokens_col, query_terms: list[str], normalization: int = 32):
 
 
 class SearchResults(list):
-    """Result list + per-search quality metadata (VERDICT r7 next #8).
+    """Result list + per-search quality metadata (VERDICT r7 next #8) —
+    the one result channel of every hybrid_search method.
 
     Behaves exactly like the plain list of result dicts the SDK has
     always returned; `search_info` additionally carries
-    {"search_id", "candidates_exhausted", "candidate_mult"} so a
-    caller of the candidate-bounded path can see IN THE PAYLOAD when
-    the adaptive overfetch hit its escalation cap and the top-k is
-    best-effort rather than proven (the reference stores per-result
-    quality via search_results ranks, search_query_builder.rs:509 —
-    this is the served-path analog without a telemetry read)."""
+    {"search_id", "semantic_mode", "candidate_mult",
+    "candidates_exhausted"} so a caller of the candidate-bounded path
+    can see IN THE PAYLOAD when the adaptive overfetch hit its
+    escalation cap and the top-k is best-effort rather than proven
+    (the reference stores per-result quality via search_results ranks,
+    search_query_builder.rs:509 — this is the served-path analog
+    without a telemetry read)."""
 
     def __init__(self, rows=(), search_info: dict | None = None):
         super().__init__(rows)
         self.search_info = search_info or {}
+
+
+def _search_info(search_id, semantic_mode: str, candidate_mult=None,
+                 exhausted: bool = False) -> dict:
+    return {
+        "search_id": search_id,
+        "semantic_mode": semantic_mode,
+        "candidate_mult": candidate_mult,
+        "candidates_exhausted": bool(exhausted),
+    }
+
+
+def _log_searches(collection, entries) -> None:
+    """The one searches/search_results writer: the exact hybrid path
+    logs its search synchronously, flush_search_telemetry writes the
+    served path's buffer. An entry is {"search_id", "pipeline",
+    "query", "created_at", "results": [(doc_id, scores, rank)]}; each
+    path fills ``scores`` itself (the served path writes 0.0 for an
+    absent component, the exact path its full-outer-join null)."""
+    spark = collection.spark
+    searches = _telemetry(collection, "searches", _SEARCHES_SCHEMA)
+    results = _telemetry(collection, "search_results", _RESULTS_SCHEMA)
+    searches.append(spark.createDataFrame(
+        [(e["search_id"], collection.name, e["pipeline"],
+          json.dumps(e["query"]), e["created_at"]) for e in entries],
+        _SEARCHES_SCHEMA,
+    ))
+    rrows = [
+        (e["search_id"], did, json.dumps(scores), rank)
+        for e in entries
+        for did, scores, rank in e["results"]
+    ]
+    if rrows:
+        results.append(spark.createDataFrame(rrows, _RESULTS_SCHEMA))
 
 
 def _served_applicable(spec: dict) -> bool:
@@ -121,6 +187,36 @@ def _served_applicable(spec: dict) -> bool:
     table-side plan (it intersects against the tsvector table, which
     the semantic index doesn't carry)."""
     return not any(f.get("full_text_filter") for f in spec.get("fields", {}).values())
+
+
+def _served(api: str, method: str, pipeline, fields, servable: bool,
+            unservable: str) -> bool:
+    """The one method router of vector_search and hybrid_search: True
+    when the query goes to the resident tier. "exact" never does;
+    "index"/"candidate" always do, and raise when the query is not
+    ``servable``; "auto" does when it is servable and every queried
+    field DECLARES an index in the pipeline schema (or already has a
+    live one from an explicit method='index' call) — pgvector's planner
+    seq-scans when no CREATE INDEX was issued, and silently paying an
+    index BUILD inside a user's first query is the wrong default
+    (measured: a 50k-doc lifecycle's filtered search jumped 0.6 s →
+    6 s when auto force-built)."""
+    if method not in ("exact", "index", "auto", "candidate"):
+        raise ValueError(f"unknown {api} method {method!r}")
+    if method == "exact":
+        return False
+    explicit = method != "auto"
+    if servable and (explicit or all(
+        pipeline.declares_index(f) or pipeline.has_live_index(f)
+        for f in fields
+    )):
+        return True
+    if explicit:
+        raise ValueError(
+            f"method={method!r} cannot serve {unservable}; "
+            "use method='auto' or 'exact'"
+        )
+    return False
 
 
 def vector_search(
@@ -178,106 +274,83 @@ def vector_search(
         else limit
     )
 
-    if method not in ("exact", "index", "auto", "candidate"):
-        raise ValueError(f"unknown vector_search method {method!r}")
-    if method in ("index", "auto", "candidate"):
-        # auto serves from the resident tier only when every queried
-        # field DECLARES an index in the pipeline schema (or already
-        # has a live one from an explicit method='index' call) —
-        # pgvector's planner seq-scans when no CREATE INDEX was issued,
-        # and silently paying an index BUILD inside a user's first
-        # query is the wrong default (measured: a 50k-doc lifecycle's
-        # filtered search jumped 0.6 s → 6 s when auto force-built).
-        indexed = all(
-            pipeline.declares_index(f) or pipeline.has_live_index(f)
-            for f in fields
-        )
-        if (method in ("index", "candidate") or indexed) \
-                and _served_applicable(spec):
-            merged: list[dict] = []
-            for field, fcfg in fields.items():
-                idx = pipeline.served_index(field)
-                ef = (fcfg.get("parameters") or {}).get("ef_search")
-                # method='candidate' (VERDICT r6 next #5): the served
-                # chunk path is already ANN-shortlist + exact rescore;
-                # this makes the overfetch EXPLICIT — per-field
-                # fcfg["candidates"] bounds the shortlist (default
-                # scales with the rerank fetch, so
-                # num_documents_to_rerank drives the candidate bound
-                # the way vector_search_query_builder.rs:331-360's
-                # overfetch does)
-                n_cand = (
-                    int(fcfg.get("candidates", max(4 * fetch, 100)))
-                    if method == "candidate" else None
+    if _served(
+        "vector_search", method, pipeline, fields, _served_applicable(spec),
+        "full_text_filter queries (the tsvector intersection needs the "
+        "table-side plan)",
+    ):
+        out: list[dict] = []
+        for field, fcfg in fields.items():
+            idx = pipeline.served_index(field)
+            ef = (fcfg.get("parameters") or {}).get("ef_search")
+            # method='candidate' (VERDICT r6 next #5): the served chunk
+            # path is already ANN-shortlist + exact rescore; this makes
+            # the overfetch EXPLICIT — per-field fcfg["candidates"]
+            # bounds the shortlist (default scales with the rerank
+            # fetch, so num_documents_to_rerank drives the candidate
+            # bound the way vector_search_query_builder.rs:331-360's
+            # overfetch does)
+            n_cand = (
+                int(fcfg.get("candidates", max(4 * fetch, 100)))
+                if method == "candidate" else None
+            )
+            out.extend(
+                idx.search(
+                    fcfg["query"], limit=fetch,
+                    boost=float(fcfg.get("boost", 1.0)),
+                    ef=int(ef) if ef is not None else None,
+                    filter=filt,
+                    candidates=n_cand,
                 )
-                merged.extend(
-                    idx.search(
-                        fcfg["query"], limit=fetch,
-                        boost=float(fcfg.get("boost", 1.0)),
-                        ef=int(ef) if ef is not None else None,
-                        filter=filt,
-                        candidates=n_cand,
+            )
+        out.sort(key=lambda r: (-r["score"], r["document_id"]))
+        out = out[:fetch]
+    else:
+        per_field: list[DataFrame] = []
+        for field, fcfg in fields.items():
+            scored = _scored_chunks(collection, pipeline, field, fcfg["query"], filt)
+            boost = float(fcfg.get("boost", 1.0))
+            if fcfg.get("full_text_filter"):
+                terms = [t for t in fcfg["full_text_filter"].lower().split() if t]
+                toks = pipeline.table(f"{field}_tsvectors")
+                scored = scored.join(toks, "chunk_id").filter(
+                    F.arrays_overlap(
+                        F.col("tokens"), F.array(*[F.lit(t) for t in terms])
                     )
+                ).drop("tokens")
+            per_field.append(
+                scored.select(
+                    "document_id",
+                    "document",
+                    "chunk",
+                    (F.col("cosine") * boost).alias("score"),
                 )
-            merged.sort(key=lambda r: (-r["score"], r["document_id"]))
-            out = merged[:fetch]
-            if rerank_spec is not None:
-                out = _spec_rerank(out, rerank_spec, limit)
-            elif rerank and out:
-                out = _lexical_rerank(out, fields, num_documents_to_rerank)
-            return out
-        if method in ("index", "candidate"):
-            raise ValueError(
-                f"method={method!r} cannot serve full_text_filter queries "
-                "(the tsvector intersection needs the table-side plan); "
-                "use method='auto' or 'exact'"
             )
-
-    per_field: list[DataFrame] = []
-    for field, fcfg in fields.items():
-        scored = _scored_chunks(collection, pipeline, field, fcfg["query"], filt)
-        boost = float(fcfg.get("boost", 1.0))
-        if fcfg.get("full_text_filter"):
-            terms = [t for t in fcfg["full_text_filter"].lower().split() if t]
-            toks = pipeline.table(f"{field}_tsvectors")
-            scored = scored.join(toks, "chunk_id").filter(
-                F.arrays_overlap(
-                    F.col("tokens"), F.array(*[F.lit(t) for t in terms])
-                )
-            ).drop("tokens")
-        per_field.append(
-            scored.select(
-                "document_id",
-                "document",
-                "chunk",
-                (F.col("cosine") * boost).alias("score"),
-            )
-        )
-    if not per_field:
-        return []
-    # Single terminal top-k: per-field intermediate orderBy().limit()
-    # nodes forced a range-partitioning Exchange (plus its sampling
-    # pass) and a single-partition GlobalLimit Exchange PER FIELD
-    # before the final sort — 5 AQE stage jobs for one exact search
-    # (guide §2.4: remove exchanges outright). The union's terminal
-    # orderBy().limit() compiles to TakeOrderedAndProject — per-
-    # partition partial top-k + driver merge, ZERO exchanges — and is
-    # result-identical: any row cut by a per-field top-`fetch` was
-    # outranked by `fetch` rows of its own field, so it can never
-    # appear in the global top-`fetch` either.
-    un = per_field[0]
-    for d in per_field[1:]:
-        un = un.unionByName(d)  # UNION ALL (vector_search_query_builder.rs:287-296)
-    rows = un.orderBy(F.col("score").desc(), F.col("document_id")).limit(fetch).collect()
-    out = [
-        {
-            "document_id": r["document_id"],
-            "document": json.loads(r["document"]),
-            "chunk": r["chunk"],
-            "score": r["score"],
-        }
-        for r in rows
-    ]
+        if not per_field:
+            return []
+        # Single terminal top-k: per-field intermediate orderBy().limit()
+        # nodes forced a range-partitioning Exchange (plus its sampling
+        # pass) and a single-partition GlobalLimit Exchange PER FIELD
+        # before the final sort — 5 AQE stage jobs for one exact search
+        # (guide §2.4: remove exchanges outright). The union's terminal
+        # orderBy().limit() compiles to TakeOrderedAndProject — per-
+        # partition partial top-k + driver merge, ZERO exchanges — and is
+        # result-identical: any row cut by a per-field top-`fetch` was
+        # outranked by `fetch` rows of its own field, so it can never
+        # appear in the global top-`fetch` either.
+        un = per_field[0]
+        for d in per_field[1:]:
+            un = un.unionByName(d)  # UNION ALL (vector_search_query_builder.rs:287-296)
+        rows = un.orderBy(F.col("score").desc(), F.col("document_id")).limit(fetch).collect()
+        out = [
+            {
+                "document_id": r["document_id"],
+                "document": json.loads(r["document"]),
+                "chunk": r["chunk"],
+                "score": r["score"],
+            }
+            for r in rows
+        ]
     if rerank_spec is not None:
         out = _spec_rerank(out, rerank_spec, limit)
     elif rerank and out:
@@ -352,7 +425,7 @@ def _spec_rerank(out: list[dict], rerank_spec: dict, limit: int):
 
 def _served_hybrid(
     collection, pipeline, query: dict, semantic_mode: str = "exact"
-) -> list[dict]:
+) -> SearchResults:
     """Hybrid search from the resident tier — no Spark job on the
     query path. Semantic side, by ``semantic_mode``:
 
@@ -382,149 +455,57 @@ def _served_hybrid(
     limit = int(query.get("limit", 10))
     sem_fields = spec.get("semantic_search") or {}
     ft_fields = spec.get("full_text_search") or {}
-
+    candidate = semantic_mode == "candidate"
     search_id = str(uuid.uuid4())
-    buf = getattr(collection, "_search_log_buffer", None)
-    if buf is None:
-        buf = collection._search_log_buffer = []
-
-    def _buffer(results, candidates_exhausted=False):
-        # exact-path parity: a searches row is logged even for zero-hit
-        # queries (e.g. a filter matching nothing), so served/exact
-        # telemetry stay row-for-row comparable
-        buf.append(
-            {
-                "search_id": search_id,
-                "pipeline": pipeline.name,
-                "created_at": time.time(),
-                "query": query,
-                "results": results,
-                "candidates_exhausted": candidates_exhausted,
-            }
-        )
-
-    def _results(rows, mult=None, exhausted=False):
-        # payload-level quality surface: same rows as ever, plus
-        # search_info for callers that need the exhaustion flag
-        # without reading telemetry
-        return SearchResults(
-            rows,
-            {
-                "search_id": search_id,
-                "semantic_mode": semantic_mode,
-                "candidate_mult": mult,
-                "candidates_exhausted": bool(exhausted),
-            },
-        )
 
     # doc payload map: reuse any resident index's doc_json (both index
-    # kinds are rebuilt on the same version token as documents)
-    any_idx = (
-        pipeline.served_index(next(iter(sem_fields)))
-        if sem_fields
-        else None
-    )
-    if any_idx is None:
-        _buffer([])
-        return _results([])
+    # kinds are rebuilt on the same version token as documents); the
+    # metadata filter resolves ONCE against the resident metadata, so
+    # both score sides honor the same document set
+    any_idx = pipeline.served_index(next(iter(sem_fields)))
     doc_json = any_idx.doc_json
-    allowed_docs = (
-        # resolve the metadata filter ONCE against the resident
-        # metadata; both score sides honor the same document set
-        any_idx._allowed_doc_ids(filt) if filt is not None else None
-    )
+    allowed_docs = any_idx._allowed_doc_ids(filt) if filt is not None else None
 
     # full-text components — exact and complete over their postings, so
     # they are built ONCE: candidate-mode escalation only re-gathers the
     # ANN-bounded semantic side
     ft_components: list[tuple[str, "np.ndarray", "np.ndarray"]] = []
     for field, fcfg in ft_fields.items():
-        boost = float(fcfg.get("boost", 1.0))
-        ft_idx = pipeline.served_text_index(field)
         terms = [t for t in fcfg["query"].lower().split() if t]
-        docs, scores = ft_idx.best_chunk_scores(
+        docs, scores = pipeline.served_text_index(field).best_chunk_scores(
             terms, allowed_docs=allowed_docs
         )
-        ft_components.append((f"score_ft_{field}", docs, scores * boost))
+        ft_components.append(
+            (f"score_ft_{field}", docs, scores * float(fcfg.get("boost", 1.0)))
+        )
 
     def _gather(mult):
         """Per-field (col, doc_ids, scores) components — all numpy; the
         Python-per-doc merge this replaces was ~80% of the 27 ms r4
-        served-hybrid latency. ``mult`` scales the candidate overfetch
-        AND the index probe width (ivfflat nprobe / hnsw ef) — the
-        adaptive-escalation lever. Returns (components, safety infos):
-        one (boost, info) per semantic field in candidate mode."""
-        comps: list[tuple[str, "np.ndarray", "np.ndarray"]] = []
-        sem_meta: list[tuple[int, str, dict]] = []
-        infos: list[tuple[float, dict]] = []
+        served-hybrid latency — and, in candidate mode, one
+        (field, fcfg, boost, certificate) per semantic field, in
+        component order. ``mult`` scales the candidate overfetch AND
+        the index probe width (ivfflat nprobe / hnsw ef) — the
+        adaptive-escalation lever."""
+        comps, sem = [], []
         for field, fcfg in sem_fields.items():
             boost = float(fcfg.get("boost", 1.0))
             idx = pipeline.served_index(field)
-            if semantic_mode == "candidate":
-                docs, scores, info = idx.candidate_chunk_scores(
+            if candidate:
+                docs, scores, cert = idx.candidate_chunk_scores(
                     fcfg["query"],
                     n_candidates=int(fcfg.get("candidates",
                                               max(16 * limit, 100))) * mult,
                     filter=filt,
                     widen=mult,
-                    return_info=True,
                 )
-                infos.append((boost, info))
+                sem.append((field, fcfg, boost, cert))
             else:
                 docs, scores = idx.best_chunk_scores(fcfg["query"],
                                                      filter=filt)
-            sem_meta.append((len(comps), field, fcfg))
             comps.append((f"score_sem_{field}", docs, scores * boost))
-        comps.extend(ft_components)
-        pend: list[dict] = []
-        if semantic_mode == "candidate" and sem_meta:
-            # Every doc ANY other component scored (full-text matches +
-            # other fields' ANN shortlists) that sits outside this
-            # field's beam needs its exact semantic score — it would
-            # otherwise sum with semantic 0 and mis-rank vs the exact
-            # plan (measured at 20k chunks: agreement@10 0.88 without
-            # the fill; a 2048-doc ft-score-ranked cap re-measured 0.83
-            # at 1M — tie bands are wider than any fixed cap). Round 8
-            # gathered ALL of them eagerly, which made stopword-scale
-            # postings degrade to ~the exact matvec cost (the 1M
-            # common-term 0.93× floor). Round 9 defers the gather: the
-            # outer merge computes the fully-covered top-k boundary
-            # first, PRUNES missing docs that provably cannot reach it
-            # (WAND/max-score style — a certificate bound, then an f32
-            # screening gather at half the bytes), and pays the exact
-            # f64 gather only for survivors. Every cut is proven, so
-            # results stay exactly the eager plan's (see the staged
-            # augmentation in the merge loop below).
-            sized = [d for _, d, _ in comps if d.size]
-            aug_docs = (
-                np.unique(np.concatenate(sized))
-                if sized else np.empty(0, dtype=np.int64)
-            )
-            if aug_docs.size:
-                for (ci, field, fcfg), (_, info) in zip(sem_meta, infos):
-                    col, docs, scores = comps[ci]
-                    missing = np.setdiff1d(aug_docs, docs)
-                    if not missing.size:
-                        continue
-                    pend.append({
-                        "ci": ci, "field": field, "fcfg": fcfg,
-                        "missing": missing, "info": info,
-                        "boost": float(fcfg.get("boost", 1.0)),
-                    })
-        return comps, infos, pend
+        return comps + ft_components, sem
 
-    # Adaptive overfetch (VERDICT r6 next #1): gather, merge, then
-    # PROVE the top-k safe — a doc in no shortlist scores at most
-    # sum_f max(0, boost_f·min_raw_f) over the non-exhausted semantic
-    # fields (its full-text and exhausted-field contributions are
-    # exactly 0). If the k-th winner doesn't clear that bound by the
-    # margin (the slack for ANN shortlists not being exact top-n —
-    # OOD queries compress scores into tie bands thinner than ANN
-    # recall error), escalate candidates AND probe width 4x and
-    # re-gather, bounded at 64x; still-unsafe queries surface
-    # candidates_exhausted through telemetry + _last_search_info.
-    mult = 1
-    candidates_exhausted = False
     # f32 screening scores are (query, field)-deterministic and
     # independent of the escalation multiplier, so escalated rounds
     # reuse the first round's gather instead of re-reading the matrix:
@@ -535,35 +516,30 @@ def _served_hybrid(
         """f32 upper-bound values for `sel` (sorted doc ids) through
         the cross-round cache. Non-resident docs are cached as 0.0 —
         their true contribution is exactly 0 (absent component)."""
-        idx = pipeline.served_index(field)
         cd, cv, cerr = screen_cache.get(field, (None, None, 0.0))
+        new_sel = sel
         if cd is not None:
             lp = np.searchsorted(cd, sel)
             okc = lp < cd.size
             okc[okc] &= cd[lp[okc]] == sel[okc]
             new_sel = sel[~okc]
-        else:
-            new_sel = sel
         if new_sel.size:
-            adocs, as32, aerr = idx.approx_chunk_scores_for_docs(
-                fcfg["query"], new_sel
-            )
+            adocs, as32, aerr = pipeline.served_index(
+                field).approx_chunk_scores_for_docs(fcfg["query"], new_sel)
             vals = np.zeros(new_sel.size)
-            if adocs.size:
-                pn = np.searchsorted(new_sel, adocs)
-                vals[pn] = as32
+            vals[np.searchsorted(new_sel, adocs)] = as32
             if cd is None:
                 cd, cv, cerr = new_sel, vals, aerr
             else:
                 md = np.concatenate([cd, new_sel])
-                mv = np.concatenate([cv, vals])
                 o = np.argsort(md, kind="stable")
-                cd, cv, cerr = md[o], mv[o], max(cerr, aerr)
+                cd = md[o]
+                cv = np.concatenate([cv, vals])[o]
+                cerr = max(cerr, aerr)
             screen_cache[field] = (cd, cv, cerr)
         if cd is None:
             return np.zeros(sel.size), 0.0
-        lp = np.searchsorted(cd, sel)
-        return cv[lp], cerr
+        return cv[np.searchsorted(cd, sel)], cerr
 
     def _merge(components):
         nonempty = [d for _, d, _ in components if d.size]
@@ -585,148 +561,84 @@ def _served_hybrid(
             total[pos] += scores
         return universe, total, positions
 
-    def _pend_sem_ub(i) -> float | None:
-        """Upper bound on the best-chunk s64 of any doc OUTSIDE the
-        field's shortlist (the stage-A prune of the deferred
-        augmentation). Scanned chunks of non-shortlist docs score at
-        most the shortlist min (they ranked past n_cand in the same
-        f32 scan; min_score already carries the fp32→f64 slack);
-        unscanned chunks obey the geometric cell bound. Without
-        geometry the shortlist-min is only trustworthy under
-        exact_topn or router confidence — None disables the prune."""
-        if i.get("exhausted"):
-            return 0.0  # shortlist covers the field: missing ⇒ no chunks
-        if i.get("exact_topn"):
-            return float(i["min_score"])
-        if i.get("unscanned_bound") is not None:
-            if i.get("router_confident"):
-                return float(i["min_score"])
-            return max(float(i["unscanned_bound"]), float(i["min_score"]))
-        if i.get("router_confident"):
-            return float(i["min_score"])
-        return None
-
+    # Adaptive overfetch (VERDICT r6 next #1): gather, merge, then PROVE
+    # the top-k safe with the fields' certificates — a doc in no
+    # shortlist scores at most sum_f max(0, boost_f·bound_f) over the
+    # non-exhausted semantic fields (its full-text and exhausted-field
+    # contributions are exactly 0). If the k-th winner doesn't clear
+    # that bound, or some field's bound is not trusted, escalate
+    # candidates AND probe width 4x and re-gather, bounded at 64x;
+    # still-unsafe queries surface candidates_exhausted through
+    # telemetry and search_info.
+    mult = 1
+    exhausted = False
+    top_pos = ()
     while True:
-        components, infos, pend = _gather(mult)
+        components, sem = _gather(mult)
         universe, total, positions = _merge(components)
         if universe is None:
-            _buffer([])
-            if semantic_mode == "candidate":
-                collection._last_search_info = {
-                    "search_id": search_id,
-                    "candidate_mult": mult,
-                    "candidates_exhausted": False,
-                }
-            return _results([], mult=mult)
+            break
 
+        # Every doc ANY other component scored (full-text matches +
+        # other fields' shortlists) that sits outside a field's
+        # shortlist needs its exact semantic score — it would otherwise
+        # sum with semantic 0 and mis-rank vs the exact plan (measured
+        # at 20k chunks: agreement@10 0.88 without the fill). Gathering
+        # all of them eagerly made stopword-scale postings cost ~the
+        # exact matvec, so the fill is staged (WAND/max-score, VERDICT
+        # r8 next #3). Stage A: the certificate's per-doc bound, no
+        # gather. Stage B: f32 screening gather (half the bytes) →
+        # per-doc tight bound. Stage C: exact f64 gather only for docs
+        # whose bound reaches the fully-covered top-k boundary. Every
+        # excluded doc's TRUE total is provably < boundary0 <= the
+        # final k-th score, so the top-k is exactly the eager plan's.
+        pend = []
+        for ci, (field, fcfg, boost, cert) in enumerate(sem):
+            miss = np.ones(universe.size, dtype=bool)
+            if positions[ci] is not None:
+                miss[positions[ci]] = False
+            if miss.any():
+                pend.append((ci, field, fcfg, boost, cert,
+                             np.flatnonzero(miss)))
         if pend:
-            # Staged augmentation (VERDICT r8 next #3 — WAND/max-score
-            # pruning for the ft-side fill). Stage A: certificate
-            # bound per field, no gather. Stage B: f32 screening
-            # gather (half the bytes) → per-doc tight bound. Stage C:
-            # exact f64 gather only for docs whose bound reaches the
-            # fully-covered top-k boundary. Every excluded doc's TRUE
-            # total is provably < boundary0 <= the final k-th score,
-            # so the returned top-k is exactly the eager plan's.
             miss_mask = np.zeros(universe.size, dtype=bool)
-            extra_a = np.zeros(universe.size)
-            for p_ in pend:
-                pos = np.searchsorted(universe, p_["missing"])
-                p_["pos"] = pos
+            extra = np.zeros(universe.size)
+            for _, _, _, b, cert, pos in pend:
                 miss_mask[pos] = True
-                i = p_["info"]
-                b = p_["boost"]
-                # per-doc geometric bound when the IVF scan handoff is
-                # present — UNCONDITIONAL (no router trust): a missing
-                # doc's chunks are (a) in the top-T handoff → value
-                # known, (b) scanned beyond top-T → <= scan_floor, or
-                # (c) unscanned → <= the q·c + R_c cell bound. For
-                # in-distribution queries this is far below the
-                # shortlist-min scalar, so stage A alone prunes the
-                # single-term tf tie bands that stage B would
-                # otherwise gather.
-                ub_arr = None
-                if (i.get("unscanned_bound") is not None
-                        and not i.get("exhausted")
-                        and not i.get("exact_topn")):
-                    base = float(i["unscanned_bound"])
-                    if i.get("scan_floor") is not None:
-                        base = max(base, float(i["scan_floor"]))
-                    base += 1e-5 * max(1.0, abs(base))
-                    ub_arr = np.full(pos.size, base)
-                    sd = i.get("scan_chunk_docs")
-                    ss = i.get("scan_chunk_s32")
-                    if sd is not None and sd.size:
-                        so = np.argsort(sd, kind="stable")
-                        sds, sss = sd[so], ss[so]
-                        u, st = np.unique(sds, return_index=True)
-                        mx = np.maximum.reduceat(sss, st)
-                        lp = np.searchsorted(u, p_["missing"])
-                        ok = lp < u.size
-                        ok[ok] &= u[lp[ok]] == p_["missing"][ok]
-                        if ok.any():
-                            v = mx[lp[ok]].astype(np.float64)
-                            v += 1e-5 * np.maximum(1.0, np.abs(v))
-                            ub_arr[ok] = np.maximum(ub_arr[ok], v)
-                    if i.get("router_confident"):
-                        ub_arr = np.minimum(ub_arr, float(i["min_score"]))
-                if ub_arr is not None:
-                    extra_a[pos] += (b * ub_arr) if b >= 0 else -b
-                else:
-                    ub = _pend_sem_ub(i)
-                    if ub is None:
-                        extra_a[pos] += np.inf
-                    else:
-                        extra_a[pos] += (b * ub) if b >= 0 else -b
-            cov = ~miss_mask
-            ncov = int(cov.sum())
-            if ncov >= limit > 0:
-                covt = total[cov]
-                boundary0 = float(
-                    np.partition(covt, ncov - limit)[ncov - limit]
-                )
-            else:
-                boundary0 = -np.inf
-            surv = miss_mask & (total + extra_a >= boundary0)
-            did_gather = False
+                ub = cert.doc_bound(universe[pos])
+                extra[pos] += (np.inf if ub is None
+                               else b * ub if b >= 0 else -b)
+            ncov = universe.size - int(miss_mask.sum())
+            boundary0 = (
+                float(np.partition(total[~miss_mask], ncov - limit)[ncov - limit])
+                if ncov >= limit > 0 else -np.inf
+            )
+            surv = miss_mask & (total + extra >= boundary0)
             if surv.any():
-                extra_b = np.zeros(universe.size)
-                for p_ in pend:
-                    sel = p_["missing"][surv[p_["pos"]]]
-                    p_["surv"] = sel
+                extra = np.zeros(universe.size)
+                for _, field, fcfg, b, _, pos in pend:
+                    sp = pos[surv[pos]]
+                    if sp.size:
+                        vals, aerr = _screen(field, fcfg, universe[sp])
+                        extra[sp] += b * vals + abs(b) * aerr
+                need = surv & (total + extra >= boundary0)
+                gathered = False
+                for ci, field, fcfg, b, _, pos in pend:
+                    sel = universe[pos[need[pos]]]
                     if not sel.size:
                         continue
-                    vals, aerr = _screen(p_["field"], p_["fcfg"], sel)
-                    spos = np.searchsorted(universe, sel)
-                    b = p_["boost"]
-                    extra_b[spos] += b * vals + abs(b) * aerr
-                need = surv & (total + extra_b >= boundary0)
-                if need.any():
-                    for p_ in pend:
-                        sel = p_["surv"]
-                        if not sel.size:
-                            continue
-                        sel = sel[need[np.searchsorted(universe, sel)]]
-                        if not sel.size:
-                            continue
-                        idx = pipeline.served_index(p_["field"])
-                        gdocs, gscores = idx.best_chunk_scores_for_docs(
-                            p_["fcfg"]["query"], sel
-                        )
-                        if not gdocs.size:
-                            continue
-                        col, docs, scores = components[p_["ci"]]
-                        md = np.concatenate([docs, gdocs])
-                        ms = np.concatenate(
-                            [scores, gscores * p_["boost"]]
-                        )
-                        order = np.argsort(md, kind="stable")
-                        components[p_["ci"]] = (
-                            col, md[order], ms[order]
-                        )
-                        did_gather = True
-            if did_gather:
-                universe, total, positions = _merge(components)
+                    gdocs, gscores = pipeline.served_index(
+                        field).best_chunk_scores_for_docs(fcfg["query"], sel)
+                    if not gdocs.size:
+                        continue
+                    col, docs, scores = components[ci]
+                    md = np.concatenate([docs, gdocs])
+                    order = np.argsort(md, kind="stable")
+                    ms = np.concatenate([scores, gscores * b])
+                    components[ci] = (col, md[order], ms[order])
+                    gathered = True
+                if gathered:
+                    universe, total, positions = _merge(components)
 
         # exact top-`limit` by (score desc, doc_id asc): threshold at
         # the k-th largest score, keep the (usually tiny) tie-inclusive
@@ -741,141 +653,65 @@ def _served_hybrid(
         order = np.lexsort((universe[cand], -total[cand]))
         top_pos = cand[order[:k]]
 
-        if semantic_mode != "candidate" or not infos:
-            break
-        open_fields = [(b, i) for b, i in infos if not i["exhausted"]]
-        if not open_fields:
-            break  # every shortlist covers its (filtered) corpus: exact
-
-        def _field_bound(i):
-            # Geometric certificate (VERDICT r7 next #5): when the IVF
-            # scan exposed its full probe round, an unseen doc's best
-            # chunk is EITHER a scanned chunk of a non-universe doc
-            # (its f32 score is known — masked max over the CHUNK
-            # arrays, O(scanned), no per-doc sort) OR lives in an
-            # unprobed cell (<= q·c + R_c, Cauchy-Schwarz). It is
-            # UNCONDITIONAL, so it needs no router trust. Falls back
-            # to the shortlist-min heuristic when the index carries no
-            # geometry (HNSW / pre-r8 saved graphs / full sweeps,
-            # where exact_topn already makes min_score unconditional).
-            sd = i.get("scan_chunk_docs")
-            if sd is None or i.get("unscanned_bound") is None:
-                return i["min_score"], bool(i.get("exact_topn"))
-            ub = i["unscanned_bound"]
-            # scanned chunks below the handed-off top-T score at most
-            # scan_floor (the T-th scan score) — valid and O(T)
-            m = i.get("scan_floor")
-            m = float("-inf") if m is None else float(m)
-            if sd.size:
-                pos = np.searchsorted(universe, sd)
-                posc = np.clip(pos, 0, max(universe.size - 1, 0))
-                outside = (
-                    universe[posc] != sd if universe.size
-                    else np.ones(sd.size, dtype=bool)
-                )
-                if outside.any():
-                    m = max(m, float(i["scan_chunk_s32"][outside].max()))
-            if m > float("-inf"):
-                ub = max(ub, m + 1e-5 * max(1.0, abs(m)))
-            # both bounds are valid when the router is confident —
-            # take the tighter (tiny clustered corpora have covering
-            # radii spanning the space, where the shortlist-min wins;
-            # ft-covered dense bands are where the geometry wins)
-            if i["router_confident"]:
-                ub = min(ub, i["min_score"])
-            return ub, True
-
-        bounds = [(b, *_field_bound(i)) for b, i in open_fields]
-        unseen_bound = sum(max(0.0, b * ub) for b, ub, _ in bounds)
+        open_ = [(b, cert) for _, _, b, cert in sem if not cert.exhausted]
+        if not open_:
+            break  # exact mode, or every shortlist covers its corpus
+        bounds = [cert.unseen_bound(universe) for _, cert in open_]
+        unseen = sum(max(0.0, b * ub) for (b, _), (ub, _) in zip(open_, bounds))
         boundary = float(total[top_pos[-1]]) if k >= limit else -np.inf
-        # Two conditions prove the top-k: (a) the k-th winner clears
-        # the unseen-doc bound, and (b) every open field's bound is
-        # TRUSTWORTHY — geometrically certified fields always are;
-        # heuristic (shortlist-min) fields need all lists probed or a
-        # confident index router (the best found chunk aligns with a
-        # centroid; an off-codebook query's probing order is noise and
-        # misses chunks inside the observed score range — measured at
-        # 100k: agreement 0.7 on exactly those).
-        trusted = all(
-            geo or i["router_confident"]
-            for (_, i), (_, _, geo) in zip(open_fields, bounds)
-        )
-        if boundary > unseen_bound and trusted:
+        if boundary > unseen and all(trusted for _, trusted in bounds):
             break
         if mult >= 64:
-            candidates_exhausted = True
+            exhausted = True
             break
-        unconf = [i for _, i in open_fields if not i["router_confident"]]
-        if unconf:
-            # jump straight to the full probe sweep: intermediate
-            # probe rounds re-ask an uninformative router. This is an
-            # escalation STRATEGY, not a trust condition — a
-            # geometrically-certified field can still be
-            # router-unconfident (OOD query), and stepping 1→4→16
-            # there wastes a probe round vs jumping to the sweep.
-            mult = min(
-                64,
-                max(mult * 4,
-                    max(i["full_probe_mult"] for i in unconf)),
-            )
-        else:
-            mult *= 4
-    if semantic_mode == "candidate":
-        collection._last_search_info = {
-            "search_id": search_id,
-            "candidate_mult": mult,
-            "candidates_exhausted": candidates_exhausted,
-        }
+        # an unconfident router jumps straight to the full probe sweep:
+        # intermediate probe rounds re-ask an uninformative router
+        # (an escalation STRATEGY, not a trust condition — a
+        # geometrically-certified field can still be router-unconfident)
+        unconf = [c.full_probe_mult for _, c in open_ if not c.router_confident]
+        mult = min(64, max(mult * 4, *unconf)) if unconf else mult * 4
+
+    # per-winner component values: telemetry coalesces an absent
+    # component to 0.0, result dicts surface it as None (the exact
+    # path's full-outer-join NULL)
     score_cols = [c for c, _, _ in components]
-
-    # per-field component values for just the k winners
-    comp_vals: list[dict[int, float]] = []
-    for (col, docs, scores), pos in zip(components, positions):
-        vals: dict[int, float] = {}
+    vals = [{} for _ in top_pos]
+    for (col, _, scores), pos in zip(components, positions or ()):
         if pos is not None:
-            hit = np.searchsorted(pos, top_pos)
-            hit = np.clip(hit, 0, pos.size - 1)
-            m = pos[hit] == top_pos
-            for tp, h in zip(top_pos[m], hit[m]):
-                vals[int(tp)] = float(scores[h])
-        comp_vals.append(vals)
-    # cols holds only PRESENT components: telemetry coalesces absent to
-    # 0.0; result dicts surface absent as None (the exact path's
-    # full-outer-join NULL)
-    top = [
-        (
-            float(total[p]),
-            int(universe[p]),
-            {
-                c: comp_vals[i][int(p)]
-                for i, c in enumerate(score_cols)
-                if int(p) in comp_vals[i]
-            },
-        )
-        for p in top_pos
-    ]
+            hit = np.minimum(np.searchsorted(pos, top_pos), pos.size - 1)
+            for j in np.flatnonzero(pos[hit] == top_pos):
+                vals[j][col] = float(scores[hit[j]])
+    top = [(float(total[p]), int(universe[p]), v) for p, v in zip(top_pos, vals)]
 
-    _buffer(
-        [
-            (did, {c: cols.get(c, 0.0) for c in score_cols} | {"score": s},
-             i + 1)
-            for i, (s, did, cols) in enumerate(top)
+    buf = getattr(collection, "_search_log_buffer", None)
+    if buf is None:
+        buf = collection._search_log_buffer = []
+    # exact-path parity: a searches row is logged even for zero-hit
+    # queries (e.g. a filter matching nothing)
+    buf.append({
+        "search_id": search_id,
+        "pipeline": pipeline.name,
+        "created_at": time.time(),
+        "query": query,
+        "results": [
+            (did, {c: v.get(c, 0.0) for c in score_cols} | {"score": s}, i + 1)
+            for i, (s, did, v) in enumerate(top)
         ],
-        candidates_exhausted=candidates_exhausted,
-    )
-    return _results(
+        "candidates_exhausted": exhausted,
+    })
+    return SearchResults(
         [
             {
                 "document_id": did,
                 "document": json.loads(doc_json[did]),
                 "score": s,
-                **{c: cols.get(c) for c in score_cols},
+                **{c: v.get(c) for c in score_cols},
                 "search_id": search_id,
             }
-            for s, did, cols in top
+            for s, did, v in top
         ],
-        mult=mult if semantic_mode == "candidate" else None,
-        exhausted=candidates_exhausted,
+        _search_info(search_id, semantic_mode, mult if candidate else None,
+                     exhausted),
     )
 
 
@@ -888,100 +724,68 @@ def flush_search_telemetry(collection) -> int:
     buf = getattr(collection, "_search_log_buffer", None)
     if not buf:
         return 0
-    spark = collection.spark
-    searches = _telemetry(collection, "searches", _SEARCHES_SCHEMA)
-    results = _telemetry(collection, "search_results", _RESULTS_SCHEMA)
-    now = time.time()
-    searches.append(
-        spark.createDataFrame(
-            [
-                (
-                    b["search_id"],
-                    collection.name,
-                    b.get("pipeline", ""),
-                    json.dumps(b["query"]),
-                    b.get("created_at", now),
-                )
-                for b in buf
-            ],
-            _SEARCHES_SCHEMA,
-        )
-    )
-    rrows = [
-        (b["search_id"], did, json.dumps(scores), rank)
-        for b in buf
-        for did, scores, rank in b["results"]
-    ]
-    if rrows:
-        results.append(spark.createDataFrame(rrows, _RESULTS_SCHEMA))
+    _log_searches(collection, buf)
     n = len(buf)
     buf.clear()
     return n
 
 
-def hybrid_search(collection, pipeline, query: dict, method: str = "auto") -> list[dict]:
+def _best_per_doc(scored: DataFrame, score: str, boost: float,
+                  alias: str) -> DataFrame:
+    """Best chunk per document by (``score`` desc, chunk_id), boosted
+    into column ``alias`` — the reference needs a recursive CTE for
+    this, Spark does it with one window row_number."""
+    w = Window.partitionBy("document_id").orderBy(
+        F.col(score).desc(), F.col("chunk_id")
+    )
+    return (
+        scored.withColumn("__rn", F.row_number().over(w))
+        .filter(F.col("__rn") == 1)
+        .select("document_id", (F.col(score) * boost).alias(alias))
+    )
+
+
+def hybrid_search(collection, pipeline, query: dict,
+                  method: str = "auto") -> SearchResults:
     """Hybrid semantic + full-text search with per-document dedup and
     COALESCE-sum scoring (search_query_builder.rs:60-536). Logs to
-    searches/search_results.
+    searches/search_results; every method returns SearchResults.
 
     method: "auto" (default — resident tier when the query has a
-    semantic field and no metadata filter, exact otherwise), "index"
-    (resident tier, EXACT semantic matvec, buffered telemetry — raises
-    on queries it can't serve), "candidate" (resident tier with the
-    semantic side CANDIDATE-BOUNDED through the ANN shortlist — the
-    reference's own plan shape and the O(candidates·d) scale path;
-    per-field overfetch via fields' "candidates" key), "exact" (full
-    DataFrame plan, synchronous telemetry — the oracle-pinned path)."""
+    semantic field whose index is declared or live, exact otherwise),
+    "index" (resident tier, EXACT semantic matvec, buffered telemetry
+    — raises on queries it can't serve), "candidate" (resident tier
+    with the semantic side CANDIDATE-BOUNDED through the ANN shortlist
+    — the reference's own plan shape and the O(candidates·d) scale
+    path; per-field overfetch via fields' "candidates" key), "exact"
+    (full DataFrame plan, synchronous telemetry — the oracle-pinned
+    path)."""
     spec = query.get("query", {})
     filt = spec.get("filter")
     limit = int(query.get("limit", 10))
     sem_fields = (spec.get("semantic_search") or {})
     ft_fields = (spec.get("full_text_search") or {})
 
-    if method not in ("exact", "index", "auto", "candidate"):
-        raise ValueError(f"unknown hybrid_search method {method!r}")
-    if method in ("index", "auto", "candidate"):
-        # the served path needs >=1 semantic field (document payloads
-        # and the resident metadata ride the semantic index); metadata
-        # filters evaluate against that resident metadata, so filtered
-        # hybrid queries serve too.  auto additionally requires the
-        # schema to DECLARE the index (or a live one to exist) — same
-        # no-silent-build contract as vector_search.
-        indexed = all(
-            pipeline.declares_index(f) or pipeline.has_live_index(f)
-            for f in sem_fields
+    # the served path needs >=1 semantic field (document payloads and
+    # the resident metadata ride the semantic index); metadata filters
+    # evaluate against that resident metadata, so filtered hybrid
+    # queries serve too
+    if _served(
+        "hybrid_search", method, pipeline, sem_fields, bool(sem_fields),
+        "this hybrid query (no semantic field to carry the payload map)",
+    ):
+        return _served_hybrid(
+            collection, pipeline, query,
+            semantic_mode="candidate" if method == "candidate" else "exact",
         )
-        if sem_fields and (method in ("index", "candidate") or indexed):
-            return _served_hybrid(
-                collection, pipeline, query,
-                semantic_mode="candidate" if method == "candidate"
-                else "exact",
-            )
-        if method in ("index", "candidate"):
-            raise ValueError(
-                f"method={method!r} cannot serve this hybrid query "
-                "(no semantic field to carry the payload map); "
-                "use method='auto' or 'exact'"
-            )
 
     score_dfs: list[DataFrame] = []
     for field, fcfg in sem_fields.items():
-        boost = float(fcfg.get("boost", 1.0))
         scored = _scored_chunks(collection, pipeline, field, fcfg["query"], filt)
-        w = Window.partitionBy("document_id").orderBy(
-            F.col("cosine").desc(), F.col("chunk_id")
-        )
-        best = (
-            scored.withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") == 1)  # best chunk per doc — no recursion
-            .select(
-                "document_id",
-                (F.col("cosine") * boost).alias(f"score_sem_{field}"),
-            )
-        )
-        score_dfs.append(best)
+        score_dfs.append(_best_per_doc(scored, "cosine",
+                                       float(fcfg.get("boost", 1.0)),
+                                       f"score_sem_{field}"))
     for field, fcfg in ft_fields.items():
-        boost = float(fcfg.get("boost", 1.0))
         terms = [t for t in fcfg["query"].lower().split() if t]
         toks = pipeline.table(f"{field}_tsvectors")
         chunks = pipeline.table(f"{field}_chunks")
@@ -992,20 +796,12 @@ def hybrid_search(collection, pipeline, query: dict, method: str = "auto") -> li
             .withColumn("__ts", _tsrank_col(F.col("tokens"), terms))
             .filter(F.col("__ts") > 0)
         )
-        w = Window.partitionBy("document_id").orderBy(
-            F.col("__ts").desc(), F.col("chunk_id")
-        )
-        best = (
-            scored.withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") == 1)
-            .select(
-                "document_id", (F.col("__ts") * boost).alias(f"score_ft_{field}")
-            )
-        )
-        score_dfs.append(best)
+        score_dfs.append(_best_per_doc(scored, "__ts",
+                                       float(fcfg.get("boost", 1.0)),
+                                       f"score_ft_{field}"))
 
     if not score_dfs:
-        return []
+        return SearchResults([], _search_info(None, "exact"))
     joined = score_dfs[0]
     for d in score_dfs[1:]:
         joined = joined.join(d, "document_id", "full_outer")  # :437-470
@@ -1027,40 +823,28 @@ def hybrid_search(collection, pipeline, query: dict, method: str = "auto") -> li
 
     # telemetry (searches/search_results, search_query_builder.rs:471-533)
     search_id = str(uuid.uuid4())
-    searches = _telemetry(collection, "searches", _SEARCHES_SCHEMA)
-    results = _telemetry(collection, "search_results", _RESULTS_SCHEMA)
-    spark = collection.spark
-    searches.append(
-        spark.createDataFrame(
-            [(search_id, collection.name, pipeline.name, json.dumps(query), time.time())],
-            _SEARCHES_SCHEMA,
-        )
+    _log_searches(collection, [{
+        "search_id": search_id, "pipeline": pipeline.name, "query": query,
+        "created_at": time.time(),
+        "results": [
+            (r["document_id"], {c: r[c] for c in score_cols + ["score"]},
+             i + 1)
+            for i, r in enumerate(rows)
+        ],
+    }])
+    return SearchResults(
+        [
+            {
+                "document_id": r["document_id"],
+                "document": json.loads(r["document"]),
+                "score": r["score"],
+                **{c: r[c] for c in score_cols},
+                "search_id": search_id,
+            }
+            for r in rows
+        ],
+        _search_info(search_id, "exact"),
     )
-    if rows:
-        results.append(
-            spark.createDataFrame(
-                [
-                    (
-                        search_id,
-                        r["document_id"],
-                        json.dumps({c: r[c] for c in score_cols + ["score"]}),
-                        i + 1,
-                    )
-                    for i, r in enumerate(rows)
-                ],
-                _RESULTS_SCHEMA,
-            )
-        )
-    return [
-        {
-            "document_id": r["document_id"],
-            "document": json.loads(r["document"]),
-            "score": r["score"],
-            **{c: r[c] for c in score_cols},
-            "search_id": search_id,
-        }
-        for r in rows
-    ]
 
 
 def add_search_event(collection, search_id: str, rank: int, event: dict) -> None:

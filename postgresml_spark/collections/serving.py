@@ -63,10 +63,12 @@ steady-state bench metric use.
 from __future__ import annotations
 
 import json
+from dataclasses import dataclass
 
 import numpy as np
 
 __all__ = [
+    "CandidateCertificate",
     "ServedPipelineIndex",
     "ServedTextIndex",
     "ShardedPipelineIndex",
@@ -94,6 +96,142 @@ def _f64_rows(vectors) -> np.ndarray:
     if not len(vectors):
         return np.zeros((0, 1))
     return np.asarray([np.asarray(v, dtype=np.float64) for v in vectors])
+
+
+def _fp32_slack(x):
+    """Rounding slack of a float32-selected cosine ``x`` (scalar or
+    array) read as a float64 bound: an unseen chunk u with
+    s32(u) <= s only gives s64(u) <= s + 2e, e the fp32 dot rounding
+    (~sqrt(d)·eps32 for BLAS order)."""
+    return 1e-5 * np.maximum(1.0, np.abs(x))
+
+
+@dataclass(frozen=True)
+class CandidateCertificate:
+    """What an ANN candidate shortlist proves about the documents it
+    did NOT return. ``candidate_chunk_scores`` builds one per field and
+    ``merge`` combines doc-disjoint shards'; the candidate hybrid reads
+    it only through ``doc_bound`` (the deferred-augmentation prune) and
+    ``unseen_bound`` (the stop rule). All scores are float64-rescored
+    cosines. The defaults are the exact certificate: nothing is unseen
+    (an empty or fully covered shortlist, or the exact scan below the
+    flop crossover).
+
+    - ``min_score``: the shortlist's lowest cosine plus fp32 slack. It
+      bounds every unseen chunk when the shortlist is the exact top-n
+      (``exact_topn``: every IVF list probed, or an exact index) or
+      the IVF router is confident (``router_confident``: the best found
+      chunk aligns with some centroid; an off-codebook query's probing
+      order is noise and misses chunks inside the observed range). An
+      HNSW shortlist has no router and is always marked confident.
+    - ``exhausted``: the shortlist holds every allowed chunk, so an
+      unseen doc has no chunk at all.
+    - ``full_probe_mult``: the ``widen`` at which every list is probed,
+      the escalation target when the router is not confident.
+    - The geometric part, present after a partial IVF probe round
+      (``unscanned_bound`` is not None) and valid without router trust:
+      ``unscanned_bound`` = max(q·c + R_c) over unprobed cells bounds
+      every unprobed chunk (Cauchy-Schwarz); ``scan_docs``/``scan_s32``
+      are the doc ids and f32 cosines of the scan's top-T chunks and
+      ``scan_floor`` (the T-th score) bounds every other scanned chunk.
+
+    Trust is a flag beside each bound, never a ``+inf`` stand-in: a
+    negative boost turns an infinite bound into -inf."""
+
+    min_score: float = float("-inf")
+    exhausted: bool = True
+    exact_topn: bool = True
+    router_confident: bool = True
+    full_probe_mult: int = 1
+    unscanned_bound: float | None = None
+    scan_floor: float = float("-inf")
+    scan_docs: np.ndarray | None = None
+    scan_s32: np.ndarray | None = None
+
+    @classmethod
+    def merge(cls, certs) -> "CandidateCertificate":
+        """Certificate of doc-disjoint shards: an unseen doc lives in
+        exactly one shard, so every bound is the max over the open
+        (non-exhausted) shards and every trust flag needs all of them.
+        The geometric part survives only when every open shard carries
+        one; its scan arrays concatenate (the bounds take masked
+        maxima, so they need no per-doc dedup)."""
+        certs = list(certs)
+        open_ = [c for c in certs if not c.exhausted]
+        if not open_:
+            return cls()
+        geo = {}
+        if all(c.unscanned_bound is not None for c in open_):
+            scans = [c for c in certs if c.scan_docs is not None]
+            geo = dict(
+                unscanned_bound=max(c.unscanned_bound for c in open_),
+                scan_floor=max(c.scan_floor for c in certs),
+                scan_docs=np.concatenate([c.scan_docs for c in scans]),
+                scan_s32=np.concatenate([c.scan_s32 for c in scans]),
+            )
+        return cls(
+            min_score=max(c.min_score for c in open_),
+            exhausted=False,
+            exact_topn=all(c.exact_topn for c in open_),
+            router_confident=all(c.router_confident for c in open_),
+            full_probe_mult=max(c.full_probe_mult for c in open_),
+            **geo,
+        )
+
+    def doc_bound(self, docs: np.ndarray) -> np.ndarray | None:
+        """Upper bound on the best-chunk cosine of each of ``docs``
+        (sorted doc ids outside the shortlist), or None when no bound
+        is trusted. With geometry the bound is per doc: a doc's chunks
+        are in the top-T handoff (score known), scanned below it
+        (<= scan_floor) or unprobed (<= unscanned_bound); for
+        in-distribution queries that sits far below ``min_score``."""
+        if self.exhausted:
+            return np.zeros(docs.size)
+        if self.exact_topn or (self.unscanned_bound is None
+                               and self.router_confident):
+            return np.full(docs.size, self.min_score)
+        if self.unscanned_bound is None:
+            return None
+        base = max(self.unscanned_bound, self.scan_floor)
+        if base > float("-inf"):
+            base += _fp32_slack(base)
+        ub = np.full(docs.size, base)
+        if self.scan_docs.size:
+            so = np.argsort(self.scan_docs, kind="stable")
+            u, st = np.unique(self.scan_docs[so], return_index=True)
+            mx = np.maximum.reduceat(self.scan_s32[so], st)
+            lp = np.searchsorted(u, docs)
+            ok = lp < u.size
+            ok[ok] &= u[lp[ok]] == docs[ok]
+            v = mx[lp[ok]].astype(np.float64)
+            ub[ok] = np.maximum(ub[ok], v + _fp32_slack(v))
+        if self.router_confident:
+            ub = np.minimum(ub, self.min_score)
+        return ub
+
+    def unseen_bound(self, universe: np.ndarray) -> tuple[float, bool]:
+        """(bound, trusted) on the best-chunk cosine of any doc outside
+        ``universe`` (the sorted, non-empty doc ids every component
+        scored). The shortlist-min is trusted under ``exact_topn`` or
+        router confidence; the geometric bound always is, and both
+        hold under router confidence, so the tighter one is taken
+        (tiny clustered corpora have covering radii spanning the
+        space, where the shortlist-min wins)."""
+        if self.unscanned_bound is None:
+            return self.min_score, self.exact_topn or self.router_confident
+        m = self.scan_floor
+        if self.scan_docs.size:
+            pos = np.minimum(np.searchsorted(universe, self.scan_docs),
+                             universe.size - 1)
+            outside = universe[pos] != self.scan_docs
+            if outside.any():
+                m = max(m, float(self.scan_s32[outside].max()))
+        ub = self.unscanned_bound
+        if m > float("-inf"):
+            ub = max(ub, m + _fp32_slack(m))
+        if self.router_confident:
+            ub = min(ub, self.min_score)
+        return ub, True
 
 
 class _Versioned:
@@ -715,10 +853,10 @@ class ServedPipelineIndex(_Versioned):
         filter: dict | None = None,
         ef: int | None = None,
         widen: int = 1,
-        return_info: bool = False,
     ):
-        """(doc_ids, best_cosine) over an ANN CANDIDATE SHORTLIST —
-        the scale path for hybrid's semantic side (VERDICT r5 next #1).
+        """(doc_ids, best_cosine, CandidateCertificate) over an ANN
+        CANDIDATE SHORTLIST — the scale path for hybrid's semantic side
+        (VERDICT r5 next #1).
 
         best_chunk_scores is exact but O(corpus·d) BLAS per query: at
         10M chunks × 1024 dims a single query reads ~80 GB. The
@@ -732,38 +870,31 @@ class ServedPipelineIndex(_Versioned):
         seen, never their scores), and a per-doc max reduces candidates
         to document scores. Docs absent from the shortlist are absent
         from the returned arrays — the hybrid merge already treats
-        absent components as 0 (the full-outer-join NULL).
+        absent components as 0 (the full-outer-join NULL) — and the
+        certificate bounds what they could score.
 
         Cost: O(n_candidates·d) instead of O(corpus·d); recall vs the
         exact plan is measured in tools/hybrid_candidate_agreement.py
         (top-10 agreement pinned ≥0.95 in tests)."""
-        qv, qn = self._query(query_text)
-
-        def _ret(docs, scores, info):
-            return (docs, scores, info) if return_info else (docs, scores)
-
-        # empty returns are SAFE (exhausted): the exact plan finds
-        # nothing there either (zero query norm / empty corpus / filter
-        # matching no rows), so no unseen doc can out-rank the merge
-        empty = (np.empty(0, dtype=np.int64), np.empty(0))
-        safe_info = {"min_score": float("-inf"), "max_score": float("-inf"),
-                     "exhausted": True, "exact_topn": True,
-                     "router_confident": True, "full_probe_mult": 1}
-        if not len(self.mat64) or qn == 0.0:
-            return _ret(*empty, safe_info)
         # flops crossover (same rule as filtered serving): below ~2M
         # multiply-adds the FULL exact scan is cheaper than one ANN
-        # gather — and it makes candidate mode literally exact, so the
-        # adaptive loop never needs to escalate on small corpora/shards
-        # (weak-embedding small corpora otherwise trip the router check
-        # and pay a pointless multi-pass sweep)
+        # gather, so candidate mode IS the exact served mode here —
+        # best_chunk_scores' arrays (a zero-norm query included) with
+        # the exact certificate, and the query is embedded once
         if self.mat64.size <= 2_000_000:
-            docs, scores = self.best_chunk_scores(query_text, filter=filter)
-            return _ret(docs, scores, dict(safe_info))
+            return (*self.best_chunk_scores(query_text, filter=filter),
+                    CandidateCertificate())
+        qv, qn = self._query(query_text)
+        # empty returns are exact: the exact plan finds nothing there
+        # either (zero query norm / filter matching no rows)
+        empty = (np.empty(0, dtype=np.int64), np.empty(0),
+                 CandidateCertificate())
+        if qn == 0.0:
+            return empty
         idx = self.hnsw
         allowed = self._ann_allowed(filter)
         if allowed is not None and not allowed.any():
-            return _ret(*empty, safe_info)
+            return empty
         avail = (
             len(self.chunk_ids) if allowed is None else int(allowed.sum())
         )
@@ -771,8 +902,7 @@ class ServedPipelineIndex(_Versioned):
         exact_topn = False
         router_max = float("inf")
         full_probe_mult = 1
-        scanned_docs = scanned_best32 = None
-        unscanned_bound = scan_floor = None
+        geo = {}
         if self.kind == "ivfflat":
             base_probes = int(self._params.get("probes", 4))
             probes_used = base_probes * max(1, int(widen))
@@ -785,25 +915,23 @@ class ServedPipelineIndex(_Versioned):
                     nprobe=probes_used if widen > 1 else None,
                 )
                 # full sweep (or exact index): the shortlist is already
-                # provably exact top-n (exact_topn below) — min_score
-                # is an unconditional bound there, so the scan arrays
-                # buy nothing and their O(scanned) handoff isn't free
+                # provably exact top-n — min_score is an unconditional
+                # bound there, so the scan arrays buy nothing and their
+                # O(scanned) handoff isn't free
                 if 0 < probes_used < nlist_now
                 else None
             )
             if scan is not None:
                 # geometric-certificate path (VERDICT r7 next #5): the
                 # probe round scored EVERY chunk of the probed cells —
-                # expose CHUNK-LEVEL f32 scores + doc ids for the scan's
-                # top-T (one argpartition, which the shortlist needed
-                # anyway) plus scan_floor = the T-th score: any scanned
-                # chunk beyond the top-T scores <= scan_floor, so the
-                # proof's outside-universe max stays a true bound while
+                # hand off CHUNK-LEVEL f32 scores + doc ids for the
+                # scan's top-T (one argpartition, which the shortlist
+                # needed anyway) plus scan_floor = the T-th score, so
                 # the handoff is O(T), not O(scanned) — full-scan
                 # handoffs measured 1.6-2.5x the candidate median at 1M.
                 scan_rows, scan_s32, unscanned_bound = scan
                 if not scan_rows.size:
-                    return _ret(*empty, safe_info)
+                    return empty
                 kk = min(n_cand, len(scan_s32))
                 T = min(max(2048, 4 * kk), len(scan_s32))
                 if len(scan_s32) > T:
@@ -816,8 +944,11 @@ class ServedPipelineIndex(_Versioned):
                 top = selT[ordT[:kk]]
                 found = [(idx.ids[scan_rows[i]].item(),
                           float(scan_s32[i])) for i in top]
-                scanned_docs = self._ann_doc_ids()[scan_rows[selT]]
-                scanned_best32 = scan_s32[selT]
+                geo = dict(
+                    unscanned_bound=unscanned_bound, scan_floor=scan_floor,
+                    scan_docs=self._ann_doc_ids()[scan_rows[selT]],
+                    scan_s32=scan_s32[selT],
+                )
             else:  # full sweep or exact index
                 found = idx.search(
                     qv, k=n_cand, allowed=allowed,
@@ -827,9 +958,6 @@ class ServedPipelineIndex(_Versioned):
                 exact_topn = True
             else:
                 nlist_eff = len(idx.centroids)
-                # probes >= nlist means every list was scanned: the
-                # shortlist is PROVABLY the exact top-n_cand, so the
-                # min-score bound below is a true bound, not a heuristic
                 exact_topn = probes_used >= nlist_eff
                 q32 = qv.astype(np.float32)
                 q32n = float(np.linalg.norm(q32))
@@ -844,55 +972,27 @@ class ServedPipelineIndex(_Versioned):
                 allowed=allowed,
             )
         if not found:
-            return _ret(*empty, safe_info)
+            return empty
         rows, scores = self._rescore(found, qv, qn)
         cand_docs = self.doc_ids[rows]
         perm = np.argsort(cand_docs, kind="stable")
         uniq, starts = np.unique(cand_docs[perm], return_index=True)
         best = np.maximum.reduceat(scores[perm], starts)
-        mx = float(scores.max())
-        # fp32 slack (ADVICE r7): the shortlist was SELECTED by
-        # float32 index scores but this bound is float64-rescored —
-        # an unseen chunk u satisfies s32(u) <= min s32(shortlist),
-        # which only gives s64(u) <= min s64(shortlist) + 2e where e
-        # bounds fp32 dot rounding (~sqrt(d)*eps32 for BLAS order);
-        # without the slack a boundary-straddling doc can defeat the
-        # strict `boundary > unseen_bound` proof
-        fp32_eps = 1e-5 * max(1.0, abs(float(scores.min())))
-        info = {
-            # exact-rescored boundary of the RAW shortlist: under the
-            # exact-top-n reading of the shortlist, any unseen chunk
-            # scores <= min_score — the adaptive-overfetch safety bound
-            "min_score": float(scores.min()) + fp32_eps,
-            "max_score": mx,
-            "exhausted": len(found) >= avail,
-            # the min-score bound is only as good as the index's
-            # routing. IVF routing is informative when the best found
-            # chunk aligns with SOME centroid (in-distribution query);
-            # a query whose observed matches beat every centroid
-            # alignment is off-codebook — probing order is noise and
-            # the shortlist may miss better chunks INSIDE its own score
-            # range (measured: OOD misses at 100k sat between min and
-            # max). exact_topn (all lists probed) restores the bound.
-            "exact_topn": exact_topn,
-            "router_confident": (
+        lo, mx = float(scores.min()), float(scores.max())
+        return uniq.astype(np.int64), best, CandidateCertificate(
+            # the shortlist was SELECTED by float32 index scores but is
+            # float64-rescored (ADVICE r7): without the slack a
+            # boundary-straddling doc can defeat the strict
+            # `boundary > unseen_bound` proof
+            min_score=float(lo + _fp32_slack(lo)),
+            exhausted=len(found) >= avail,
+            exact_topn=exact_topn,
+            router_confident=(
                 exact_topn or mx <= 0.0 or router_max >= 0.8 * mx
             ),
-            # widen multiplier at which every list is probed — the
-            # escalation target when the router is unconfident (skips
-            # the useless intermediate probe rounds)
-            "full_probe_mult": full_probe_mult,
-            # geometric-certificate fields (None on non-IVF / full-
-            # sweep paths): CHUNK-level doc ids + f32 scores over the
-            # WHOLE probed scan, plus the unconditional q·c + R_c
-            # bound on every unprobed cell — search.py's proof prefers
-            # these over min_score when present
-            "scan_chunk_docs": scanned_docs,
-            "scan_chunk_s32": scanned_best32,
-            "scan_floor": scan_floor,
-            "unscanned_bound": unscanned_bound,
-        }
-        return _ret(uniq.astype(np.int64), best, info)
+            full_probe_mult=full_probe_mult,
+            **geo,
+        )
 
 
 class ServedTextIndex(_Versioned):
@@ -1194,77 +1294,16 @@ class ShardedPipelineIndex(_Sharded):
     def candidate_chunk_scores(self, query_text: str, n_candidates: int,
                                filter: dict | None = None,
                                ef: int | None = None,
-                               widen: int = 1,
-                               return_info: bool = False):
+                               widen: int = 1):
         # per-shard overfetch: each shard contributes up to the full
         # candidate budget; the hybrid merge takes care of ranking
         per = max(1, -(-int(n_candidates) // self.n_shards))
         parts = self._scatter(
             lambda s: s.candidate_chunk_scores(query_text, per, filter=filter,
-                                               ef=ef, widen=widen,
-                                               return_info=True),
+                                               ef=ef, widen=widen),
         )
         docs, scores = _gather([(d, s) for d, s, _ in parts])
-        if not return_info:
-            return docs, scores
-        # an unseen doc lives in exactly ONE shard, so the global bound
-        # is the max of the NON-exhausted shards' boundaries (exhausted
-        # shards hide nothing)
-        open_infos = [i for _, _, i in parts if not i["exhausted"]]
-        # geometric certificate merge: shards are doc-disjoint, so the
-        # scanned per-doc bests concatenate and the unscanned bound is
-        # the max over OPEN shards. Usable only when every open shard
-        # carries geometry (a pre-r8 shard degrades the whole merge to
-        # the min_score heuristic).
-        geo_ok = all(
-            i.get("unscanned_bound") is not None for i in open_infos
-        ) and bool(open_infos)
-        sdocs = sbest = None
-        unscanned = None
-        if geo_ok:
-            with_scan = [
-                i for _, _, i in parts
-                if i.get("scan_chunk_docs") is not None
-            ]
-            if with_scan:
-                # chunk-level arrays concatenate as-is (shards are
-                # doc-disjoint; the proof side only takes a masked max)
-                sdocs = np.concatenate(
-                    [i["scan_chunk_docs"] for i in with_scan]
-                )
-                sbest = np.concatenate(
-                    [i["scan_chunk_s32"] for i in with_scan]
-                )
-            else:
-                sdocs = np.empty(0, dtype=np.int64)
-                sbest = np.empty(0)
-            unscanned = max(
-                i["unscanned_bound"] for i in open_infos
-            )
-            floors = [i["scan_floor"] for _, _, i in parts
-                      if i.get("scan_floor") is not None]
-            sfloor = max(floors) if floors else None
-        info = {
-            "min_score": max(
-                (i["min_score"] for i in open_infos), default=float("-inf")
-            ),
-            "max_score": max(
-                (i["max_score"] for _, _, i in parts), default=float("-inf")
-            ),
-            "exhausted": not open_infos,
-            "exact_topn": all(i["exact_topn"] for i in open_infos),
-            "router_confident": all(
-                i["router_confident"] for i in open_infos
-            ),
-            "full_probe_mult": max(
-                (i["full_probe_mult"] for i in open_infos), default=1
-            ),
-            "scan_chunk_docs": sdocs,
-            "scan_chunk_s32": sbest,
-            "scan_floor": sfloor if geo_ok else None,
-            "unscanned_bound": unscanned,
-        }
-        return docs, scores, info
+        return docs, scores, CandidateCertificate.merge(c for _, _, c in parts)
 
     def best_chunk_scores_for_docs(self, query_text: str, docs):
         # non-resident docs drop shard-locally, so routing is implicit

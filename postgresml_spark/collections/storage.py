@@ -445,21 +445,23 @@ class BucketedVersionedTable(VersionedTable):
 
     def _extra(self, vdir: str, name: str):
         """A version's `_delta`/`_tombstones` sidecar, or None. Read by
-        a `part-*.parquet` glob (naming the underscore dir itself makes
-        Spark log `All paths were ignored` on every read) with the
-        known write-time schema — no per-read inference job: tombstones
-        are always a 1-column string file, the delta schema is recorded
-        at write. An empty sidecar dir reads as an empty frame."""
+        its explicit `part-*.parquet` file list (naming the underscore
+        dir itself makes Spark log `All paths were ignored`, and a glob
+        makes FileStreamSink log a `FileNotFoundException` stack while
+        probing it for a metadata dir) with the known write-time schema
+        — no per-read inference job: tombstones are always a 1-column
+        string file, the delta schema is recorded at write. An empty
+        sidecar dir reads as an empty frame."""
         p = os.path.join(vdir, name)
         if not os.path.isdir(p):
             return None
-        files = os.path.join(p, "part-*.parquet")
+        files = _part_files(p)
         sch = ("__key string" if name == "_tombstones"
                else self._load_schema(vdir, key="delta"))
-        if not _part_files(p):
+        if not files:
             return None if sch is None else self.spark.createDataFrame([], sch)
         r = self.spark.read
-        return (r if sch is None else r.schema(sch)).parquet(files)
+        return (r if sch is None else r.schema(sch)).parquet(*files)
 
     def stats(self) -> dict:
         import json

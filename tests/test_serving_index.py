@@ -493,7 +493,7 @@ def test_search_results_payload_carries_search_info(hybrid_setup):
     the candidate path's quality flags — a SearchResults list (drop-in
     list of dicts) with `search_info` carrying search_id /
     candidate_mult / candidates_exhausted, so callers don't need
-    telemetry or _last_search_info to see a best-effort top-k."""
+    telemetry to see a best-effort top-k."""
     from postgresml_spark.collections.search import SearchResults
 
     coll, pipe = hybrid_setup
@@ -508,8 +508,9 @@ def test_search_results_payload_carries_search_info(hybrid_setup):
     assert info["candidates_exhausted"] is False
     assert info["candidate_mult"] >= 1
     # matches the telemetry-side record for the same search
-    assert info["candidates_exhausted"] == \
-        coll._last_search_info["candidates_exhausted"]
+    logged = coll._search_log_buffer[-1]
+    assert logged["search_id"] == info["search_id"]
+    assert logged["candidates_exhausted"] == info["candidates_exhausted"]
     # the exact-matvec served mode carries the surface too (trivially
     # not exhausted), and plain-list semantics are untouched
     res_ix = coll.search(
@@ -522,6 +523,26 @@ def test_search_results_payload_carries_search_info(hybrid_setup):
     assert [r["document_id"] for r in res_ix] == [
         r["document_id"] for r in list(res_ix)
     ]
+
+
+def test_hybrid_search_info_same_keys_for_every_method(hybrid_setup):
+    """SearchResults.search_info is the one result channel of
+    hybrid_search: the exact DataFrame plan, the served exact matvec
+    and the candidate path return it with the same keys."""
+    from postgresml_spark.collections.search import SearchResults
+
+    coll, pipe = hybrid_setup
+    q = _hq("distributed query engine", "spark stream")
+    infos = {}
+    for method in ("exact", "index", "candidate"):
+        res = coll.search(q, pipe, method=method)
+        assert isinstance(res, SearchResults) and res
+        assert res.search_info["search_id"] == res[0]["search_id"]
+        infos[method] = res.search_info
+    assert set(infos["exact"]) == set(infos["index"]) == set(infos["candidate"])
+    assert infos["exact"]["semantic_mode"] == "exact"
+    assert infos["exact"]["candidate_mult"] is None
+    assert infos["candidate"]["semantic_mode"] == "candidate"
 
 
 def test_served_hybrid_filtered_matches_exact(hybrid_setup):
@@ -1518,6 +1539,37 @@ def test_ef_search_parameter_passes_through(hybrid_setup, monkeypatch):
     assert seen["ef"] is None
 
 
+def _geometric_ivf_corpus():
+    """Canonical dense-band shape: a 3200-chunk near-duplicate band at
+    one center (the common-term regime where the shortlist-min sits
+    inside the band) + 15 far tight clusters, 6,200 × 384. Noise scale
+    0.01 keeps per-cell covering radii ~0.2 (||noise|| ≈ 0.01·sqrt(384)),
+    so the unprobed-cell bound lands far below the band. Returns
+    (rng, chunk_ids, doc_ids, mat, query vector, doc payloads); the rng
+    is handed on for callers that draw more data."""
+    import json as _json
+
+    import numpy as np
+
+    rng = np.random.default_rng(17)
+    dim, n_chunks = 384, 6200
+    centers = rng.normal(size=(16, dim))
+    centers /= np.linalg.norm(centers, axis=1, keepdims=True)
+    cl = np.concatenate([np.zeros(3200, dtype=int),
+                         1 + np.arange(3000) % 15])
+    mat = (centers[cl] + rng.normal(scale=0.01, size=(n_chunks, dim))
+           ).astype(np.float32)
+    chunk_ids = np.arange(n_chunks, dtype=np.int64)
+    doc_ids = rng.integers(0, n_chunks // 3, size=n_chunks)
+    qv = centers[0] + rng.normal(scale=0.02, size=dim)
+    payloads = {
+        int(d): _json.dumps({"id": int(d),
+                             "lang": "en" if d % 2 else "fr"})
+        for d in np.unique(doc_ids)
+    }
+    return rng, chunk_ids, doc_ids, mat, qv, payloads
+
+
 def test_candidate_geometric_certificate_fields_and_filtered_parity():
     """VERDICT r7 next #5: the IVF candidate path must expose its
     geometric certificate — per-doc f32 bests over the WHOLE probed
@@ -1533,51 +1585,27 @@ def test_candidate_geometric_certificate_fields_and_filtered_parity():
         ServedTextIndex,
     )
 
-    rng = np.random.default_rng(17)
-    # canonical dense-band shape: a 3200-chunk near-duplicate band at
-    # one center (the common-term regime where the shortlist-min sits
-    # inside the band) + 15 far tight clusters. Noise scale 0.01 keeps
-    # per-cell covering radii ~0.2 (||noise|| ≈ 0.01·sqrt(384)), so
-    # the unprobed-cell bound lands far below the band.
-    dim, n_chunks = 384, 6200
-    centers = rng.normal(size=(16, dim))
-    centers /= np.linalg.norm(centers, axis=1, keepdims=True)
-    cl = np.concatenate([np.zeros(3200, dtype=int),
-                         1 + np.arange(3000) % 15])
-    mat = (centers[cl] + rng.normal(scale=0.01, size=(n_chunks, dim))
-           ).astype(np.float32)
-    chunk_ids = np.arange(n_chunks, dtype=np.int64)
-    doc_ids = rng.integers(0, n_chunks // 3, size=n_chunks)
-    qv = centers[0] + rng.normal(scale=0.02, size=dim)
-    import json as _json
-
-    payloads = {
-        int(d): _json.dumps({"id": int(d),
-                             "lang": "en" if d % 2 else "fr"})
-        for d in np.unique(doc_ids)
-    }
+    rng, chunk_ids, doc_ids, mat, qv, payloads = _geometric_ivf_corpus()
+    n_chunks = len(chunk_ids)
     idx = ServedPipelineIndex.from_arrays(
         chunk_ids, doc_ids, mat, lambda q: qv,
         kind="ivfflat", params={"lists": 16, "probes": 4},
         doc_json=payloads,
     )
-    docs, scores, info = idx.candidate_chunk_scores(
-        "q", n_candidates=80, return_info=True
-    )
-    assert info["scan_chunk_docs"] is not None
-    assert info["scan_chunk_s32"] is not None
-    assert info["scan_chunk_docs"].shape == info["scan_chunk_s32"].shape
+    docs, scores, cert = idx.candidate_chunk_scores("q", n_candidates=80)
+    assert cert.scan_docs is not None
+    assert cert.scan_s32 is not None
+    assert cert.scan_docs.shape == cert.scan_s32.shape
     # the scan covers every returned doc (chunk-level arrays)
-    assert set(docs.tolist()) <= set(info["scan_chunk_docs"].tolist())
+    assert set(docs.tolist()) <= set(cert.scan_docs.tolist())
     # clustered regime: the unscanned-cell geometry bound sits BELOW
     # the dense shortlist-min — that gap is what stops the ft-covered
     # dense-band escalation
-    assert info["unscanned_bound"] < info["min_score"]
+    assert cert.unscanned_bound < cert.min_score
     # each returned doc's f64-rescored best agrees with the max of its
     # scanned f32 chunk scores to fp32 tolerance
     best32 = {}
-    for d, s in zip(info["scan_chunk_docs"].tolist(),
-                    info["scan_chunk_s32"].tolist()):
+    for d, s in zip(cert.scan_docs.tolist(), cert.scan_s32.tolist()):
         best32[d] = max(best32.get(d, -2.0), s)
     for d, s in zip(docs.tolist(), scores.tolist()):
         assert abs(best32[int(d)] - s) < 1e-4
@@ -1619,6 +1647,160 @@ def test_candidate_geometric_certificate_fields_and_filtered_parity():
         assert abs(c["score"] - e["score"]) < 1e-9
 
 
+def _certificate_index(shards: int):
+    """The geometric fixture as one ivfflat index, or as shard 0 of a
+    4-shard ``from_shards`` index whose shards 1-3 are 6,200 × 384
+    corpora of 16 tight clusters drawn with their own seeds. Doc ids
+    are 4·d + i on shard i (doc-disjoint), and every shard stays above
+    the 2M-flop crossover, so each certifies by probe geometry; the
+    fixture's query is in-distribution for shard 0 and off-codebook for
+    the others."""
+    import numpy as np
+
+    from postgresml_spark.collections.serving import (
+        ServedPipelineIndex,
+        ShardedPipelineIndex,
+    )
+
+    _, chunk_ids, doc_ids, mat, qv, _ = _geometric_ivf_corpus()
+    if shards == 1:
+        return ServedPipelineIndex.from_arrays(
+            chunk_ids, doc_ids, mat, lambda q: qv,
+            kind="ivfflat", params={"lists": 16, "probes": 4})
+    n, dim = mat.shape
+    parts = []
+    for i in range(shards):
+        if i:
+            rng = np.random.default_rng(100 + i)
+            centers = rng.normal(size=(16, dim))
+            centers /= np.linalg.norm(centers, axis=1, keepdims=True)
+            mat = (centers[np.arange(n) % 16]
+                   + rng.normal(scale=0.01, size=(n, dim))).astype(np.float32)
+        parts.append(ServedPipelineIndex.from_arrays(
+            chunk_ids + i * n, doc_ids * shards + i, mat, lambda q: qv,
+            kind="ivfflat", params={"lists": 16, "probes": 4}))
+    return ShardedPipelineIndex.from_shards(parts)
+
+
+@pytest.mark.parametrize("shards", [1, 4], ids=["single", "four_shards"])
+def test_candidate_certificate_is_sound(shards):
+    """The candidate certificate's two answers are true bounds: every
+    resident doc outside the shortlist scores (exact best-chunk f64
+    cosine) at most its per-doc bound, and whenever the unseen-doc
+    bound is trusted, no doc outside the merge universe beats it —
+    for one index and for the doc-disjoint merge of four shards."""
+    import numpy as np
+
+    idx = _certificate_index(shards)
+    all_docs, exact = idx.best_chunk_scores("q")
+    rng = np.random.default_rng(3)
+    checked_trusted = 0
+    for n_cand, widen in ((80, 1), (400, 1), (80, 2)):
+        docs, _, cert = idx.candidate_chunk_scores(
+            "q", n_candidates=n_cand, widen=widen)
+        assert not cert.exhausted and cert.unscanned_bound is not None
+        outside = ~np.isin(all_docs, docs)
+        ub = cert.doc_bound(all_docs[outside])
+        assert ub is not None  # geometry bounds without router trust
+        assert np.all(exact[outside] <= ub)
+        # universes: the shortlist alone, and with other docs scored
+        # by a second component (the masked-max path of the bound)
+        extra = rng.choice(all_docs[outside], size=200, replace=False)
+        for universe in (docs, np.union1d(docs, extra)):
+            bound, trusted = cert.unseen_bound(universe)
+            unseen = ~np.isin(all_docs, universe)
+            if trusted:
+                checked_trusted += 1
+                assert exact[unseen].max() <= bound
+    assert checked_trusted
+
+
+def test_certificate_merge_and_bounds_without_unprobed_cells():
+    """Pins the certificate arithmetic on hand-built values: the shard
+    merge takes maxima over open shards and drops geometry a shard
+    lacks; a probe round that reached every cell (unscanned bound
+    -inf, every scanned chunk handed off) bounds a doc by its handed-off
+    chunks alone and a doc without one by -inf, never NaN."""
+    import numpy as np
+
+    from postgresml_spark.collections.serving import CandidateCertificate
+
+    slack = lambda x: x + 1e-5  # noqa: E731  (|x| <= 1)
+    geo = CandidateCertificate(
+        min_score=0.9, exhausted=False, exact_topn=False,
+        router_confident=False, full_probe_mult=4,
+        unscanned_bound=float("-inf"),
+        scan_docs=np.array([5, 5, 7]),
+        scan_s32=np.array([0.5, 0.7, 0.2], dtype=np.float32))
+    ub = geo.doc_bound(np.array([5, 6, 7]))
+    assert ub[1] == float("-inf") and not np.isnan(ub).any()
+    assert ub[0] == pytest.approx(slack(0.7)) and ub[2] == pytest.approx(slack(0.2))
+    assert geo.unseen_bound(np.array([5])) == (pytest.approx(slack(0.2)), True)
+    assert geo.unseen_bound(np.array([5, 7])) == (float("-inf"), True)
+
+    heur = CandidateCertificate(min_score=0.95, exhausted=False,
+                                exact_topn=False, router_confident=True,
+                                full_probe_mult=2)
+    assert heur.doc_bound(np.array([1, 2])).tolist() == [0.95, 0.95]
+    assert heur.unseen_bound(np.array([1])) == (0.95, True)
+    untrusted = CandidateCertificate(min_score=0.95, exhausted=False,
+                                     exact_topn=False,
+                                     router_confident=False)
+    assert untrusted.doc_bound(np.array([1])) is None
+    assert untrusted.unseen_bound(np.array([1])) == (0.95, False)
+
+    merged = CandidateCertificate.merge([geo, CandidateCertificate()])
+    assert merged.scan_docs.tolist() == [5, 5, 7]
+    assert (merged.min_score, merged.full_probe_mult) == (0.9, 4)
+    mixed = CandidateCertificate.merge([geo, heur])
+    assert mixed.unscanned_bound is None and mixed.scan_docs is None
+    assert (mixed.min_score, mixed.router_confident) == (0.95, False)
+    assert CandidateCertificate.merge([CandidateCertificate()] * 2) \
+        == CandidateCertificate()
+
+
+def test_candidate_chunk_scores_embeds_the_query_once():
+    """candidate_chunk_scores embeds its query once on both sides of
+    the 2M-flop crossover. Below it, candidate mode is the exact
+    served mode: the same arrays as best_chunk_scores, a zero-norm
+    query included, with the exact certificate."""
+    import numpy as np
+
+    from postgresml_spark.collections.serving import (
+        CandidateCertificate,
+        ServedPipelineIndex,
+    )
+
+    calls = []
+    rng = np.random.default_rng(9)
+    q = {"q": rng.normal(size=8), "zero": np.zeros(8)}
+
+    def embed(text):
+        calls.append(text)
+        return q[text]
+
+    small = ServedPipelineIndex.from_arrays(
+        np.arange(100), rng.integers(0, 30, size=100),
+        rng.normal(size=(100, 8)), embed)
+    for text in ("q", "zero"):
+        calls.clear()
+        docs, scores, cert = small.candidate_chunk_scores(text, 10)
+        assert len(calls) == 1
+        ed, es = small.best_chunk_scores(text)
+        assert np.array_equal(docs, ed) and np.array_equal(scores, es)
+        assert cert == CandidateCertificate()
+    assert docs.size == 30 and not scores.any()  # zero norm: all at 0
+
+    _, chunk_ids, doc_ids, mat, qv, _ = _geometric_ivf_corpus()
+    big = ServedPipelineIndex.from_arrays(
+        chunk_ids, doc_ids, mat, lambda t: calls.append(t) or qv,
+        kind="ivfflat", params={"lists": 16, "probes": 4})
+    big.hnsw
+    calls.clear()
+    big.candidate_chunk_scores("q", 80)
+    assert len(calls) == 1
+
+
 def test_candidate_adaptive_overfetch_recovers_ood_queries():
     """VERDICT r6 next #1: the candidate-bounded hybrid escalates its
     overfetch when it can't PROVE the top-k safe. Off-codebook queries
@@ -1626,7 +1808,7 @@ def test_candidate_adaptive_overfetch_recovers_ood_queries():
     order is noise there) jump straight to a full probe sweep, making
     the shortlist provably exact top-n; in-distribution queries stay at
     mult=1. Still-unsafe queries surface candidates_exhausted through
-    collection._last_search_info and the telemetry buffer."""
+    SearchResults.search_info and the telemetry buffer."""
     import numpy as np
 
     from postgresml_spark.collections.search import _served_hybrid
@@ -1688,7 +1870,7 @@ def test_candidate_adaptive_overfetch_recovers_ood_queries():
         }
         exact = _served_hybrid(coll, pipe, hq, semantic_mode="exact")
         cand = _served_hybrid(coll, pipe, hq, semantic_mode="candidate")
-        info = coll._last_search_info
+        info = cand.search_info
         assert [r["document_id"] for r in cand] == [
             r["document_id"] for r in exact
         ], f"{qname}: candidate/exact divergence"
@@ -2112,9 +2294,7 @@ def test_candidate_staged_augmentation_exactness():
             }
             ex = _served_hybrid(coll, pipe, hq, semantic_mode="exact")
             ca = _served_hybrid(coll, pipe, hq, semantic_mode="candidate")
-            exhausted = getattr(coll, "_last_search_info", {}).get(
-                "candidates_exhausted")
-            if exhausted:
+            if ca.search_info["candidates_exhausted"]:
                 continue  # best-effort result is surfaced, not proven
             assert [r["document_id"] for r in ca] == [
                 r["document_id"] for r in ex

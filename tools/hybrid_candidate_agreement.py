@@ -190,10 +190,9 @@ def run(n_chunks: int, dim: int = 256) -> dict:
                 t_cand[i] = min(t_cand[i], time.perf_counter() - t0)
                 if rep:
                     continue
-                inf = getattr(coll, "_last_search_info", {})
-                m = int(inf.get("candidate_mult", 1))
+                m = ca.search_info["candidate_mult"]
                 mult_dist[m] = mult_dist.get(m, 0) + 1
-                exhausted += bool(inf.get("candidates_exhausted"))
+                exhausted += ca.search_info["candidates_exhausted"]
                 e_ids = [r["document_id"] for r in ex]
                 c_ids = [r["document_id"] for r in ca]
                 agree.append(

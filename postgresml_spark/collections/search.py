@@ -603,11 +603,15 @@ def _served_hybrid(
         if pend:
             miss_mask = np.zeros(universe.size, dtype=bool)
             extra = np.zeros(universe.size)
+            # a pruned doc keeps its total without this component, so
+            # each bound is clamped at 0: a negative best cosine would
+            # otherwise prune a doc whose un-augmented total still
+            # reaches the top-k
             for _, _, _, b, cert, pos in pend:
                 miss_mask[pos] = True
                 ub = cert.doc_bound(universe[pos])
                 extra[pos] += (np.inf if ub is None
-                               else b * ub if b >= 0 else -b)
+                               else b * np.maximum(ub, 0.0) if b >= 0 else -b)
             ncov = universe.size - int(miss_mask.sum())
             boundary0 = (
                 float(np.partition(total[~miss_mask], ncov - limit)[ncov - limit])
@@ -620,7 +624,7 @@ def _served_hybrid(
                     sp = pos[surv[pos]]
                     if sp.size:
                         vals, aerr = _screen(field, fcfg, universe[sp])
-                        extra[sp] += b * vals + abs(b) * aerr
+                        extra[sp] += np.maximum(b * vals + abs(b) * aerr, 0.0)
                 need = surv & (total + extra >= boundary0)
                 gathered = False
                 for ci, field, fcfg, b, _, pos in pend:
@@ -643,7 +647,10 @@ def _served_hybrid(
         # exact top-`limit` by (score desc, doc_id asc): threshold at
         # the k-th largest score, keep the (usually tiny) tie-inclusive
         # candidate set, lexsort only that
-        k = min(limit, universe.size)
+        k = max(0, min(limit, universe.size))
+        if not k:  # "limit": 0 — nothing to select or to prove
+            top_pos = np.empty(0, dtype=np.int64)
+            break
         kth = (
             np.partition(total, universe.size - k)[universe.size - k]
             if universe.size > k

@@ -17,13 +17,18 @@ one mechanism, and so does this module:
 - One state path. `ServedPipelineIndex.__init__` (Spark fetch plus
   eager index-kind routing) and `from_arrays` both end in `_set_rows`,
   the only setter of the resident arrays (chunk ids, doc ids, chunk
-  texts, the float64 matrix and its norms, the chunk→row map, the
-  embedding signatures, the document payload map). `refresh()` goes
-  through the same setter: a pure append passes the old arrays
-  extended by the new rows, a payload-only change passes them
-  unchanged, and changed or removed chunks rebuild through `__init__`.
+  texts, the float64 matrix and its norms, the document payload map).
+  `refresh()` goes through the same setter with the arrays patched in
+  O(changed): `_catch_up` reads the store's delta sidecars driver-side
+  (storage.VersionSnapshot: base lineage, tombstones, `_delta` rows),
+  so dead rows drop, new rows arrive with their vectors and texts, and
+  `_doc_delta` patches the payload map, all with no Spark job. What the
+  sidecars cannot prove (a new base lineage after a resync, purge or
+  compaction; a legacy flat version; a version vacuumed mid-read)
+  rebuilds through `__init__`, the only other path.
   `ServedTextIndex.__init__`/`from_tokens` end in its `_set_rows`, the
-  one postings builder.
+  one postings builder, which its `refresh()` extends; rows it drops
+  stay as dead rows (`_live`) until a compaction forces a rebuild.
 - One invalidation rule. Caches derived from payload rows (`_doc_meta`,
   `_doc_grp`, the doc-sorted f32 copy `_mat32d`, `_filter_cache`) are
   reset by `_set_rows`, because that is where rows change. Caches
@@ -91,11 +96,81 @@ def _doc_shard(df, col: str, shard: tuple[int, int] | None):
     return df.filter(F.pmod(F.xxhash64(F.col(col)), F.lit(n)) == i)
 
 
+def _in_shard(doc_ids: np.ndarray, shard: tuple[int, int] | None):
+    """Driver-side twin of ``_doc_shard``: mask of the ``doc_ids`` in
+    shard (i, n), pmod(xxhash64(doc id), n) == i."""
+    if shard is None:
+        return np.ones(len(doc_ids), dtype=bool)
+    from postgresml_spark.functions.hashing import spark_xxhash64_long
+
+    i, n = shard
+    return np.mod(spark_xxhash64_long(doc_ids), n) == i
+
+
 def _f64_rows(vectors) -> np.ndarray:
     """Float64 matrix of a column of embedding arrays."""
     if not len(vectors):
         return np.zeros((0, 1))
     return np.asarray([np.asarray(v, dtype=np.float64) for v in vectors])
+
+
+def _ids(table, col: str) -> np.ndarray:
+    """int64 column ``col`` of a pyarrow table (empty when it has no rows)."""
+    if not table.num_rows:
+        return np.empty(0, dtype=np.int64)
+    return table.column(col).to_numpy().astype(np.int64, copy=False)
+
+
+def _values(table, col: str):
+    """Column ``col`` of a pyarrow table as numpy: a flat float64 array
+    for a list of doubles (reshape it by row count), int64 for ids, a
+    list of Python values otherwise. Zero rows give an empty array."""
+    import pyarrow as pa
+
+    if not table.num_rows:
+        return np.empty(0)
+    c = table.column(col).combine_chunks()
+    if pa.types.is_list(c.type) and pa.types.is_floating(c.type.value_type):
+        return c.flatten().to_numpy().astype(np.float64, copy=False)
+    if pa.types.is_integer(c.type):
+        return c.to_numpy().astype(np.int64, copy=False)
+    return c.to_pylist()
+
+
+def _swap_fill(n: int, holes: np.ndarray, k: int):
+    """Row moves that drop the sorted rows ``holes`` of an n-row layout
+    and add k rows, in O(|holes| + k): the new rows fill holes first
+    and append past n; holes left over take survivors from the tail.
+    Returns (m, src, dst, slots): copy rows src -> dst, keep the first
+    m rows, and write the new rows at ``slots``."""
+    m = n - holes.size + k
+    if k >= holes.size:
+        none = np.empty(0, dtype=np.int64)
+        return m, none, none, np.concatenate([holes, np.arange(n, m)])
+    rest = holes[k:]
+    src = np.setdiff1d(np.arange(m, n), rest, assume_unique=True)
+    return m, src, rest[rest < m], holes[:k]
+
+
+def _moved(arr: np.ndarray, moves, new, buf=None, spare: int = 0):
+    """The first m rows of ``arr`` after a ``_swap_fill`` plan: moved
+    rows copied, ``new`` written at the slots. When ``buf`` (a buffer
+    whose first len(arr) rows are ``arr``) has room for m rows, the
+    moves happen inside it, so a refresh of the float64 matrix copies
+    O(changed) rows, not the corpus; otherwise the rows land in a new
+    buffer with ``spare`` extra rows. The result is a prefix view of
+    that buffer (its ``.base``)."""
+    m, src, dst, slots = moves
+    if buf is not None and m <= len(buf):
+        buf[dst] = buf[src]
+    else:
+        n = min(len(arr), m)
+        row = arr.shape[1:] if len(arr) else np.shape(new)[1:]
+        buf = np.empty((m + spare,) + row, dtype=arr.dtype)
+        buf[:n] = arr[:n]
+        buf[dst] = arr[src]
+    buf[slots] = new
+    return buf[:m]
 
 
 def _fp32_slack(x):
@@ -235,9 +310,13 @@ class CandidateCertificate:
 
 
 class _Versioned:
-    """Staleness of a resident index: its version token is the current
-    version of the documents table and of every table of its field, so
-    any sync moves it."""
+    """Staleness and catch-up of a resident index. Its version token is
+    the current version of the documents table and of every table of
+    its field, so any sync moves it. ``_STAGES`` names the field tables
+    whose rows the index holds, the chunks table first, each with the
+    columns it keeps; ``_lineage`` is their base lineage at build."""
+
+    _STAGES: tuple[tuple[str, tuple[str, ...]], ...]
 
     def _version_token(self):
         toks = [("documents", self.collection.documents._current_version())]
@@ -249,10 +328,77 @@ class _Versioned:
     def is_stale(self) -> bool:
         return self._version_token() != self.version_token
 
+    def _stage_snapshots(self, token) -> dict:
+        """Stage table name -> its storage.VersionSnapshot at
+        ``token``'s version (None when unreadable or legacy flat)."""
+        vers = dict(token)
+        names = [f"{self.field}_{stage}" for stage, _ in self._STAGES]
+        return {n: self.pipeline._tables[n].snapshot(vers[n]) for n in names}
+
+    def _catch_up(self, token, live=None):
+        """The change from the resident rows to ``token``'s versions,
+        read from the stage tables' delta sidecars alone: (dead rows,
+        added chunk ids sorted, {column: values of the added rows}), or
+        None when the sidecars cannot prove it. On one lineage a
+        table's content is base minus tombstoned doc keys plus `_delta`,
+        with tombstones only growing, so a resident row is dead exactly
+        when some stage tombstones its doc and its chunk is not in that
+        stage's delta, and every row the index lacks is in every
+        stage's delta. A chunk in only some deltas (a diverged sibling)
+        needs a base read: None. Reads OSError through when a version
+        is vacuumed under it. ``live`` masks rows already dead."""
+        snaps = self._stage_snapshots(token)
+        if any(snap is None or snap.lineage != self._lineage[name]
+               for name, snap in snaps.items()):
+            return None
+        alive = np.ones(len(self.chunk_ids), dtype=bool) if live is None \
+            else live
+        dead = np.zeros(len(self.chunk_ids), dtype=bool)
+        touched = {}  # tombstone set -> live rows of its docs
+        every = some = None
+        for snap, (_, cols) in zip(snaps.values(), self._STAGES):
+            d = snap.delta(["chunk_id"] + (["document_id"]
+                                           if "document_id" in cols else []))
+            chunks = _ids(d, "chunk_id")
+            if np.unique(chunks).size != chunks.size:
+                return None
+            if "document_id" in cols:
+                order = np.argsort(chunks)
+                delta_docs = (chunks[order], _ids(d, "document_id")[order])
+            rows = touched.get(snap.tombstones)
+            if rows is None:  # the stages usually share one history
+                tomb = np.fromiter(map(int, snap.tombstones), dtype=np.int64,
+                                   count=len(snap.tombstones))
+                rows = touched[snap.tombstones] = np.flatnonzero(
+                    alive & np.isin(self.doc_ids, tomb))
+            dead[rows[~np.isin(self.chunk_ids[rows], chunks)]] = True
+            every = chunks if every is None else np.intersect1d(every, chunks)
+            some = chunks if some is None else np.union1d(some, chunks)
+        resident = self.chunk_ids[alive]
+        if np.setdiff1d(np.setdiff1d(some, every), resident).size:
+            return None
+        new = np.setdiff1d(every, resident)
+        dc, dd = delta_docs
+        new = new[_in_shard(dd[np.searchsorted(dc, new)], self.shard)]
+        cols_out = {}
+        for snap, (_, cols) in zip(snaps.values(), self._STAGES):
+            t = snap.delta(["chunk_id", *cols], "chunk_id",
+                           lambda c: np.isin(c, new))
+            if t.num_rows:
+                t = t.sort_by("chunk_id")
+            if not np.array_equal(_ids(t, "chunk_id"), new):
+                return None
+            for c in cols:
+                cols_out[c] = _values(t, c)
+        return np.flatnonzero(dead), new, cols_out
+
 
 class ServedPipelineIndex(_Versioned):
     """Resident ANN (HNSW or ivfflat per schema) + payload maps for one
     (pipeline, field)."""
+
+    _STAGES = (("chunks", ("document_id", "chunk")),
+               ("embeddings", ("embedding",)))
 
     def __init__(self, collection, pipeline, field: str,
                  shard: tuple[int, int] | None = None):
@@ -279,18 +425,14 @@ class ServedPipelineIndex(_Versioned):
         self.shard = shard  # (shard_id, n_shards) doc-hash slice, or None
         self._embed = lambda q: pipeline.embed_query(q, field)
         self.version_token = self._version_token()
-
-        from pyspark.sql import functions as F
+        self._lineage = {n: snap and snap.lineage for n, snap in
+                         self._stage_snapshots(self.version_token).items()}
 
         # ONE Arrow hop per build: embeddings ⋈ chunks (executor-side
         # join, then columnar transfer). Document payloads ride a
-        # second small frame keyed by id. The per-chunk embedding
-        # signature (Spark-side xxhash64 — NOT driver math, so refresh
-        # can recompute it without moving vectors) powers the
-        # incremental refresh() delta detection.
+        # second small frame keyed by id.
         pdf = (
             pipeline.table(f"{field}_embeddings")
-            .withColumn("__sig", F.xxhash64(F.to_json(F.col("embedding"))))
             .join(self._chunks(), "chunk_id")
             .toPandas()
         )
@@ -341,10 +483,9 @@ class ServedPipelineIndex(_Versioned):
             pdf["document_id"].to_numpy(),
             pdf["chunk"].tolist(),
             mat64,
-            dict(zip((int(c) for c in pdf["chunk_id"]),
-                     (int(s) for s in pdf["__sig"]))),
             doc_json,
         )
+        self._mat_buf = mat64  # built here: refresh may move rows in it
 
     @classmethod
     def from_arrays(
@@ -387,27 +528,28 @@ class ServedPipelineIndex(_Versioned):
             doc_ids,
             list(chunks) if chunks is not None else [""] * len(doc_ids),
             np.asarray(mat, dtype=np.float64),
-            {},
             doc_json or {int(d): "{}" for d in np.unique(doc_ids)},
         )
         return self
 
     # -- resident state ----------------------------------------------------
 
-    def _set_rows(self, chunk_ids, doc_ids, chunks, mat64, sig, doc_json,
-                  ann=None) -> None:
+    def _set_rows(self, chunk_ids, doc_ids, chunks, mat64, doc_json,
+                  ann=None, norms64=None) -> None:
         """The one setter of the resident state: both constructors end
-        here and refresh() passes its extended (or unchanged) arrays
-        through it. Assigns every payload array, resets every cache
-        derived from payload rows, and installs ``ann`` (None: built
-        lazily by the next search) through _set_ann."""
+        here and refresh() passes its patched arrays through it (with
+        ``norms64``, the row norms it kept up to date). Assigns every
+        payload array, resets every cache derived from payload rows,
+        and installs ``ann`` (None: built lazily by the next search)
+        through _set_ann."""
         self.chunk_ids = chunk_ids
         self.doc_ids = doc_ids
         self.chunks = chunks
         self.mat64 = mat64
-        self.norms64 = np.linalg.norm(mat64, axis=1)
-        self.row_of = {int(c): i for i, c in enumerate(chunk_ids)}
-        self._sig = sig  # chunk_id -> embedding signature (refresh deltas)
+        self._mat_buf = None  # refresh's growth buffer behind mat64
+        self.norms64 = (np.linalg.norm(mat64, axis=1) if norms64 is None
+                        else norms64)
+        self._row_of = None  # chunk_id -> payload row (row_of)
         self.doc_json = doc_json
         self._doc_meta = None  # lazily-parsed metadata for filtered serving
         self._doc_grp = None  # (perm, starts, uniq) for per-doc segment-max
@@ -425,6 +567,13 @@ class ServedPipelineIndex(_Versioned):
         self._ann_docs = None
         for ent in self._filter_cache.values():
             ent.pop("ann_mask", None)
+
+    @property
+    def row_of(self) -> dict:
+        """chunk_id -> payload row, built on first use after _set_rows."""
+        if self._row_of is None:
+            self._row_of = {int(c): i for i, c in enumerate(self.chunk_ids)}
+        return self._row_of
 
     def _chunks(self):
         """This shard's (chunk_id, document_id, chunk) rows."""
@@ -466,75 +615,94 @@ class ServedPipelineIndex(_Versioned):
             self._set_ann(ann)
         return self._hnsw
 
+    def _doc_delta(self, version: int):
+        """(ids gone, {id: payload} added) turning ``doc_json`` into this
+        shard's documents at ``version``, read driver-side in one pass
+        over the documents files. Document ids are never reused and a
+        payload never changes under its id (an upsert re-ids), so the id
+        sets decide the patch. None when the version is unreadable or
+        carries a delta."""
+        snap = self.collection.documents.snapshot(version)
+        if snap is None or snap.tombstones or snap.delta(["id"]).num_rows:
+            return None
+        known = np.sort(np.fromiter(self.doc_json, dtype=np.int64,
+                                    count=len(self.doc_json)))
+        mine = []  # this shard's ids, file by file
+
+        def unknown(ids):
+            ours = _in_shard(ids, self.shard)
+            mine.append(ids[ours])
+            if not known.size:
+                return ours
+            at = np.minimum(np.searchsorted(known, ids), known.size - 1)
+            return ours & (known[at] != ids)
+
+        rows = snap.base(["id", "document"], "id", unknown)
+        ids = np.concatenate(mine) if mine else known[:0]
+        return np.setdiff1d(known, ids), dict(zip(
+            rows.column("id").to_pylist(), rows.column("document").to_pylist()
+        ))
+
     def refresh(self) -> "ServedPipelineIndex":
-        """Catch up with a sync. PURE APPENDS (the streaming-ingest /
-        bulk-upsert common case) insert into the LIVE graph —
-        O(batch) via ResidentHNSW.add, the pgvector
-        trigger-maintained-insert analog — so serving never pays the
-        O(corpus) rebuild for growth. Changed or removed chunks fall
-        back to a full rebuild (graph deletion is out of scope, the
-        same REINDEX guidance pgvector gives for heavy churn).
-
-        Delta detection never moves vectors: Spark computes a per-chunk
-        xxhash64 signature and only (chunk_id, sig) pairs reach the
-        driver; only the added rows' vectors ride Arrow. The document
-        payload map IS re-read wholesale — it is resident O(docs)
-        state anyway, and a metadata-only upsert must be visible.
-        Returns self (incremental) or a fresh index (rebuild)."""
-        from pyspark.sql import functions as F
-
+        """Catch up with a sync in O(changed), with no Spark job: the
+        store's delta reader (storage.VersionSnapshot) gives each stage
+        table's tombstones and `_delta` rows, ``_catch_up`` turns them
+        into the dead resident rows and the added ones (vectors and
+        chunk texts read only for those), and ``_doc_delta`` patches
+        the payload map. Added rows fill dead rows' slots and then
+        append, so the float64 matrix moves O(changed) rows. A built
+        HNSW grows by ``add`` on a pure append (the pgvector
+        trigger-maintained insert); a removal or an ivfflat append
+        drops the ANN, which the next search rebuilds on the driver.
+        Whatever the sidecars cannot prove (a new lineage after a
+        resync, purge or compaction; a legacy flat version; a version
+        vacuumed during the read) rebuilds through ``__init__``.
+        Returns self, or the rebuilt index."""
         token = self._version_token()
         if token == self.version_token:
             return self
-        emb = self.pipeline.table(f"{self.field}_embeddings")
-        if self.shard is not None:
-            # shard scope: only this shard's chunks count as deltas —
-            # another shard's appends must not look "added" here
-            emb = emb.join(self._chunks().select("chunk_id"), "chunk_id",
-                           "left_semi")
-        sigs = {
-            int(r["chunk_id"]): int(r["s"])
-            for r in emb.select(
-                "chunk_id",
-                F.xxhash64(F.to_json(F.col("embedding"))).alias("s"),
-            ).collect()
-        }
-        # a removed (sig None) or changed chunk rebuilds
-        if any(sigs.get(c) != s for c, s in self._sig.items()):
+        try:
+            step = self._catch_up(token)
+            docs = step and self._doc_delta(dict(token)["documents"])
+        except OSError:
+            step = docs = None
+        if step is None or docs is None:
             return ServedPipelineIndex(self.collection, self.pipeline,
                                        self.field, shard=self.shard)
-
-        added = [c for c in sigs if c not in self._sig]
-        rows = (self.chunk_ids, self.doc_ids, self.chunks, self.mat64)
+        dead, new_ids, cols = step
+        k = new_ids.size
+        new_mat = (cols["embedding"].reshape(k, -1) if k
+                   else np.empty((0,) + self.mat64.shape[1:]))
+        moves = _swap_fill(len(self.chunk_ids), dead, k)
+        m, src, dst, slots = moves
         ann = self._hnsw
-        if added:
-            add_df = emb.sparkSession.createDataFrame(
-                [(c,) for c in added], "chunk_id long"
-            )
-            pdf = (
-                emb.join(add_df, "chunk_id", "left_semi")
-                .join(self._chunks(), "chunk_id")
-                .toPandas()
-            )
-            new_ids = pdf["chunk_id"].to_numpy()
-            new_mat = _f64_rows(pdf["embedding"])
-            rows = (
-                np.concatenate([self.chunk_ids, new_ids]),
-                np.concatenate([self.doc_ids, pdf["document_id"].to_numpy()]),
-                self.chunks + pdf["chunk"].tolist(),
-                np.concatenate([self.mat64, new_mat]) if len(self.mat64)
-                else new_mat,
-            )
-            if ann is not None and self.kind == "hnsw":
-                # live graph: O(batch) inserts
-                ann.add(new_ids, new_mat.astype(np.float32))
-            else:
-                # ivfflat (no in-place insert) or still-lazy: next
-                # search rebuilds from the already-appended resident
-                # arrays — driver-side only, no Spark job
-                ann = None
-        # payload map re-read: metadata-only upserts must surface
-        self._set_rows(*rows, sigs, self._doc_json(), ann=ann)
+        if dead.size or (k and self.kind != "hnsw"):
+            ann = None
+        elif k and ann is not None:
+            ann.add(new_ids, new_mat.astype(np.float32))
+        # the chunk texts and the payload map are this index's own
+        # containers: patched in place
+        chunks = self.chunks
+        chunks.extend([None] * (m - len(chunks)))
+        for a, b in zip(src.tolist(), dst.tolist()):
+            chunks[b] = chunks[a]
+        del chunks[m:]
+        for slot, c in zip(slots.tolist(), cols["chunk"]):
+            chunks[slot] = c
+        gone, added_docs = docs
+        for d in gone.tolist():
+            del self.doc_json[d]
+        self.doc_json.update(added_docs)
+        mat64 = _moved(self.mat64, moves, new_mat, buf=self._mat_buf,
+                       spare=m // 2)
+        self._set_rows(
+            _moved(self.chunk_ids, moves, new_ids),
+            _moved(self.doc_ids, moves, cols["document_id"]),
+            chunks, mat64, self.doc_json, ann=ann,
+            norms64=_moved(self.norms64, moves,
+                           np.linalg.norm(new_mat, axis=1)),
+        )
+        self._mat_buf = mat64.base
         self.version_token = token
         return self
 
@@ -1000,7 +1168,12 @@ class ServedTextIndex(_Versioned):
     GIN-index-in-shared-memory analog for the hybrid path. Holds
     term -> {chunk_row: tf} postings plus the chunk→document map;
     scores replicate search._tsrank_col's normalization-32 arithmetic
-    bit-for-bit (same float64 ops in the same order)."""
+    bit-for-bit (same float64 ops in the same order). A refresh leaves
+    removed rows in place as dead rows (``_live``), which scoring skips;
+    the store's compaction bounds them, since it starts a new lineage
+    and so a rebuild."""
+
+    _STAGES = (("chunks", ("document_id",)), ("tsvectors", ("tokens",)))
 
     def __init__(self, collection, pipeline, field: str,
                  shard: tuple[int, int] | None = None):
@@ -1011,6 +1184,8 @@ class ServedTextIndex(_Versioned):
         self.field = field
         self.shard = shard
         self.version_token = self._version_token()
+        self._lineage = {n: snap and snap.lineage for n, snap in
+                         self._stage_snapshots(self.version_token).items()}
 
         chunks = pipeline.table(f"{field}_chunks").select("chunk_id", "document_id")
         pdf = (
@@ -1036,34 +1211,71 @@ class ServedTextIndex(_Versioned):
         self._set_rows(np.asarray(chunk_ids), np.asarray(doc_ids), token_lists)
         return self
 
-    def _set_rows(self, chunk_ids, doc_ids, token_lists) -> None:
-        """The one setter of the resident state (both constructors end
-        here): the chunk→document map, the postings, and their
-        vectorized form term -> (rows, tf/(tf+1) contribs), built once
-        so the per-query path is pure numpy over TOUCHED postings
-        (scoring is sparse — no O(corpus) per-query state)."""
-        self.chunk_ids = chunk_ids
-        self.doc_ids = doc_ids
-        self.postings: dict[str, dict[int, int]] = {}
-        for row, toks in enumerate(token_lists):
+    def _set_rows(self, chunk_ids, doc_ids, token_lists, live=None) -> None:
+        """The one setter of the resident state (both constructors and
+        refresh end here): the chunk→document map and the postings. A
+        constructor passes every row's tokens; refresh passes ``live``
+        and the tokens of the rows past the current ones, which extend
+        the postings. The vectorized form of a term's postings is a
+        cache (``_term``), dropped here for every term whose postings
+        changed."""
+        first = 0 if live is None else self.n_rows
+        if live is None:
+            self.postings: dict[str, dict[int, int]] = {}
+            self._term_arrays: dict[str, tuple[np.ndarray, np.ndarray]] = {}
+        for row, toks in enumerate(token_lists, start=first):
             for t in toks:
                 post = self.postings.setdefault(t, {})
                 post[row] = post.get(row, 0) + 1
-        self._term_arrays: dict[str, tuple[np.ndarray, np.ndarray]] = {}
-        for t, post in self.postings.items():
+                self._term_arrays.pop(t, None)
+        self.chunk_ids = chunk_ids
+        self.doc_ids = doc_ids
+        self.n_rows = len(chunk_ids)
+        # None while every row is live (the scoring fast path)
+        self._live = None if live is None or live.all() else live
+
+    def _term(self, t: str):
+        """term -> (rows, tf/(tf+1) contribs), built from the postings
+        on first use after they change, so the per-query path is pure
+        numpy over TOUCHED postings (scoring is sparse — no O(corpus)
+        per-query state) and a refresh costs O(its tokens)."""
+        arrs = self._term_arrays.get(t)
+        if arrs is None and t in self.postings:
+            post = self.postings[t]
             rows = np.fromiter(post.keys(), dtype=np.int64, count=len(post))
             tfs = np.fromiter(post.values(), dtype=np.float64, count=len(post))
-            self._term_arrays[t] = (rows, tfs / (tfs + 1.0))
-        self.n_rows = len(chunk_ids)
+            arrs = self._term_arrays[t] = (rows, tfs / (tfs + 1.0))
+        return arrs
 
     def refresh(self) -> "ServedTextIndex":
-        """Catch up with a sync: postings have no incremental path, so
-        a stale index is rebuilt (a fresh index is returned; self when
-        current)."""
-        if not self.is_stale():
+        """Catch up with a sync in O(changed), with no Spark job, the
+        same way ServedPipelineIndex.refresh does: dead rows are masked
+        out of ``_live`` and the added rows' tokens extend the postings.
+        A case the delta sidecars cannot prove rebuilds through
+        ``__init__``. Returns self, or the rebuilt index."""
+        token = self._version_token()
+        if token == self.version_token:
             return self
-        return ServedTextIndex(self.collection, self.pipeline, self.field,
-                               shard=self.shard)
+        try:
+            step = self._catch_up(token, live=self._live)
+        except OSError:
+            step = None
+        if step is None:
+            return ServedTextIndex(self.collection, self.pipeline, self.field,
+                                   shard=self.shard)
+        dead, new_ids, cols = step
+        live = (np.ones(self.n_rows, dtype=bool) if self._live is None
+                else self._live.copy())
+        live[dead] = False
+        self._set_rows(
+            np.concatenate([self.chunk_ids, new_ids]),
+            np.concatenate([self.doc_ids,
+                            np.asarray(cols["document_id"], dtype=np.int64)]),
+            cols["tokens"],
+            live=np.concatenate([live, np.ones(new_ids.size, dtype=bool)]),
+        )
+        self.version_token = token
+        return self
 
     def best_chunk_scores(
         self, terms: list[str], allowed_docs: np.ndarray | set | None = None
@@ -1083,11 +1295,8 @@ class ServedTextIndex(_Versioned):
         # floor. Touched rows keep the SAME per-row addition order
         # (term order — np.add.at applies elementwise in concatenation
         # order), so scores stay bit-identical to _tsrank_col.
-        parts = [
-            self._term_arrays[t]
-            for t in (term.lower() for term in terms)
-            if t in self._term_arrays
-        ]
+        parts = [p for p in (self._term(t.lower()) for t in terms)
+                 if p is not None]
         if not parts:
             return np.empty(0, dtype=np.int64), np.empty(0)
         rows_cat = np.concatenate([r for r, _ in parts])
@@ -1096,6 +1305,9 @@ class ServedTextIndex(_Versioned):
         ranks = np.zeros(uniq_rows.size)
         np.add.at(ranks, inv, con_cat)
         scores = ranks / (ranks + 1.0)  # normalization 32
+        if self._live is not None:  # a refresh's dead rows
+            keep_rows = self._live[uniq_rows]
+            uniq_rows, scores = uniq_rows[keep_rows], scores[keep_rows]
         docs = self.doc_ids[uniq_rows]
         perm = np.argsort(docs, kind="stable")
         uniq, starts = np.unique(docs[perm], return_index=True)

@@ -23,6 +23,21 @@ flips are per-table renames, so there is NO cross-table atomicity: a
 reader between two flips, or a failure inside the loop, sees some
 tables on the new version and the rest on the old one (a manifest
 naming every table's version would close that). One writer per table.
+
+Delta reader. `BucketedVersionedTable.snapshot(v)` is the store's
+driver-side view of one version, for callers that keep a copy of a
+table resident (collections/serving.py) and catch it up without a
+Spark job. It returns a `VersionSnapshot`: the version's base lineage
+(its `__bucket=k/<file>` names, which a delta version hardlinks
+unchanged, so they move only on a full or partial overwrite), its
+tombstone keys, and pyarrow readers of its `_delta` and base rows over
+explicit file lists (`pyarrow.dataset` discovery, by its default
+`ignore_prefixes`, silently skips every underscore-prefixed path, the
+`__bucket=` dirs included). On one lineage the content of version v is
+base minus tombstoned keys plus `_delta`, and tombstones only grow, so
+a reader that holds version u's rows reaches v from v's tombstones and
+`_delta` alone. A legacy flat version, or one already vacuumed, has no
+snapshot; a read that loses its files to a vacuum raises OSError.
 """
 
 from __future__ import annotations
@@ -30,6 +45,7 @@ from __future__ import annotations
 import os
 import shutil
 import uuid
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -85,6 +101,61 @@ def _tomb_keys(files: list[str]) -> set:
     for f in files:
         keys.update(pq.read_table(f, columns=["__key"]).column("__key").to_pylist())
     return keys
+
+
+def _read_rows(files: list[str], columns: list[str], key: str | None = None,
+               where=None):
+    """pyarrow read of ``columns`` from explicit parquet files, one
+    file at a time (no dataset discovery, so no ignore_prefixes rule
+    can drop a `__bucket=`/`_delta` path). With ``key`` and ``where``
+    (numpy key array -> bool mask) only the rows ``where`` selects are
+    kept, and a file with none is never read past its key column.
+    Files of one table may differ in nullability (a full write vs a
+    partial one), so the parts concatenate under a unified schema. An
+    empty result has the requested columns, typed null."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    parts = []
+    for f in files:
+        pf = pq.ParquetFile(f)
+        if key is None:
+            parts.append(pf.read(columns=columns))
+            continue
+        hit = where(pf.read(columns=[key]).column(0).to_numpy())
+        if hit.any():
+            parts.append(pf.read(columns=columns).filter(pa.array(hit)))
+    parts = [p for p in parts if p.num_rows]
+    if not parts:
+        return pa.table({c: pa.nulls(0) for c in columns})
+    return pa.concat_tables(parts, promote_options="default")
+
+
+@dataclass(frozen=True)
+class VersionSnapshot:
+    """Driver-side view of one version of a BucketedVersionedTable
+    (module docstring, "Delta reader").
+
+    - ``lineage``: the version's base bucket files (`__bucket=k/<file>`).
+      A delta version hardlinks them under the same names, so the
+      lineage changes only when a full or partial overwrite rewrites
+      buckets (a resync, a purge, a compaction, a documents upsert).
+    - ``tombstones``: the version's accumulated tombstone keys.
+    - ``delta``/``base``: rows of the version's `_delta` sidecar or of
+      its base files; a read raises OSError when the version is
+      vacuumed under it."""
+
+    vdir: str
+    lineage: tuple[str, ...]
+    tombstones: frozenset
+
+    def delta(self, columns: list[str], key: str | None = None, where=None):
+        return _read_rows(_part_files(os.path.join(self.vdir, "_delta")),
+                          columns, key, where)
+
+    def base(self, columns: list[str], key: str | None = None, where=None):
+        return _read_rows([os.path.join(self.vdir, f) for f in self.lineage],
+                          columns, key, where)
 
 
 def _link_or_copy(src: str, dst: str) -> None:
@@ -524,6 +595,27 @@ class BucketedVersionedTable(VersionedTable):
             return _filter_keys_not_in(out, self._key_col(), sorted(keys))
         tomb = self._extra(vdir, "_tombstones")
         return out.join(tomb, self._key_col() == F.col("__key"), "left_anti")
+
+    def snapshot(self, version: int) -> VersionSnapshot | None:
+        """The driver-side delta reader: lineage, tombstone keys and a
+        row reader of one retained version, with no Spark job. None
+        when the version is gone (never written or vacuumed) or has no
+        bucket dirs (a legacy flat version)."""
+        vdir = self._vdir(version)
+        try:
+            buckets = [b for b in os.listdir(vdir) if b.startswith("__bucket=")]
+            lineage = tuple(sorted(
+                f"{b}/{fn}" for b in buckets
+                for fn in os.listdir(os.path.join(vdir, b))
+                if fn.endswith(".parquet") and not fn.startswith((".", "_"))
+            ))
+            tombs = _tomb_keys(_part_files(os.path.join(vdir, "_tombstones")))
+        except OSError:
+            return None
+        if not buckets:
+            return None
+        tombs.discard(None)
+        return VersionSnapshot(vdir, lineage, frozenset(tombs))
 
     def _apply_delta(self, base: DataFrame, vdir: str) -> DataFrame:
         delta = self._extra(vdir, "_delta")

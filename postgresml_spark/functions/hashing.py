@@ -1,4 +1,4 @@
-"""Driver-side twin of Spark SQL's `xxhash64` for strings.
+"""Driver-side twins of Spark SQL's `xxhash64` for strings and longs.
 
 The served BM25 path needs `pmod(xxhash64(term), n_buckets)` for a
 handful of query terms to prune partition listing — launching a Spark
@@ -8,9 +8,16 @@ public, stable algorithm (github.com/Cyan4973/xxHash spec); Spark's
 `xxhash64(string)` is XXH64 over the UTF-8 bytes with seed 42.
 Parity with the JVM implementation is pinned by a test hashing a
 vocabulary sample through both paths.
+
+`spark_xxhash64_long` is the twin of `xxhash64(<long column>)` (Spark's
+`XXH64.hashLong`: XXH64 over the 8 little-endian bytes, seed 42). The
+sharded served indexes use it to route a refreshed document to its
+shard exactly as `serving._doc_shard` does in the Spark build plan.
 """
 
 from __future__ import annotations
+
+import numpy as np
 
 _P1 = 0x9E3779B185EBCA87
 _P2 = 0xC2B2AE3D27D4EB4F
@@ -78,3 +85,24 @@ def spark_xxhash64(s: str, seed: int = 42) -> int:
 def spark_pmod_xxhash64(s: str, n: int, seed: int = 42) -> int:
     """`pmod(xxhash64(s), n)` with Spark's non-negative pmod."""
     return spark_xxhash64(s, seed) % n
+
+
+def spark_xxhash64_long(v, seed: int = 42):
+    """Spark SQL `xxhash64(v)` for a long ``v``: a signed int for an
+    int, an int64 array for an integer array (vectorized with wrapping
+    uint64 arithmetic, the 8-byte case of `xxh64`)."""
+    if not isinstance(v, np.ndarray):
+        h = xxh64(int(v).to_bytes(8, "little", signed=True), seed)
+        return h - (1 << 64) if h >= (1 << 63) else h
+    u = np.uint64
+    with np.errstate(over="ignore"):
+        k = v.astype(np.int64).view(np.uint64) * u(_P2)
+        k = ((k << u(31)) | (k >> u(33))) * u(_P1)
+        h = (u((seed + _P5 + 8) & _M) ^ k)
+        h = ((h << u(27)) | (h >> u(37))) * u(_P1) + u(_P4)
+        h ^= h >> u(33)
+        h *= u(_P2)
+        h ^= h >> u(29)
+        h *= u(_P3)
+        h ^= h >> u(32)
+    return h.view(np.int64)

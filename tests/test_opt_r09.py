@@ -40,6 +40,33 @@ def test_driver_xxhash64_matches_spark(spark):
         assert spark_pmod_xxhash64(r["w"], 32) == r["b"], r["w"]
 
 
+def test_driver_xxhash64_long_matches_spark(spark):
+    """The sharded served indexes route a refreshed document to its
+    shard driver-side; the long twin must equal Spark SQL's
+    xxhash64(<long>) and its pmod, scalar and vectorized, over the
+    edges and 1,000 seeded random longs."""
+    import numpy as np
+
+    from postgresml_spark.functions.hashing import spark_xxhash64_long
+
+    rng = np.random.default_rng(11)
+    vals = [0, 1, -1, 2**63 - 1, -(2**63), 2**63 - 2, -(2**63) + 1]
+    vals += rng.integers(-(2**63), 2**63 - 1, size=1000,
+                         endpoint=True).tolist()
+    rows = (
+        spark.createDataFrame([(v,) for v in vals], "v long")
+        .select("v", F.xxhash64("v").alias("h"),
+                F.pmod(F.xxhash64("v"), F.lit(3)).alias("b"))
+        .collect()
+    )
+    want = {r["v"]: (r["h"], r["b"]) for r in rows}
+    for v in vals:
+        assert spark_xxhash64_long(v) == want[v][0], v
+    got = spark_xxhash64_long(np.asarray(vals, dtype=np.int64))
+    assert got.tolist() == [want[v][0] for v in vals]
+    assert np.mod(got, 3).tolist() == [want[v][1] for v in vals]
+
+
 def test_parquet_dir_stats_census(spark, tmp_path):
     """Footer census == Spark aggregation on a bucket-partitioned
     write, including max(column) and null counts; sidecar stores

@@ -11,7 +11,9 @@ after upsert+sync, and the filtered-query boundary."""
 import shutil
 import tempfile
 import time
+from contextlib import nullcontext
 
+import numpy as np
 import pytest
 
 from tests.conftest import assert_no_spark_jobs, jobs_snapshot
@@ -568,7 +570,8 @@ def test_served_hybrid_filtered_matches_exact(hybrid_setup):
 def test_incremental_refresh_appends_into_live_graph(spark, sf_dir):
     """Append-only sync deltas must NOT rebuild the HNSW: the same
     index object grows via ResidentHNSW.add (O(batch)); a changed
-    document falls back to a full rebuild. Both paths stay correct."""
+    document refreshes in place too (its ANN rebuilds lazily on the
+    driver). Both paths stay correct."""
     import postgresml_spark.collections.serving as serving_mod
 
     wh = tempfile.mkdtemp(prefix="pgml_served_inc_")
@@ -619,17 +622,21 @@ def test_incremental_refresh_appends_into_live_graph(spark, sf_dir):
             # metadata-visible growth again (idempotent second refresh)
             assert pipe.served_index("text") is idx0
 
-            # CHANGED document -> full rebuild
+            # CHANGED document -> refreshed in place from the delta
+            # sidecars (its old row dies, the new one arrives), and the
+            # served top hit is the exact one
             coll.upsert_documents(
                 [{"id": 20_000_001, "text": "completely rewritten text body"}]
             )
             idx2 = pipe.served_index("text")
-            assert builds["n"] == 1, "changed chunk must rebuild"
-            assert idx2 is not idx0
-            res = coll.vector_search(
-                _q("completely rewritten text body"), pipe, method="index"
-            )
+            assert builds["n"] == 0, "a changed doc must refresh in place"
+            assert idx2 is idx0 and len(idx2.chunk_ids) == n0 + 2
+            q = _q("completely rewritten text body")
+            res = coll.vector_search(q, pipe, method="index")
+            exact = coll.vector_search(q, pipe, method="exact")
             assert res[0]["document"]["id"] == 20_000_001
+            assert res[0]["document_id"] == exact[0]["document_id"]
+            assert res[0]["score"] == pytest.approx(exact[0]["score"])
         finally:
             serving_mod.ServedPipelineIndex.__init__ = orig_init
     finally:
@@ -2301,3 +2308,291 @@ def test_candidate_staged_augmentation_exactness():
             ], f"terms={terms} q{qi}"
             for a, b in zip(ca, ex):
                 assert a["score"] == pytest.approx(b["score"], abs=1e-12)
+
+
+def _stub_hybrid(idx, ft):
+    """(pipeline, collection) stand-ins serving ``idx``/``ft`` to
+    search._served_hybrid, no warehouse."""
+
+    class _P:
+        name = "stub"
+
+        def served_index(self, f):
+            return idx
+
+        def served_text_index(self, f):
+            return ft
+
+    class _C:
+        def __init__(self):
+            self._search_log_buffer = []
+
+    return _P(), _C()
+
+
+def test_served_hybrid_limit_zero_returns_empty():
+    """`"limit": 0` returns [] in both served semantic modes, like the
+    DataFrame plan's LIMIT 0."""
+    import numpy as np
+
+    from postgresml_spark.collections.search import _served_hybrid
+    from postgresml_spark.collections.serving import (
+        ServedPipelineIndex,
+        ServedTextIndex,
+    )
+
+    rng = np.random.default_rng(2)
+    ids = np.arange(50, dtype=np.int64)
+    qv = rng.normal(size=8)
+    idx = ServedPipelineIndex.from_arrays(ids, ids, rng.normal(size=(50, 8)),
+                                          lambda q: qv)
+    ft = ServedTextIndex.from_tokens(ids, ids, [["w"]] * 50)
+    pipe, coll = _stub_hybrid(idx, ft)
+    hq = {"query": {"semantic_search": {"text": {"query": "q"}},
+                    "full_text_search": {"text": {"query": "w"}}},
+          "limit": 0}
+    for mode in ("exact", "candidate"):
+        assert list(_served_hybrid(coll, pipe, hq, semantic_mode=mode)) == []
+
+
+def test_candidate_prune_clamps_negative_semantic_bound():
+    """A doc outside the shortlist whose best cosine is negative must
+    not be returned at its full-text-only total. Corpus clustered at c,
+    query -c (every cosine near -0.97): twelve shortlist docs carry the
+    term "a", one doc outside the shortlist carries "rare". Its bound
+    b·ub < 0 used to prune it while it kept the un-augmented total 1.0
+    and ranked first; 4,000 × 512 is the smallest corpus above the
+    exact-scan crossover that showed it. Exact mode is the reference."""
+    import numpy as np
+
+    from postgresml_spark.collections.search import _served_hybrid
+    from postgresml_spark.collections.serving import (
+        ServedPipelineIndex,
+        ServedTextIndex,
+    )
+
+    n, dim = 4000, 512
+    rng = np.random.default_rng(5)
+    c = rng.normal(size=dim)
+    c /= np.linalg.norm(c)
+    mat = (c + rng.normal(scale=0.01, size=(n, dim))).astype(np.float32)
+    ids = np.arange(n, dtype=np.int64)
+    idx = ServedPipelineIndex.from_arrays(
+        ids, ids, mat, lambda q: -c,
+        kind="ivfflat", params={"lists": 16, "probes": 2})
+    short, _, cert = idx.candidate_chunk_scores("q", n_candidates=160)
+    assert not cert.exhausted
+    toks = [["other"] for _ in range(n)]
+    for d in short[:12]:
+        toks[int(d)] = ["a"]
+    rare = int(np.setdiff1d(ids, short)[0])
+    toks[rare] = ["rare"]
+    pipe, coll = _stub_hybrid(idx, ServedTextIndex.from_tokens(ids, ids, toks))
+    hq = {"query": {"semantic_search": {"text": {"query": "q"}},
+                    "full_text_search": {"text": {"query": "a rare",
+                                                  "boost": 3.0}}},
+          "limit": 10}
+    ex = _served_hybrid(coll, pipe, hq, semantic_mode="exact")
+    ca = _served_hybrid(coll, pipe, hq, semantic_mode="candidate")
+    assert ca.search_info["candidates_exhausted"] is False
+    assert [r["document_id"] for r in ca] == [r["document_id"] for r in ex]
+    for a, b in zip(ca, ex):
+        assert a["score"] == pytest.approx(b["score"], abs=1e-12)
+
+
+# -- O(changed) refresh ≡ fresh build -----------------------------------------
+
+_EQ_WORDS = ("alpha beta gamma delta epsilon zeta eta theta iota kappa "
+             "lambda mu nu xi omicron pi rho sigma tau upsilon").split()
+
+
+def _eq_doc(rng, i: int) -> dict:
+    return {"id": int(i), "text": " ".join(rng.choice(_EQ_WORDS, 7)),
+            "lang": "en" if i % 2 else "fr"}
+
+
+def _eq_rows(idx) -> dict:
+    """chunk_id -> (doc_id, chunk text, vector) of every (shard's)
+    resident row."""
+    out = {}
+    for s in getattr(idx, "shards", [idx]):
+        for r, c in enumerate(s.chunk_ids.tolist()):
+            out[c] = (int(s.doc_ids[r]), s.chunks[r], tuple(s.mat64[r]))
+    return out
+
+
+def _eq_postings(ft) -> dict:
+    """term -> {chunk_id: tf} over the live rows, plus chunk -> doc."""
+    out: dict = {}
+    for s in getattr(ft, "shards", [ft]):
+        live = s._live if s._live is not None else np.ones(s.n_rows, bool)
+        for t, post in s.postings.items():
+            for r, tf in post.items():
+                if live[r]:
+                    out.setdefault(t, {})[int(s.chunk_ids[r])] = tf
+        for r in np.flatnonzero(live):
+            out.setdefault("__doc__", {})[int(s.chunk_ids[r])] = int(
+                s.doc_ids[r])
+    return out
+
+
+def _eq_hybrid(idx, ft, hq) -> list:
+    from postgresml_spark.collections.search import _served_hybrid
+
+    pipe, coll = _stub_hybrid(idx, ft)
+    return [(r["document_id"], round(r["score"], 9), r["document"])
+            for r in _served_hybrid(coll, pipe, hq, semantic_mode="exact")]
+
+
+def _assert_equivalent(idx, ft, fresh, fresh_ft, search: bool) -> None:
+    """Resident rows, payloads, live postings and exact-mode results of
+    a refreshed (idx, ft) pair equal a fresh build's."""
+    assert _eq_rows(idx) == _eq_rows(fresh)
+    assert dict(idx.doc_json) == dict(fresh.doc_json)
+    assert _eq_postings(ft) == _eq_postings(fresh_ft)
+    for q in ("alpha beta gamma", "sigma tau rho", "kappa"):
+        d1, s1 = idx.best_chunk_scores(q)
+        d2, s2 = fresh.best_chunk_scores(q)
+        assert np.array_equal(d1, d2)
+        assert np.allclose(s1, s2, atol=1e-12, rtol=0)
+        for filt in (None, {"lang": {"$eq": "en"}}):
+            hq = {"query": {"semantic_search": {"text": {"query": q}},
+                            "full_text_search": {"text": {"query": q}}},
+                  "limit": 8}
+            if filt:
+                hq["query"]["filter"] = filt
+            assert _eq_hybrid(idx, ft, hq) == _eq_hybrid(fresh, fresh_ft, hq)
+        if search:  # the ANN is exhaustive at this corpus size
+            assert [(r["document_id"], round(r["score"], 9), r["chunk"])
+                    for r in idx.search(q, limit=8)] == [
+                (r["document_id"], round(r["score"], 9), r["chunk"])
+                for r in fresh.search(q, limit=8)]
+
+
+def test_refresh_from_delta_sidecars_equals_fresh_build(spark, tmp_path):
+    """Seeded rounds of insert, update, merge=True upsert and
+    delete_documents on a semantic + full-text pipeline: after each
+    write every resident index refreshes in place with no Spark job and
+    no __init__ call, and equals a fresh build (rows, vectors, payloads,
+    postings, exact-mode search). Indexes: HNSW never built, HNSW
+    built, ivfflat (probes == lists) and 2 doc-hash shards. Then the
+    cases the sidecars cannot prove rebuild, and still equal a fresh
+    build: resync, purge_documents, a legacy flat version; a disabled
+    pipeline's payload-only catch-up and its re-enable refresh in
+    place."""
+    import postgresml_spark.collections.serving as sv
+    from postgresml_spark.collections.storage import VersionedTable
+
+    rng = np.random.default_rng(23)
+    coll = Collection("refresh_eq", spark, warehouse=str(tmp_path / "wh"))
+    coll.upsert_documents([_eq_doc(rng, i) for i in range(40)])
+    hnsw = {"model": "hash:16", "hnsw": {"m": 8, "ef_construction": 32}}
+    ivf = {"model": "hash:16", "ivfflat": {"lists": 4, "probes": 4}}
+    ft_cfg = {"configuration": "english"}
+    p = Pipeline("p", {"text": {"semantic_search": hnsw,
+                                "full_text_search": ft_cfg}})
+    q = Pipeline("q", {"text": {"semantic_search": ivf,
+                                "full_text_search": ft_cfg}})
+    coll.add_pipeline(p)
+    coll.add_pipeline(q)
+
+    def fresh(pipe, shards):
+        if shards:
+            return (sv.ShardedPipelineIndex(coll, pipe, "text", shards),
+                    sv.ShardedTextIndex(coll, pipe, "text", shards))
+        return (sv.ServedPipelineIndex(coll, pipe, "text"),
+                sv.ServedTextIndex(coll, pipe, "text"))
+
+    # name -> [pipeline, shards, ann built?, index, text index]
+    live = {name: [pipe, shards, built, *fresh(pipe, shards)]
+            for name, pipe, shards, built in (
+                ("hnsw_unbuilt", p, None, False), ("hnsw_built", p, None, True),
+                ("ivfflat", q, None, True), ("two_shards", p, 2, True))}
+
+    builds = {"n": 0}
+    inits = {c: c.__init__ for c in (sv.ServedPipelineIndex, sv.ServedTextIndex)}
+
+    def spy(cls):
+        def init(self, *a, **kw):
+            builds["n"] += 1
+            return inits[cls](self, *a, **kw)
+        return init
+
+    def build_anns():
+        for _, shards, built, idx, _ in live.values():
+            for s in (idx.shards if shards else [idx]) if built else []:
+                s.hnsw
+
+    def refresh_all(label, in_place=True):
+        builds["n"] = 0
+        for c in inits:
+            c.__init__ = spy(c)
+        try:
+            with assert_no_spark_jobs(spark, f"refresh after {label}") \
+                    if in_place else nullcontext():
+                for ent in live.values():
+                    for k in (3, 4):
+                        got = ent[k].refresh()
+                        if in_place:
+                            assert got is ent[k], f"{label}: rebuilt"
+                        ent[k] = got
+        finally:
+            for c, f in inits.items():
+                c.__init__ = f
+        assert (builds["n"] == 0) == in_place, (label, builds["n"])
+
+    def check(label):
+        fresh_by = {}
+        for name, (pipe, shards, built, idx, ft) in live.items():
+            key = (pipe.name, shards)
+            if key not in fresh_by:
+                fresh_by[key] = fresh(pipe, shards)
+            f_idx, f_ft = fresh_by[key]
+            try:
+                _assert_equivalent(idx, ft, f_idx, f_ft, search=built)
+            except AssertionError as e:
+                raise AssertionError(f"{name} after {label}") from e
+        build_anns()
+
+    build_anns()
+    next_id = 1000
+    for rnd in range(2):
+        coll.upsert_documents([_eq_doc(rng, next_id + j) for j in range(2)])
+        next_id += 2
+        refresh_all(f"round {rnd} insert")
+        # a pure append grows the live graph instead of dropping it
+        assert live["hnsw_built"][3]._hnsw is not None
+        check(f"round {rnd} insert")
+        ids = [d["document"]["id"] for d in coll.get_documents(limit=1000)]
+        for label, write in (
+            ("update", lambda: coll.upsert_documents(
+                [_eq_doc(rng, i) for i in rng.choice(ids, 3, replace=False)])),
+            ("merge", lambda: coll.upsert_documents(
+                [{"id": int(rng.choice(ids)), "lang": "de"}], merge=True)),
+            ("delete", lambda: coll.delete_documents(
+                {"id": {"$eq": int(rng.choice(ids))}})),
+        ):
+            write()
+            refresh_all(f"round {rnd} {label}")
+            check(f"round {rnd} {label}")
+
+    # a disabled pipeline: documents move, its derived tables do not
+    coll.disable_pipeline(p)
+    coll.upsert_documents([_eq_doc(rng, 5000)])
+    refresh_all("upsert while disabled")
+    check("upsert while disabled")
+    coll.enable_pipeline(p)
+    refresh_all("re-enable")
+    check("re-enable")
+    # new lineage or no snapshot: rebuild through __init__
+    p.resync()
+    refresh_all("resync", in_place=False)
+    check("resync")
+    coll.purge_documents({"id": {"$eq": 1000}})
+    refresh_all("purge", in_place=False)
+    check("purge")
+    for pipe in (p, q):
+        tbl = pipe._tables["text_embeddings"]
+        VersionedTable.overwrite(tbl, tbl.read())  # legacy flat version
+    refresh_all("legacy flat version", in_place=False)
+    check("legacy flat version")

@@ -18,14 +18,15 @@ one mechanism, and so does this module:
   eager index-kind routing) and `from_arrays` both end in `_set_rows`,
   the only setter of the resident arrays (chunk ids, doc ids, chunk
   texts, the float64 matrix and its norms, the document payload map).
-  `refresh()` goes through the same setter with the arrays patched in
-  O(changed): `_catch_up` reads the store's delta sidecars driver-side
-  (storage.VersionSnapshot: base lineage, tombstones, `_delta` rows),
-  so dead rows drop, new rows arrive with their vectors and texts, and
-  `_doc_delta` patches the payload map, all with no Spark job. What the
-  sidecars cannot prove (a new base lineage after a resync, purge or
-  compaction; a legacy flat version; a version vacuumed mid-read)
-  rebuilds through `__init__`, the only other path.
+  `refresh()` goes through the same setter with the arrays patched
+  from O(changed) reads: `_catch_up` reads the store's delta sidecars
+  driver-side (storage.VersionSnapshot: base lineage, tombstones,
+  `_delta` rows), so dead rows drop, new rows arrive with their
+  vectors and texts, and `_doc_delta` patches the payload map, all
+  with no Spark job. What the sidecars cannot prove (a new base
+  lineage after a resync, purge or compaction; a legacy flat version;
+  a version vacuumed mid-read) rebuilds through `__init__`, the only
+  other path.
   `ServedTextIndex.__init__`/`from_tokens` end in its `_set_rows`, the
   one postings builder, which its `refresh()` extends; rows it drops
   stay as dead rows (`_live`) until a compaction forces a rebuild.
@@ -135,42 +136,6 @@ def _values(table, col: str):
     if pa.types.is_integer(c.type):
         return c.to_numpy().astype(np.int64, copy=False)
     return c.to_pylist()
-
-
-def _swap_fill(n: int, holes: np.ndarray, k: int):
-    """Row moves that drop the sorted rows ``holes`` of an n-row layout
-    and add k rows, in O(|holes| + k): the new rows fill holes first
-    and append past n; holes left over take survivors from the tail.
-    Returns (m, src, dst, slots): copy rows src -> dst, keep the first
-    m rows, and write the new rows at ``slots``."""
-    m = n - holes.size + k
-    if k >= holes.size:
-        none = np.empty(0, dtype=np.int64)
-        return m, none, none, np.concatenate([holes, np.arange(n, m)])
-    rest = holes[k:]
-    src = np.setdiff1d(np.arange(m, n), rest, assume_unique=True)
-    return m, src, rest[rest < m], holes[:k]
-
-
-def _moved(arr: np.ndarray, moves, new, buf=None, spare: int = 0):
-    """The first m rows of ``arr`` after a ``_swap_fill`` plan: moved
-    rows copied, ``new`` written at the slots. When ``buf`` (a buffer
-    whose first len(arr) rows are ``arr``) has room for m rows, the
-    moves happen inside it, so a refresh of the float64 matrix copies
-    O(changed) rows, not the corpus; otherwise the rows land in a new
-    buffer with ``spare`` extra rows. The result is a prefix view of
-    that buffer (its ``.base``)."""
-    m, src, dst, slots = moves
-    if buf is not None and m <= len(buf):
-        buf[dst] = buf[src]
-    else:
-        n = min(len(arr), m)
-        row = arr.shape[1:] if len(arr) else np.shape(new)[1:]
-        buf = np.empty((m + spare,) + row, dtype=arr.dtype)
-        buf[:n] = arr[:n]
-        buf[dst] = arr[src]
-    buf[slots] = new
-    return buf[:m]
 
 
 def _fp32_slack(x):
@@ -485,7 +450,6 @@ class ServedPipelineIndex(_Versioned):
             mat64,
             doc_json,
         )
-        self._mat_buf = mat64  # built here: refresh may move rows in it
 
     @classmethod
     def from_arrays(
@@ -546,7 +510,6 @@ class ServedPipelineIndex(_Versioned):
         self.doc_ids = doc_ids
         self.chunks = chunks
         self.mat64 = mat64
-        self._mat_buf = None  # refresh's growth buffer behind mat64
         self.norms64 = (np.linalg.norm(mat64, axis=1) if norms64 is None
                         else norms64)
         self._row_of = None  # chunk_id -> payload row (row_of)
@@ -644,14 +607,14 @@ class ServedPipelineIndex(_Versioned):
         ))
 
     def refresh(self) -> "ServedPipelineIndex":
-        """Catch up with a sync in O(changed), with no Spark job: the
-        store's delta reader (storage.VersionSnapshot) gives each stage
-        table's tombstones and `_delta` rows, ``_catch_up`` turns them
-        into the dead resident rows and the added ones (vectors and
-        chunk texts read only for those), and ``_doc_delta`` patches
-        the payload map. Added rows fill dead rows' slots and then
-        append, so the float64 matrix moves O(changed) rows. A built
-        HNSW grows by ``add`` on a pure append (the pgvector
+        """Catch up with a sync from O(changed) reads, with no Spark
+        job: the store's delta reader (storage.VersionSnapshot) gives
+        each stage table's tombstones and `_delta` rows, ``_catch_up``
+        turns them into the dead resident rows and the added ones
+        (vectors and chunk texts read only for those), and
+        ``_doc_delta`` patches the payload map. The resident arrays are
+        the kept rows followed by the added ones (one copy each). A
+        built HNSW grows by ``add`` on a pure append (the pgvector
         trigger-maintained insert); a removal or an ivfflat append
         drops the ANN, which the next search rebuilds on the driver.
         Whatever the sidecars cannot prove (a new lineage after a
@@ -673,36 +636,29 @@ class ServedPipelineIndex(_Versioned):
         k = new_ids.size
         new_mat = (cols["embedding"].reshape(k, -1) if k
                    else np.empty((0,) + self.mat64.shape[1:]))
-        moves = _swap_fill(len(self.chunk_ids), dead, k)
-        m, src, dst, slots = moves
         ann = self._hnsw
         if dead.size or (k and self.kind != "hnsw"):
             ann = None
         elif k and ann is not None:
             ann.add(new_ids, new_mat.astype(np.float32))
-        # the chunk texts and the payload map are this index's own
-        # containers: patched in place
-        chunks = self.chunks
-        chunks.extend([None] * (m - len(chunks)))
-        for a, b in zip(src.tolist(), dst.tolist()):
-            chunks[b] = chunks[a]
-        del chunks[m:]
-        for slot, c in zip(slots.tolist(), cols["chunk"]):
-            chunks[slot] = c
+        keep = np.ones(len(self.chunk_ids), dtype=bool)
+        keep[dead] = False
         gone, added_docs = docs
-        for d in gone.tolist():
+        for d in gone.tolist():  # the payload map is patched in place
             del self.doc_json[d]
         self.doc_json.update(added_docs)
-        mat64 = _moved(self.mat64, moves, new_mat, buf=self._mat_buf,
-                       spare=m // 2)
         self._set_rows(
-            _moved(self.chunk_ids, moves, new_ids),
-            _moved(self.doc_ids, moves, cols["document_id"]),
-            chunks, mat64, self.doc_json, ann=ann,
-            norms64=_moved(self.norms64, moves,
-                           np.linalg.norm(new_mat, axis=1)),
+            np.concatenate([self.chunk_ids[keep], new_ids]),
+            np.concatenate([self.doc_ids[keep],
+                            np.asarray(cols["document_id"], dtype=np.int64)]),
+            [c for c, kept in zip(self.chunks, keep) if kept]
+            + list(cols["chunk"]),
+            np.concatenate([self.mat64[keep] if keep.any() else new_mat[:0],
+                            new_mat]),
+            self.doc_json, ann=ann,
+            norms64=np.concatenate([self.norms64[keep],
+                                    np.linalg.norm(new_mat, axis=1)]),
         )
-        self._mat_buf = mat64.base
         self.version_token = token
         return self
 
@@ -1248,8 +1204,8 @@ class ServedTextIndex(_Versioned):
         return arrs
 
     def refresh(self) -> "ServedTextIndex":
-        """Catch up with a sync in O(changed), with no Spark job, the
-        same way ServedPipelineIndex.refresh does: dead rows are masked
+        """Catch up with a sync from O(changed) reads, with no Spark
+        job, the same way ServedPipelineIndex.refresh does: dead rows are masked
         out of ``_live`` and the added rows' tokens extend the postings.
         A case the delta sidecars cannot prove rebuilds through
         ``__init__``. Returns self, or the rebuilt index."""
